@@ -463,88 +463,6 @@ object MinHashKernel {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(mins)
   }
-
-  /** Hop offset for rotation densification (golden-ratio odd constant):
-    * a slot borrowed from `hops` bins away carries value + hops*C, so two
-    * documents agree on a densified slot iff they borrowed from the SAME
-    * distance and agree on the borrowed minimum — the collision semantics
-    * of the published rotation scheme. */
-  final val DensifyHop = 0x9E3779B97F4A7C15L
-
-  /** One-permutation MinHash with rotation densification: ONE pass over
-    * the hash array; each element is routed to bin `x >>> (64-log2 k)`
-    * (k restricted to powers of two) and the bin keeps its minimum; empty
-    * bins then borrow cyclically from the next non-empty bin to the right
-    * at value + hops*[[DensifyHop]] (Shrivastava & Li, "Densifying One
-    * Permutation Hashing via Rotation", ICML 2014). Cost per element is
-    * one shift+compare instead of k seeded hashes — the k-family kernel's
-    * inner loop — at the price of a slightly higher-variance Jaccard
-    * estimator (borrowed slots are correlated with their donors). Every
-    * consumer exact-verifies candidate pairs, so the scheme only moves
-    * candidate RECALL, which the banding margin covers (spec'd
-    * statistically in MinHashSpec).
-    *
-    * Null elements contribute the value 0 to bin 0 (unreachable from
-    * `word_ngram_hashes`, pinned by spec); an empty array yields the
-    * all-null signature like the k-family kernel. */
-  def signaturesOph(arr: ArrayData, k: Int): ArrayData = {
-    val n = arr.numElements()
-    if (n == 0)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        new Array[Any](k))
-    val shift = java.lang.Long.numberOfLeadingZeros(k - 1).max(1)
-    val mins = new Array[Long](k)
-    val seen = new Array[Boolean](k)
-    var j = 0
-    while (j < n) {
-      val x = if (arr.isNullAt(j)) 0L else arr.getLong(j)
-      val b = (x >>> shift).toInt
-      if (!seen(b) || x < mins(b)) { mins(b) = x; seen(b) = true }
-      j += 1
-    }
-    var i = 0
-    while (i < k) {
-      if (!seen(i)) {
-        // nearest non-empty bin to the right, cyclic; guaranteed to exist
-        // (n > 0 filled at least one bin), at most k-1 hops
-        var hops = 1
-        while (!seen((i + hops) % k)) hops += 1
-        mins(i) = mins((i + hops) % k) + hops * DensifyHop
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(mins)
-  }
-}
-
-/** [[MinHashKernel.signaturesOph]] as a codegen'd expression: the
-  * one-permutation + rotation-densification signature of an array<long>
-  * of base hashes. Same shape contract as [[MinHashSignatures]]
-  * (k slots, empty input -> all-null, null input -> null); a DIFFERENT
-  * LSH family, so candidate sets differ — only safe where candidates are
-  * exact-verified downstream (the near-dup pipeline). k must be a power
-  * of two (the bin router is a shift). */
-case class MinHashSignaturesOph(child: Expression, numHashes: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(numHashes > 0 && (numHashes & (numHashes - 1)) == 0,
-    "minhash_signatures_oph needs a power-of-two family count")
-
-  override def inputTypes: Seq[ArrayType] =
-    Seq(ArrayType(org.apache.spark.sql.types.LongType))
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = true)
-  override def prettyName: String = "minhash_signatures_oph"
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.signaturesOph(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.MinHashKernel.signaturesOph($c, $numHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignaturesOph =
-    copy(child = newChild)
 }
 
 /** Fused exact set-Jaccard over two string arrays: exactly
@@ -971,16 +889,14 @@ case class WordNgramsDistinct(child: Expression, n: Int)
 }
 
 /** Membership probe of a broadcast long-key Bloom filter — the map-side
-  * prefilter for two-pass LSH candidate generation: pass 1 finds band-key
-  * values held by >= 2 documents (the only keys that can emit a candidate
-  * pair) and folds them into a Bloom filter; pass 2 recomputes the band
-  * keys map-side and shuffles ONLY rows whose key might be hot. False
-  * positives are BENIGN by construction (a singleton key that leaks
-  * through groups into a 1-element bucket and emits no pairs); false
-  * negatives are impossible in a Bloom filter, so the candidate-pair set
-  * is IDENTICAL to the single-pass form while the dominant shuffle drops
-  * to the hot fraction. Codegen'd; the filter rides the closure as a
-  * Spark broadcast (one copy per executor, not per task).
+  * participant prefilter of the near-dup operator (`operators.NearDup`):
+  * the driver folds the ids that can take part in a stage (candidate
+  * participants, keep-best losers) into a Bloom filter, and rows that
+  * miss it skip the stage's exchange. False negatives are impossible in a
+  * Bloom filter, so results are identical to the unfiltered form; false
+  * positives only let a non-participant through to a join that drops it.
+  * Codegen'd; the filter rides the closure as a Spark broadcast (one copy
+  * per executor, not per task).
   */
 case class BloomMightContainLong(child: Expression,
     bloom: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter])

@@ -64,16 +64,9 @@ package object functions {
   def minhash_signatures(hashes: Column, k: Int): Column =
     Bridge.column(MinHashSignatures(ex(hashes), k))
 
-  /** One-permutation + rotation-densification MinHash signature over an
-    * array<long> of base hashes — one pass, ONE bin-route per element
-    * instead of k seeded hashes (see [[MinHashSignaturesOph]]). A
-    * different LSH family than [[minhash_signatures]]: candidate sets
-    * differ, so only for exact-verified consumers. */
-  def minhash_signatures_oph(hashes: Column, k: Int): Column =
-    Bridge.column(MinHashSignaturesOph(ex(hashes), k))
-
   /** Map-side membership probe of a broadcast long-key Bloom filter (see
-    * [[BloomMightContainLong]]) — the two-pass LSH candidate prefilter. */
+    * [[BloomMightContainLong]]) — the near-dup operator's participant
+    * prefilters. */
   def bloom_might_contain_long(
       bloom: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter],
       c: Column): Column =

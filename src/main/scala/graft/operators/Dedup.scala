@@ -25,30 +25,10 @@ import org.apache.spark.storage.StorageLevel
   */
 object Dedup {
 
-  /** How often to truncate the label lineage. Env-overridable
-    * (SPARK_GRAFT_CC_CKPT_EVERY) as a measurement lever: the r9-r11 probe
-    * question was how much of a CC round is label joins vs checkpoint
-    * write, and cadence is the knob that trades lineage growth against
-    * write round-trips. Default 3 (measured best on the q36 graph). */
-  private val CheckpointEvery =
-    sys.env.get("SPARK_GRAFT_CC_CKPT_EVERY").flatMap { s =>
-      // validated: it is used as a modulus deep inside a long CC run, where
-      // a 0 (ArithmeticException) or junk (NumberFormatException at
-      // class-init) would abort hours in — fall back loudly instead
-      val parsed = scala.util.Try(s.trim.toInt).toOption.filter(_ >= 1)
-      if (parsed.isEmpty)
-        System.err.println(
-          s"[graft] ignoring invalid SPARK_GRAFT_CC_CKPT_EVERY='$s' (need integer >= 1); using default 3")
-      parsed
-    }.getOrElse(3)
-
-  /** SPARK_GRAFT_CC_PROFILE=1: log a per-round wall-time split to stderr —
-    * join/materialize wall vs checkpoint-write wall vs convergence-check
-    * wall. Profile mode materializes the joined frame (persist+count)
-    * BEFORE the checkpoint write so the two are separately timeable; that
-    * extra materialization makes profiled rounds slightly slower than
-    * production rounds, so the split is the signal, not the absolute sum. */
-  private val Profile = sys.env.get("SPARK_GRAFT_CC_PROFILE").contains("1")
+  /** How often to truncate the label lineage: every third round (measured
+    * best on the q36 graph — cadence trades lineage growth against
+    * checkpoint-write round trips). */
+  private val CheckpointEvery = 3
 
   /** edges: undirected pairs in columns (a, b). Returns (id, cluster_id)
     * for every node that appears in an edge, cluster_id = min node id of
@@ -154,34 +134,10 @@ object Dedup {
         }
       val ckptRound = iter % CheckpointEvery == CheckpointEvery - 1
       val next =
-        if (!Profile) {
-          if (ckptRound) joined.localCheckpoint(eager = true)
-          else joined.persist(StorageLevel.MEMORY_AND_DISK)
-        } else {
-          // profile mode: force the join work through a persist+count so
-          // the checkpoint write (which otherwise executes the join inside
-          // itself) is timed on already-materialized input
-          val t0 = System.nanoTime()
-          val mat = joined.persist(StorageLevel.MEMORY_AND_DISK)
-          mat.count()
-          val tJoin = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          val out = if (ckptRound) {
-            val c = mat.localCheckpoint(eager = true)
-            mat.unpersist()
-            c
-          } else mat
-          val tCkpt = (System.nanoTime() - t1) / 1e9
-          System.err.println(
-            f"[graft] cc round $iter: join=$tJoin%.2f s " +
-              f"ckpt=${if (ckptRound) f"$tCkpt%.2f" else "-"} s")
-          out
-        }
-      val tChk = System.nanoTime()
+        if (iter % CheckpointEvery == CheckpointEvery - 1)
+          joined.localCheckpoint(eager = true)
+        else joined.persist(StorageLevel.MEMORY_AND_DISK)
       changed = next.filter(col("improved")).limit(1).count() > 0
-      if (Profile)
-        System.err.println(f"[graft] cc round $iter: converge_check=" +
-          f"${(System.nanoTime() - tChk) / 1e9}%.2f s")
       cached.unpersist()
       cached = next
       labels = next.drop("improved")

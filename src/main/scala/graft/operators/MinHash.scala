@@ -3,17 +3,17 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{word_ngrams, xxhash64_seeded}
+import graft.functions.xxhash64_seeded
 
-/** MinHash + LSH banding primitives, shared by the batch near-dup queries
-  * (`graft.queries.DedupQueries`) and the streaming near-dup flagger
-  * (`graft.streaming.EventStreams.nearDupFlags`) so both paths use the
-  * identical hash family and banding scheme.
+/** MinHash + LSH banding primitives under the near-dup operator
+  * ([[NearDup]]), which every near-dup consumer — the catalog queries, the
+  * data pipeline and the streaming flagger — goes through, so all of them
+  * use the identical hash family and banding scheme.
   *
-  * Everything here is map-side: shingling, the 64-hash signature
-  * (array_min over transform — no explode, no shuffle), and the band-key
-  * explosion (one (band, band-hash) row per band per document). The only
-  * shuffle in any consumer is the equi-join on (band, bh).
+  * Everything here but [[bucketPairs]] is map-side: shingling, the 64-hash
+  * signature (one fused codegen'd pass), and the band-key explosion (one
+  * `bh` row per band per document). The only shuffle of candidate
+  * generation is [[bucketPairs]]' grouping on `bh`.
   */
 object MinHash {
 
@@ -43,144 +43,64 @@ object MinHash {
     * independent check of candidate generation. */
   val VerifyHashSeed = -77L
 
-  /** The 64 MinHash signature values of a shingle-array column: for hash
-    * family i (seeded xxhash64), the min over the document's shingles.
+  /** The 64 MinHash signature values of a hashed-shingle array column
+    * (array<long>), one column per family: for family i (seeded xxhash64),
+    * the min over the document's shingle hashes. The column-per-family
+    * reference formulation of the fused `minhash_signatures` kernel that
+    * [[bandHashKeys]] runs (equality spec'd in MinHashSpec).
     *
     * Family value i of a shingle is xxhash64(i, xxhash64(base, shingle)):
-    * the STRING is hashed once and the 64 family hashes re-mix the 8-byte
-    * result through XxHash64's long fast path — a few ns each vs a full
-    * variable-length string hash. This is the standard minwise-family
-    * construction (one strong base hash + derived family, as in
-    * datasketch / Spark MLlib's MinHashLSH); family quality is a PRF over
-    * the base value, and any family change only perturbs CANDIDATE
-    * generation — every consumer exact-verifies pairs, so results are
-    * identical as long as banded recall holds (32x2 at j >= 0.7: ~1e-14
-    * miss probability, threshold-independent of the family).
-    *
-    * The base-hash array is materialized by [[bandKeys]] as its own
-    * projection so the 64 family columns share ONE string-hash pass —
-    * inlined, each of the 64 transforms would re-hash every string and
-    * the optimization would silently vanish (HOFs are interpreted, not
-    * codegen'd, so no common-subexpression reuse saves it). */
-  def signature(shingleCol: Column): Seq[Column] =
-    signatureFromHashes(transform(shingleCol,
-      s => xxhash64_seeded(BaseHashSeed, s)))
-
-  /** Signature over an already-hashed shingle array (array<long>). */
+    * the string is hashed once and the 64 family hashes re-mix the 8-byte
+    * result — the standard minwise-family construction (one strong base
+    * hash + derived family, as in datasketch / Spark MLlib's
+    * MinHashLSH). */
   def signatureFromHashes(hashCol: Column): Seq[Column] =
     (0 until NumHashes).map { i =>
       array_min(transform(hashCol, h => xxhash64_seeded(i.toLong, h)))
         .as(s"mh_$i")
     }
 
-  /** One (band, bh) struct per band, hashing that band's signature rows
-    * (read out of the fused signature array — see bandKeys). */
-  private def bandStructs(sig: Column): Seq[Column] =
-    (0 until NumBands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64_seeded(1000L + b,
-          (0 until BandRows).map(r => sig.getItem(b * BandRows + r)): _*)
-          .as("bh"))
-    }
-
-  /** Band bucket keys for every row of `df`: `carryCols` + (band, bh),
-    * NumBands rows per input row. Rows with no shingles (< n tokens) are
-    * dropped, matching the batch pipeline. Works on streaming frames too —
-    * every step is a stateless projection. */
-  def bandKeys(df: DataFrame, textCol: String, carryCols: Seq[String],
+  /** Band bucket keys for every row of `df`: `carryCols` + `bh`, NumBands
+    * rows per input row. `bh` hashes one band's signature rows under the
+    * band's own seed (1000 + band), so the band ordinal lives INSIDE the
+    * hash and no band column is ever materialized: buckets merge across
+    * bands only on a 64-bit cross-band collision (~1e-19 per bucket
+    * pair), and a merged bucket only ADDS candidate pairs, which every
+    * consumer's exact verification discards. The (doc_id, bh) row is 24
+    * bytes where a (doc_id, band, bh) row is 32, and the candidate
+    * aggregation keys one long: measured 1.5x on the data pipeline's
+    * candidate stage at 11.32 GB with candidates bit-identical
+    * (`bench-artifacts/candslap-11p3g.json`).
+    *
+    * Rows with no shingles (< n tokens) are dropped. Works on streaming
+    * frames too — every step is a stateless projection. */
+  def bandHashKeys(df: DataFrame, textCol: String, carryCols: Seq[String],
       n: Int = 3): DataFrame = {
     val sigs = df
       // Exactly `size(shingles) > 0`, but stated over the raw token count:
       // a doc has >= 1 n-shingle iff it has >= n whitespace tokens. The
       // distinction matters physically — Catalyst pushes this filter below
       // any downstream repartition into the scan stage, and there a
-      // predicate over the shingle ARRAY would evaluate the whole
-      // array_distinct(transform(...)) shingle pipeline once per row inside
-      // the (often single-split) scan task, then recompute it again after
-      // the exchange. The token-count form keeps the pushed-down predicate
-      // a cheap split+size.
+      // predicate over the shingle ARRAY would evaluate the whole shingle
+      // pipeline once per row inside the (often single-split) scan task,
+      // then recompute it again after the exchange. The token-count form
+      // keeps the pushed-down predicate a cheap split+size.
       .filter(size(split(col(textCol), " ")) >= n)
       // FUSED base-hash projection: one hash per n-token window straight
       // off the token array (word_ngram_hashes — bit-equal to hashing the
       // joined gram string, no gram-string materialization, no
       // array_distinct: the signature is a per-family MINIMUM, so
-      // duplicate shingles cannot change it — min over a multiset equals
-      // min over its set; spec'd in MinHashSpec), then the FUSED 64-family
-      // signature: one codegen'd pass computing all minima, instead of 64
-      // interpreted array_min(transform(...)) traversals per document
-      // (HOFs never enter WholeStageCodegen — the column-per-family form
-      // was the dominant map-side CPU of the candidate stage at pipeline
-      // scale). The explicit select boundaries keep CollapseProject from
-      // folding either non-cheap projection into its downstream consumers.
+      // duplicate shingles cannot change it; spec'd in MinHashSpec), then
+      // the FUSED 64-family signature: one codegen'd pass computing all
+      // minima, instead of 64 interpreted array_min(transform(...))
+      // traversals per document. The explicit select boundaries keep
+      // CollapseProject from folding either non-cheap projection into its
+      // downstream consumers.
       .select(carryCols.map(col) :+
         graft.functions.word_ngram_hashes(split(col(textCol), " "), n,
           BaseHashSeed).as("__h"): _*)
       .select(carryCols.map(col) :+
         graft.functions.minhash_signatures(col("__h"), NumHashes).as("__sig"): _*)
-    sigs
-      .select(carryCols.map(col) :+
-        explode(array(bandStructs(col("__sig")): _*)).as("bk"): _*)
-      .select(carryCols.map(col) :+ col("bk.band").as("band") :+ col("bk.bh").as("bh"): _*)
-  }
-
-  /** [[bandKeys]] with the band ordinal carried ONLY inside the hash:
-    * emits `carryCols + bh`, where bh is the same per-band seeded value
-    * bandKeys produces (seed 1000+band), and the band COLUMN is never
-    * materialized. Keying buckets by bh alone merges buckets across bands
-    * only on a 64-bit cross-band collision (~1e-19 per bucket pair), and a
-    * merged bucket only ADDS candidate pairs — which exact verification
-    * discards — so results are identical to (band, bh) keying (the same
-    * accepted class as every hashed key in the engine; CandsLap asserts
-    * bit-equal candidate counts live on every probe run).
-    *
-    * Why it exists: the (doc_id, band, bh) row is a 32-byte UnsafeRow and
-    * the candidate stage shuffles docs x 32 of them — the single largest
-    * exchange in the data pipeline. (doc_id, bh) is 24 bytes (25% fewer
-    * through the exchange) and the aggregation keys on ONE long instead of
-    * (int, long). Measured 1.5x on the stage at 11.32 GB (CandsLap run 1,
-    * interleaved same-window laps: 150.0/158.4 s vs 218.7/279.0). */
-  def bandHashKeys(df: DataFrame, textCol: String, carryCols: Seq[String],
-      n: Int = 3): DataFrame =
-    bandHashKeysWith(df, textCol, carryCols, n,
-      graft.functions.minhash_signatures(_, NumHashes))
-
-  /** [[bandHashKeys]] with the ONE-PERMUTATION signature
-    * ([[graft.functions.minhash_signatures_oph]]): each shingle hash is
-    * routed to one of the 64 slots and each slot keeps its minimum
-    * (rotation-densified), so the map side does ONE bin-route per shingle
-    * instead of 64 seeded hashes — the k-family kernel's inner loop was
-    * the dominant map-side CPU of the candidate stage. A DIFFERENT LSH
-    * family: the candidate set differs from [[bandHashKeys]]' (higher
-    * estimator variance on short documents, where most slots densify), so
-    * only for consumers that exact-verify pairs — precision is untouched
-    * and recall sits on the same 32x2 banding margin (statistical recall
-    * spec in MinHashSpec; the pipeline's planted-dup gate witnesses it
-    * live at every scale point). Selected by `SPARK_GRAFT_DP_SIG=oph`.
-    *
-    * ADJUDICATED AGAINST as a default (CandsLap, 11.32 GB corpus,
-    * `candslap-oph-11p3g.json`): on this corpus's short-document mix the
-    * densified slots correlate across non-similar docs and banding emits
-    * 131.0 M candidates where the k-family emits 15.5 M (8.4x,
-    * deterministic across reps) — 8.4x the verify work downstream — while
-    * the map-side signature probe shows the k-family kernel was never the
-    * bottleneck (mapfam 23-27 s of a 273 s stage, mapoph no cheaper at
-    * 30-33 s: the fused 64-hash loop is in-register long-mixing, and OPH
-    * pays the same shingle-hash stream plus a densification pass). Kept as
-    * a probe lever for long-document corpora, where slots fill and the
-    * variance argument actually applies. */
-  def bandHashKeysOph(df: DataFrame, textCol: String, carryCols: Seq[String],
-      n: Int = 3): DataFrame =
-    bandHashKeysWith(df, textCol, carryCols, n,
-      graft.functions.minhash_signatures_oph(_, NumHashes))
-
-  private def bandHashKeysWith(df: DataFrame, textCol: String,
-      carryCols: Seq[String], n: Int, sig: Column => Column): DataFrame = {
-    val sigs = df
-      .filter(size(split(col(textCol), " ")) >= n)
-      .select(carryCols.map(col) :+
-        graft.functions.word_ngram_hashes(split(col(textCol), " "), n,
-          BaseHashSeed).as("__h"): _*)
-      .select(carryCols.map(col) :+ sig(col("__h")).as("__sig"): _*)
     sigs.select(carryCols.map(col) :+
       explode(array((0 until NumBands).map { b =>
         xxhash64_seeded(1000L + b,
@@ -270,16 +190,6 @@ object MinHash {
     * two-reference materialization cached 7.5 GB for nothing.
     */
   def bucketPairs(buckets: DataFrame, keyCols: Seq[String], idCol: String,
-      cap: Int = MaxBucketSize): DataFrame =
-    pairsFromGroups(bucketGroups(buckets, keyCols, idCol, cap))
-
-  /** The aggregation half of [[bucketPairs]]: group `buckets` by `keyCols`,
-    * collect each bucket's ids (bounded at cap+1 elements of state), drop
-    * oversized buckets, return `keyCols ++ (__ids, __n)`. Split out so the
-    * pipeline's lap mode can materialize/time the grouped frame separately
-    * from the in-row pair expansion ([[pairsFromGroups]]); `bucketPairs`
-    * composes the two unchanged. */
-  def bucketGroups(buckets: DataFrame, keyCols: Seq[String], idCol: String,
       cap: Int = MaxBucketSize): DataFrame = {
     // The id collector must hold at most cap+1 elements of aggregation
     // state per group: a plain collect_list materializes a hot bucket's
@@ -289,23 +199,12 @@ object MinHash {
     // lazily and stops appending at cap+1 — enough to prove oversize —
     // while the exact bucket_n count (O(1) state) drives the filter and the
     // drop metrics, and any SURVIVING bucket (n <= cap < cap+1) kept all
-    // its ids, so results are identical to the unbounded collect. (The
-    // previous bounded-heap top_k had the right bound but preallocated a
-    // (cap+1)-slot boxed PriorityQueue per group — allocation churn on the
-    // millions of near-singleton (band,bh) groups that dominate bucket
-    // tables.) For effectively uncapped calls (cap near Int.MaxValue — the
-    // spec's equivalence twin), cap+1 would overflow, so fall back to
+    // its ids, so results are identical to the unbounded collect. For
+    // effectively uncapped calls (cap near Int.MaxValue — the spec's
+    // equivalence twin), cap+1 would overflow, so fall back to
     // collect_list.
-    // SPARK_GRAFT_LSH_COLLECTOR=top_k re-selects the round-9 bounded-heap
-    // collector — an A/B lever for measuring the two bounded collectors
-    // against each other (results are identical either way: both hold at
-    // most cap+1 elements, and any SURVIVING bucket kept all its ids;
-    // equivalence spec'd in CollectCappedSpec / TopKSpec, pairs
-    // bit-identical at pipeline scale under both).
     val collector =
       if (cap >= (1 << 20)) collect_list(col(idCol))
-      else if (sys.env.get("SPARK_GRAFT_LSH_COLLECTOR").contains("top_k"))
-        graft.functions.top_k(col(idCol), cap + 1, smallest = true)
       else graft.functions.collect_capped(col(idCol), cap + 1)
     // NULL key semantics must match the equality self-join this operator
     // replaced: a join emits nothing for NULL keys, while groupBy would
@@ -315,7 +214,9 @@ object MinHash {
     require(keyCols.nonEmpty, "bucketPairs needs at least one key column")
     val nonNullKeys = buckets.filter(keyCols.map(col(_).isNotNull)
       .reduce(_ && _))
-    val agged = nonNullKeys.groupBy(keyCols.map(col): _*)
+    val ids = col("__ids")
+    registerCapLogger(buckets.sparkSession)
+    nonNullKeys.groupBy(keyCols.map(col): _*)
       .agg(collector.as("__ids"), count(lit(1)).as("__n"))
       .observe(s"graft.lsh.cap.${capId.incrementAndGet()}",
         coalesce(sum(when(col("__n") > cap, 1L)), lit(0L)).as("hot_buckets"),
@@ -323,15 +224,7 @@ object MinHash {
           .as("hot_rows"),
         first(lit(s"bucketPairs(${keyCols.mkString(",")}) cap=$cap"))
           .as("cap_site"))
-    registerCapLogger(buckets.sparkSession)
-    agged.filter(col("__n") <= cap)
-  }
-
-  /** The expansion half of [[bucketPairs]]: emit each surviving bucket's
-    * unordered id pairs in-row from a [[bucketGroups]] frame. */
-  def pairsFromGroups(groups: DataFrame): DataFrame = {
-    val ids = col("__ids")
-    groups
+      .filter(col("__n") <= cap)
       // all unordered pairs of the bucket: for element i, pair it with
       // every LATER element (slice is 1-based; transform's index 0-based;
       // slice length size(ids) rather than `cap` — start+cap can overflow

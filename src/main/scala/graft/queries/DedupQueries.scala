@@ -12,11 +12,11 @@ import graft.functions.{word_ngrams, xxhash64_seeded}
   *
   * Scale posture (100 TB): exact dedup is one hash-partitioned groupBy on a
   * 128-bit digest (no text shuffle — only the digest and ids move). MinHash
-  * reduces each document to a 64-long signature (map-side, partial-agg'd
-  * min), and candidate generation is an equi-join on (band_id, band_hash) —
-  * the only all-pairs work happens inside a MinHash bucket, never globally,
-  * and bucket sizes are hard-capped ([[graft.operators.MinHash.capBuckets]])
-  * so a saturated key can never drive the join quadratic.
+  * reduces each document to a 64-long signature (map-side), and candidate
+  * generation groups documents by band hash ([[graft.operators.NearDup]])
+  * — the only all-pairs work happens inside a MinHash bucket, never
+  * globally, and bucket sizes are hard-capped so a saturated key can never
+  * drive the expansion quadratic.
   * The brute-force Jaccard query is intentionally bounded (doc_id filter)
   * and exists as the small-scale oracle twin; LSH is the scale path.
   */
@@ -87,122 +87,13 @@ object DedupQueries {
       .filter(col("sim") >= threshold)
   }
 
-  /** LSH candidate pairs, exact-verified at `threshold` (shared by the
-    * pair query q32 and the cluster query q36). Signature + banding math
-    * lives in operators.MinHash — map-side end to end (the explode +
-    * 64-way min-groupBy alternative moves every (doc, shingle) row through
-    * an exchange; at 100 TB that shuffle IS the job); the band equi-join
-    * below is the only shuffle of candidate generation. */
+  /** LSH candidate pairs, exact-verified at `threshold` — the near-dup
+    * operator ([[graft.operators.NearDup]]) over the fanned-out documents;
+    * shared by q32/q36/q37/q92/q94/q120/q152. */
   private[graft] def lshVerifiedPairs(docs: DataFrame, threshold: Double,
-      bucketCap: Int = graft.operators.MinHash.MaxBucketSize): DataFrame = {
-    // Candidate generation is grouped, not self-joined: bucketPairs
-    // references the signature pipeline ONCE and shuffles it ONCE (the
-    // collect_list aggregation's own exchange — map-side partial agg of
-    // 8-byte ids), then expands each bucket's pairs in-row, with the
-    // oversized-bucket cap as a size filter on the grouped frame. A
-    // self-join formulation needs the pipeline on both sides plus a
-    // key-count pass for the cap, and Spark has no reliable cross-branch
-    // sharing for that (persist races under AQE's concurrent stage
-    // launch, checkpoint executes at construction — measured in rounds
-    // 8-9, see bucketPairs' scaladoc). The cap itself is the quadratic
-    // guard: a saturated key (templated pages, licence boilerplate) is
-    // one KEY — AQE skew handling splits partitions, never keys — and
-    // dropped buckets hold near-identical content exact dedup owns, so
-    // verified recall is unchanged (spec'd on a planted hot bucket in
-    // LshBucketCapSpec). The explicit repartition ahead of the groupBy
-    // pins the aggregation's partitioning (user repartitions are exempt
-    // from AQE coalescing), keeping the in-row expansion stage wide.
-    // Band keys travel as (doc_id, bh) ONLY — the band ordinal lives
-    // inside the seeded hash (MinHash.bandHashKeys): 24-byte rows through
-    // this exchange instead of 32 and a one-long aggregation key,
-    // measured 1.5-2.8x on the candidate stage at pipeline scale
-    // (CandsLap r15, interleaved same-window laps, candidates
-    // bit-identical). Results are invariant: bh keying differs from
-    // (band, bh) only on a ~1e-19 cross-band collision class, which can
-    // only ADD a candidate that exact verification then judges on true
-    // Jaccard like any other.
-    val buckets = graft.operators.MinHash.bandHashKeys(
-        fanout(docs).select(col("doc_id"), col("text")), "text", Seq("doc_id"))
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
-        col("bh"))
-    val cands = graft.operators.MinHash
-      .bucketPairs(buckets, Seq("bh"), "doc_id", bucketCap)
-      .distinct()
-    // Verification references the shingle pipeline ONCE: a two-join
-    // formulation (sh on id_a, sh on id_b) computes `sh` — a full-corpus
-    // scan + shingling — on BOTH sides (no cross-branch sharing; measured
-    // as two equal ~0.6 s stages at sf0.1). Instead each pair explodes
-    // into its two (pair, doc) rows, joins the one shingle frame
-    // id-keyed, and regroups per pair; `sh` is computed once, and only
-    // CANDIDATE shingles (not the corpus) move through the regroup
-    // shuffle. max(when(...)) picks each side's array — exactly one
-    // non-null per group, max for determinism.
-    //
-    // SIZE-GATED participant prefilter (round 16, VERDICT #4): at corpus
-    // scale the `sh` frame is the shape's one corpus-proportional term —
-    // computed and shuffled for every doc though the join consumes only
-    // docs appearing in >= 1 candidate pair. The pipeline twin
-    // (DataPipelineBench, SPARK_GRAFT_DP_VERIFYPRE=bloom) prefilters it
-    // map-side with a broadcast Bloom of the candidate-participant ids,
-    // measured 47.8 vs 58.0 s on the stage at 11.32 GB with pair counts
-    // identical (VerifyLap r15). The prefilter needs the pair frame
-    // MATERIALIZED for its two driver-side actions (participant count +
-    // Bloom build), and at bench SF (~5k docs, <1 MB scan) those actions
-    // cost more than the full shingle pass they save (measured r15) — so
-    // the staging is gated on the ESTIMATED INPUT SIZE of `docs`
-    // (optimizer plan stats: parquet file bytes for a scan), not adopted
-    // unconditionally:
-    //   spark.graft.dedup.verifyPrefilter = auto (default) | bloom | off
-    //   spark.graft.dedup.verifyPrefilterMinBytes = 2 GiB default (auto
-    //     fires above it; the 11.32 GB measured-win corpus sits well
-    //     above, every bench SF ~1000x below)
-    // Results are IDENTICAL by construction in every mode: the Bloom has
-    // zero false negatives (every participant id passes), false positives
-    // only shingle a non-candidate doc the inner join then drops — pinned
-    // by DedupPolicySpec's forced-bloom A/B and the r15 pipeline's live
-    // count asserts at 11.32/23 GB.
-    val sconf = docs.sparkSession.conf
-    val preMode = sconf.get("spark.graft.dedup.verifyPrefilter", "auto")
-    val preMinBytes = sconf
-      .get("spark.graft.dedup.verifyPrefilterMinBytes", (2L << 30).toString)
-      .toLong
-    val useBloomPre = preMode match {
-      case "bloom" => true
-      case "off"   => false
-      case _ => // auto: plan-estimated scan bytes of the input
-        docs.queryExecution.optimizedPlan.stats.sizeInBytes >= preMinBytes
-    }
-    val (candsV, shBase) =
-      if (!useBloomPre) (cands, docs)
-      else {
-        // materialize the pair frame once (same in-query localCheckpoint
-        // pattern as connectedComponents / GlobalRank) so the participant
-        // pass and the verify pass share it instead of re-running
-        // candidate generation
-        val candsM = cands.localCheckpoint()
-        val participants = candsM
-          .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-          .distinct()
-        val nPart = participants.count()
-        val bloom = participants.stat.bloomFilter("doc_id",
-          math.max(1000L, nPart), 0.01)
-        val bc = docs.sparkSession.sparkContext.broadcast(bloom)
-        (candsM, docs.filter(
-          graft.functions.bloom_might_contain_long(bc, col("doc_id"))))
-      }
-    val sh = shingled(shBase)
-    candsV
-      .select(col("id_a"), col("id_b"),
-        explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-      .join(sh, "doc_id")
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(
-        max(when(col("doc_id") === col("id_a"), col("shingles"))).as("sh_a"),
-        max(when(col("doc_id") === col("id_b"), col("shingles"))).as("sh_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("sh_a"), col("sh_b")).as("jac"))
-      .filter(col("jac") >= threshold)
-  }
+      bucketCap: Int = graft.operators.MinHash.MaxBucketSize): DataFrame =
+    graft.operators.NearDup.pairs(
+      fanout(docs).select(col("doc_id"), col("text")), threshold, bucketCap).pairs
 
   val queries: Seq[Q] = Seq(
 
@@ -433,13 +324,13 @@ object DedupQueries {
     //     ingest shape: the standing corpus (doc_id % 8 != 7 here) writes
     //     its banded MinHash keys to parquet ONCE; a new batch
     //     (doc_id % 8 == 7) signatures only ITSELF, probes the index with
-    //     a (band, bh) equi-join, and exact-verifies candidates id-keyed.
+    //     a bh equi-join, and exact-verifies candidates id-keyed.
     //     At 100 TB the index is built during initial ingestion and
     //     appended per accepted batch — corpus text is never re-shingled
     //     at probe time, and the probe-side shuffle is batch-sized, not
-    //     corpus-sized. Banding math is operators.MinHash (the same family
-    //     the batch q32 and streaming flagger share), so index rows and
-    //     probe rows agree by construction. Oracle: brute-force cross-set
+    //     corpus-sized. Keys, probe and verify are operators.NearDup (the
+    //     same operator the batch q32 and streaming flagger use), so index
+    //     rows and probe rows agree by construction. Oracle: brute-force cross-set
     //     Jaccard (banding misses above 0.7 with P ~ 6e-15). ---
     Q("q95_incremental_index_dedup",
       (s, dir) => {
@@ -447,33 +338,22 @@ object DedupQueries {
         val corpus = docs.filter(col("doc_id") % 8 =!= 7)
         val batch  = docs.filter(col("doc_id") % 8 === 7)
         val idxDir = scratchDir("sig-idx")
-        graft.operators.MinHash.bandKeys(
-            fanout(corpus).select(col("doc_id"), col("text")),
-            "text", Seq("doc_id"))
+        graft.operators.NearDup.bucketKeys(
+            fanout(corpus).select(col("doc_id"), col("text")))
           .write.mode("overwrite").parquet(idxDir)
-        // Cap the standing-index side: a hot (band, bh) key there multiplies
-        // every probe batch forever, so the guard belongs on the index.
+        // Cap the standing-index side: a hot bh key there multiplies every
+        // probe batch forever, so the guard belongs on the index.
         val index = graft.operators.MinHash.capBuckets(
-          s.read.parquet(idxDir), Seq("band", "bh"))
-        val probes = graft.operators.MinHash.bandKeys(
-          fanout(batch).select(col("doc_id"), col("text")),
-          "text", Seq("doc_id"))
-        val cands = probes.as("b").join(index.as("c"),
-            col("b.band") === col("c.band") && col("b.bh") === col("c.bh"))
-          .select(col("b.doc_id").as("batch_id"),
-            col("c.doc_id").as("corpus_id"))
+          s.read.parquet(idxDir), Seq("bh"))
+        val cands = graft.operators.NearDup
+          .probe(fanout(batch).select(col("doc_id"), col("text")),
+            index.withColumnRenamed("doc_id", "corpus_id"), joinType = "inner")
+          .select(col("doc_id").as("id_a"), col("corpus_id").as("id_b"))
           .distinct()
-        val shB = shingled(batch)
-        val shC = shingled(corpus)
-        cands
-          .join(shB.select(col("doc_id").as("batch_id"),
-            col("shingles").as("sh_b")), "batch_id")
-          .join(shC.select(col("doc_id").as("corpus_id"),
-            col("shingles").as("sh_c")), "corpus_id")
-          .select(col("batch_id"), col("corpus_id"),
-            jaccard(col("sh_b"), col("sh_c")).as("jac"))
-          .filter(col("jac") >= 0.7)
-          .select(col("batch_id"), col("corpus_id"),
+        graft.operators.NearDup
+          .verify(cands, fanout(docs).select(col("doc_id"), col("text")), 0.7)
+          .pairs
+          .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"),
             round(col("jac"), 4).as("jac"))
           .orderBy(col("batch_id"), col("corpus_id"))
       },

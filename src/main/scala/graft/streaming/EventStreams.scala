@@ -71,25 +71,23 @@ object EventStreams {
     * index — each incoming document is flagged iff it shares any LSH
     * bucket with the reference corpus. This is the candidate stage only
     * (band collision, no exact-Jaccard verification — that stays a batch
-    * join against the matched corpus docs); the identical hash family and
-    * banding as the batch q32 path via operators.MinHash, so a doc flagged
+    * join against the matched corpus docs); the same keys and probe as
+    * the batch path ([[graft.operators.NearDup.probe]]), so a doc flagged
     * here is exactly a doc the batch pipeline would have candidate-paired.
     * Stream-static joins keep no state; the trailing dedup of band
     * matches is watermark-bounded. */
   def nearDupFlags(docs: DataFrame, corpusIndex: DataFrame,
       eventTimeCol: String = "ts", watermark: String = "10 minutes"): DataFrame =
-    graft.operators.MinHash
-      .bandKeys(docs.withWatermark(eventTimeCol, watermark),
-        "text", Seq("doc_id", eventTimeCol))
-      .join(corpusIndex, Seq("band", "bh"), "left_semi")
+    graft.operators.NearDup
+      .probe(docs.withWatermark(eventTimeCol, watermark), corpusIndex,
+        Seq("doc_id", eventTimeCol))
       .dropDuplicatesWithinWatermark("doc_id")
 
-  /** The static side for [[nearDupFlags]]: distinct (band, bh) bucket keys
-    * of a reference corpus (at scale: computed once, written to parquet,
-    * and re-read — it is ~32 small rows per corpus document). */
+  /** The static side for [[nearDupFlags]]: distinct bh bucket keys of a
+    * reference corpus (at scale: computed once, written to parquet, and
+    * re-read — it is ~32 small rows per corpus document). */
   def corpusBandIndex(corpus: DataFrame): DataFrame =
-    graft.operators.MinHash.bandKeys(corpus, "text", Seq("doc_id"))
-      .select(col("band"), col("bh")).distinct()
+    graft.operators.NearDup.bucketKeys(corpus).select(col("bh")).distinct()
 
   /** Stream-stream interval join: pair each `effectType` event with every
     * `causeType` event by the same user in the preceding `maxLagSecs`
@@ -686,9 +684,7 @@ object EventStreams {
         s"(committed through $lastCommitted for stream '$streamId')")
       false
     } else {
-      val flagged = graft.operators.MinHash
-        .bandKeys(batch, "text", Seq("doc_id"))
-        .join(corpusIndex, Seq("band", "bh"), "left_semi")
+      val flagged = graft.operators.NearDup.probe(batch, corpusIndex)
         .select(col("doc_id")).distinct()
       val clean = batch.join(flagged, Seq("doc_id"), "left_anti")
       termStatsUpsertBatch(clean, tableDir)

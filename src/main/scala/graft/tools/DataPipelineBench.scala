@@ -42,9 +42,7 @@ object DataPipelineBench {
     *    participant fraction ~50% of exact survivors. The r12-r15 corpus.
     *  - `sparse`: 10-row groups (1 exact dup + 1 near-dup + 7 uniques) —
     *    10% exact dups, participant fraction ~22%, hot-band-key rows ~22%:
-    *    the web-crawl-like mix VERDICT r15 #3 asks the two inverted-
-    *    boundary Bloom levers (CANDS=bloom, EXACT=bloom) to be adjudicated
-    *    at. */
+    *    the web-crawl-like mix. */
   def mixGroupSize(mix: String): Int = mix match {
     case "sparse" => 10
     case _        => 5
@@ -126,7 +124,7 @@ object DataPipelineBench {
     // boilerplate rows (one shared base text + a per-row unique tail token).
     // Distinct digests survive exact dedup; the shared base makes most of
     // the 32 band keys COLLIDE across all N rows, so bucketPairs sees ~30
-    // (band, bh) buckets of ~N rows each — the exact shape that OOMs an
+    // bh buckets of ~N rows each — the exact shape that OOMs an
     // unbounded collect_list and that collect_capped bounds at cap+1
     // elements of state. Self-validating: the run must complete with the
     // cap listener logging the dropped buckets, the verified-pair count
@@ -209,14 +207,6 @@ object DataPipelineBench {
     val candPerGroup = nCands.toDouble / candGroups
     val candGateMax = (3.5 + 0.6 * math.max(0.0,
       math.log(docsIn / 19.1e6) / math.log(2.0))) * 1.5
-    val ckptLevelStr = ckptLevelName
-    val verifyModeStr = sys.env.getOrElse("SPARK_GRAFT_DP_VERIFY", "hashed")
-    val candsModeStr = sys.env.getOrElse("SPARK_GRAFT_DP_CANDS", "bh")
-    val verifyPreStr = sys.env.getOrElse("SPARK_GRAFT_DP_VERIFYPRE", "bloom")
-    val sigStr = sys.env.getOrElse("SPARK_GRAFT_DP_SIG", "family")
-    val exactStr = sys.env.getOrElse("SPARK_GRAFT_DP_EXACT", "agg")
-    val keepBestStr = sys.env.getOrElse("SPARK_GRAFT_DP_KEEPBEST", "bloom")
-    val outCodecStr = sys.env.getOrElse("SPARK_GRAFT_DP_OUTCODEC", "zstd")
     // heap provenance: the single-JVM local-mode heap (build.sbt -Xmx via
     // SPARK_DRIVER_MEM) bounds concurrent block materialization — at 32
     // threads x few-hundred-MB SER checkpoint blocks the default 8g OOMs
@@ -227,7 +217,7 @@ object DataPipelineBench {
     // persist them so every artifact names its non-default confs
     val confExtra = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
       .replace("\\", "").replace("\"", "")
-    val summary = f"""{"metric":"pipeline","gb":$gb%.3f,"secs":$secs%.1f,"gb_per_hour":$gbPerHr%.2f,"cores":$cpus,"heap_gb":$heapGb%.1f,"conf_extra":"$confExtra","ckpt_level":"$ckptLevelStr","verify":"$verifyModeStr","cands":"$candsModeStr","verify_pre":"$verifyPreStr","sig":"$sigStr","exact":"$exactStr","keepbest":"$keepBestStr","outcodec":"$outCodecStr","mix":"$mix","group_size":$groupSize,"max_part_bytes":${derivedMaxPartitionBytes(targetGB)},"hotkey_rows":$hotKeyRows,"planted":$nPlanted,"canary_pre":$cPre%.3f,"canary_post":$cPost%.3f,"par_canary_pre":$pcPre%.3f,"par_canary_post":$pcPost%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"cand_per_group":$candPerGroup%.2f,"cand_gate_max":$candGateMax%.2f,"stage_secs":$stagesJson,$countsJson}"""
+    val summary = f"""{"metric":"pipeline","gb":$gb%.3f,"secs":$secs%.1f,"gb_per_hour":$gbPerHr%.2f,"cores":$cpus,"heap_gb":$heapGb%.1f,"conf_extra":"$confExtra","ckpt_level":"$ckptLevelName","mix":"$mix","group_size":$groupSize,"max_part_bytes":${derivedMaxPartitionBytes(targetGB)},"hotkey_rows":$hotKeyRows,"planted":$nPlanted,"canary_pre":$cPre%.3f,"canary_post":$cPost%.3f,"par_canary_pre":$pcPre%.3f,"par_canary_post":$pcPost%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"cand_per_group":$candPerGroup%.2f,"cand_gate_max":$candGateMax%.2f,"stage_secs":$stagesJson,$countsJson}"""
     println(summary)
     System.out.flush()
     graft.BenchOut.writeSummary("pipeline-last", summary)
@@ -308,16 +298,8 @@ object DataPipelineBench {
   def run(spark: SparkSession, corpus: DataFrame, benchmark: DataFrame,
       outDir: String, plantedIds: Option[DataFrame] = None,
       lapSink: (String, Double) => Unit = (_, _) => (),
-      ckptLevel: Option[StorageLevel] = None,
-      verifyMode: String = sys.env.getOrElse("SPARK_GRAFT_DP_VERIFY", "hashed"),
-      keepBestMode: String =
-        sys.env.getOrElse("SPARK_GRAFT_DP_KEEPBEST", "bloom"),
-      exactMode: String = sys.env.getOrElse("SPARK_GRAFT_DP_EXACT", "agg"),
-      candsMode: String = sys.env.getOrElse("SPARK_GRAFT_DP_CANDS", "bh"),
-      verifyPre: String = sys.env.getOrElse("SPARK_GRAFT_DP_VERIFYPRE", "bloom"),
-      sigScheme: String = sys.env.getOrElse("SPARK_GRAFT_DP_SIG", "family"))
-      : Seq[(String, Long)] = {
-    import graft.functions.{normalize_text, word_ngrams, xxhash64_seeded}
+      ckptLevel: Option[StorageLevel] = None): Seq[(String, Long)] = {
+    import graft.functions.normalize_text
 
     // Corpus-sized stage frames checkpoint at `ckptLevel` when given
     // (serialized levels trade ~CPU for 2-3x smaller resident blocks —
@@ -372,10 +354,8 @@ object DataPipelineBench {
     val nQualified = qualified.count()
     lap("quality")
 
-    // --- stage 3: exact dedup (see exactDedup's scaladoc for the two
-    // stagings; SPARK_GRAFT_DP_EXACT selects)
-    val exactSurvivors = ckptText(
-      exactDedup(spark, qualified, exactMode, nQualified / 2))
+    // --- stage 3: exact dedup (see exactDedup's scaladoc)
+    val exactSurvivors = ckptText(exactDedup(qualified))
     val nExact = exactSurvivors.count()
     // Stage-frame lifecycle: each localCheckpoint materializes a
     // corpus-sized frame, and holding every stage's copy to the end means
@@ -389,197 +369,30 @@ object DataPipelineBench {
     scored.unpersist()
     lap("exact_dedup")
 
-    // --- stage 4: near-dup dedup on the survivors — band keys map-side,
-    // (band, bh) equi-join for candidates, exact-Jaccard verification with
-    // shingles rebuilt id-keyed (candidate-proportional), connected
+    // --- stage 4: near-dup dedup on the survivors (operators.NearDup):
+    // band keys, grouped candidates, exact-Jaccard verification, connected
     // components, then keep the BEST-QUALITY member per cluster (the q92
-    // policy)
+    // policy). The stage callback materializes the candidate and verified
+    // pair frames (id-sized) so each sub-stage is counted and lapped.
     val docsText = exactSurvivors.select(col("doc_id"), col("text"))
-    // NO checkpoint on the band keys: the grouped candidate generator
-    // consumes them exactly once, and materializing them here (the old
-    // self-join needed it for its two references) cached ~7.5 GB in the
-    // 8 GB heap and starved the aggregation's execution memory into a
-    // spill-reader OOM at merge time
-    // explicit keyCols repartition per bucketPairs' sizing contract: user
-    // repartitions are exempt from AQE coalescing, which would size the
-    // aggregation exchange by its compact 8-byte-id bytes — blind to the
-    // up-to-cap/2x row inflation of the downstream in-row expansion.
-    //
-    // Partition count: the session conf (corpus-sized). The r15 "size by
-    // band-key bytes" hypothesis (~128 MB/task => ~6x fewer partitions)
-    // was REFUTED by interleaved same-window laps (CandsLap run 1,
-    // 11.32 GB: sized 267.5/286.6 s vs conf 218.7/279.0) — bigger
-    // per-task sorts in the aggregation's sort-based fallback cost more
-    // than the M x R block-count reduction saves. SPARK_GRAFT_DP_BAND_PARTS:
-    // an integer pins it; `sized` selects the refuted formula for probes.
-    val nBandRows = nExact * graft.operators.MinHash.NumBands
-    val bandParts = sys.env.get("SPARK_GRAFT_DP_BAND_PARTS") match {
-      case Some("sized") => math.max(spark.sparkContext.defaultParallelism,
-        (nBandRows * 32L / (128L << 20)).toInt + 1)
-      case Some(n) if n != "conf" => n.toInt
-      case _ => spark.sessionState.conf.numShufflePartitions
-    }
-    // Candidate staging (SPARK_GRAFT_DP_CANDS):
-    //  - `bh` (default): band keys travel as (doc_id, bh) ONLY — the band
-    //    ordinal lives inside the seeded hash (MinHash.bandHashKeys), so
-    //    the dominant exchange carries 24-byte rows instead of 32 and the
-    //    aggregation keys one long. Candidates are bit-identical to the
-    //    (band, bh) form modulo an ~1e-19 cross-band collision class that
-    //    exact verification discards anyway; measured 1.5x on the stage
-    //    (CandsLap run 1).
-    //  - `bloom`: two-pass prefilter — pass 1 shuffles bh alone (16-byte
-    //    rows) to Bloom the keys with >= 2 docs; pass 2 recomputes band
-    //    keys map-side and shuffles only probably-hot rows (the only keys
-    //    that can pair; false positives leak pairless singletons, false
-    //    negatives are impossible). Candidate set identical by
-    //    construction (BloomMightContainSpec).
-    //  - `bandbh`: the r14 staging ((band, bh) rows) for paired A/Bs.
-    // SPARK_GRAFT_DP_NEARLAP=1 (single-pass modes): materialize the
-    // repartitioned band keys so the stage splits into `bands_mat` (build
-    // CPU + shuffle) and `group_emit` (aggregation + expansion + distinct).
-    // Signature scheme (SPARK_GRAFT_DP_SIG):
-    //  - `family` (default): the fused 64-seeded-hash kernel
-    //    (minhash_signatures) — 64 XXH64 long-mixes per shingle.
-    //  - `oph`: one-permutation + rotation densification
-    //    (minhash_signatures_oph) — ONE bin-route per shingle. A different
-    //    LSH family, so the candidate SET differs; precision is untouched
-    //    (exact verify downstream) and recall is witnessed live by the
-    //    planted-dup gate. MEASURED AND REFUTED as a default at 11.32 GB
-    //    (candslap-oph-11p3g.json): 131.0 M candidates vs the family's
-    //    15.5 M (8.4x, deterministic — short docs densify most slots and
-    //    correlate across non-similar docs) and no map-side CPU win
-    //    (mapfam 23-27 s vs mapoph 30-33 s). See bandHashKeysOph scaladoc.
-    def bandHashKeysOf(df: DataFrame): DataFrame =
-      if (sigScheme == "oph")
-        graft.operators.MinHash.bandHashKeysOph(df, "text", Seq("doc_id"))
-      else graft.operators.MinHash.bandHashKeys(df, "text", Seq("doc_id"))
-    println(s"[dp]   near: cands_mode=$candsMode sig=$sigScheme " +
-      s"band_parts=$bandParts (rows=$nBandRows)")
-    val nearLap = sys.env.get("SPARK_GRAFT_DP_NEARLAP").contains("1")
-    var lapFrame: Option[DataFrame] = None
-    def lapMat(buckets: DataFrame): DataFrame =
-      if (!nearLap) buckets
-      else {
-        val bmat = buckets.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-        lap("  near:cands:bands_mat")
-        lapFrame = Some(bmat)
-        bmat
-      }
-    val rawCands = candsMode match {
-      case "bandbh" =>
-        val buckets = graft.operators.MinHash
-          .bandKeys(docsText, "text", Seq("doc_id"))
-          .repartition(bandParts, col("band"), col("bh"))
+    val bandParts = spark.sessionState.conf.numShufflePartitions
+    var nCands = 0L
+    var nPairs = 0L
+    var stageFrame: Option[DataFrame] = None
+    val near = graft.operators.NearDup.pairs(docsText, 0.7, stage = {
+      case ("bands", buckets) =>
         lap("  near:bands")
-        graft.operators.MinHash.bucketPairs(lapMat(buckets),
-          Seq("band", "bh"), "doc_id")
-      case "bloom" =>
-        val bk = bandHashKeysOf(docsText)
-        lap("  near:bands")
-        val hot = bk.select(col("bh"))
-          .groupBy(col("bh")).agg(count(lit(1)).as("n"))
-          .filter(col("n") >= lit(2L)).select(col("bh"))
-        val bloom = hot.stat.bloomFilter("bh", math.max(1000L, nExact), 0.01)
-        val bc = spark.sparkContext.broadcast(bloom)
-        lap("  near:cands:bloom")
-        // post-filter rows are pair-participant-sized (~candidates x 2),
-        // 1000x below the corpus — id-scale partitioning, the CC sizing
-        graft.operators.MinHash.bucketPairs(
-          bk.filter(graft.functions.bloom_might_contain_long(bc, col("bh")))
-            .repartition(math.max(spark.sparkContext.defaultParallelism,
-              (nExact / 2000000L).toInt + 1), col("bh")),
-          Seq("bh"), "doc_id")
-      case _ =>
-        val buckets = bandHashKeysOf(docsText)
-          .repartition(bandParts, col("bh"))
-        lap("  near:bands")
-        graft.operators.MinHash.bucketPairs(lapMat(buckets),
-          Seq("bh"), "doc_id")
-    }
-    val cands = rawCands
-      .distinct()
-      .localCheckpoint()
-    val nCands = cands.count()
-    if (nearLap) {
-      lap("  near:cands:group_emit")
-      lapFrame.foreach(_.unpersist())
-    }
-    println(s"[dp]   near: candidates=$nCands")
-    lap("  near:cands")
-    // single-reference verification (the lshVerifiedPairs shape): each
-    // pair explodes into its two (pair, doc) rows, joins the one shingle
-    // frame id-keyed, and regroups — shingles are computed once and only
-    // candidates' shingles cross the regroup shuffle. Shingles travel as
-    // 8-byte hashes (array_distinct over the fused gram-hash kernel, the
-    // decontam/band-key staging): Jaccard over hashed shingle sets equals
-    // Jaccard over the shingle strings except on a 64-bit collision
-    // (~n²/2⁶⁵ per pair, the accepted class), and the hashed arrays are
-    // ~4-5x smaller through the two verify shuffles — this stage was the
-    // LAST corpus-derived strings crossing an exchange, and its
-    // string-array spill was the ENOSPC at the 23 GB scale point.
-    // Hashed with VerifyHashSeed, NOT the band keys' BaseHashSeed, so the
-    // exact check's collision class is independent of candidate
-    // generation's (a shared seed replays the same collision both times).
-    // SPARK_GRAFT_DP_VERIFY=string selects the reference-faithful
-    // string-shingle witness leg (the r14 `half` shape) for paired A/Bs;
-    // pair sets are bit-identical across the two legs (proven at 11.32 GB,
-    // 6,061,337 pairs) — only the shuffle bytes differ.
-    //
-    // Participant prefilter (SPARK_GRAFT_DP_VERIFYPRE, default `bloom`):
-    // the shingle frame below was the stage's one CORPUS-proportional term
-    // — computed and shuffled for every survivor, though the join consumes
-    // only docs appearing in >= 1 candidate pair (~40-50% of survivors at
-    // the r15 scale points, and the stage grew 2.77x at 2.03x data). One
-    // pass over the already-checkpointed pair frame collects the distinct
-    // participant ids into a broadcast Bloom filter, and survivors are
-    // filtered MAP-SIDE before shingling, making the whole stage
-    // candidate-proportional. False positives (1%) cost one wasted array
-    // each, which the inner join drops; false negatives are impossible, so
-    // the verified pair set is IDENTICAL by construction (unit A/B leg in
-    // DataPipelineSpec; VerifyLap asserts pair-set counts live at scale).
-    // `off` selects the unfiltered r14/r15 witness leg for paired A/Bs.
-    var nParticipants = -1L
-    val verifyBase =
-      if (verifyPre == "bloom" && nCands > 0) {
-        val participants = cands
-          .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-          .distinct()
-        nParticipants = participants.count()
-        println(f"[dp]   near: verify participants=$nParticipants " +
-          f"(${100.0 * nParticipants / math.max(nExact, 1)}%.1f%% of survivors)")
-        val bloom = participants.stat.bloomFilter("doc_id",
-          math.max(1000L, nParticipants), 0.01)
-        val bc = spark.sparkContext.broadcast(bloom)
-        docsText.filter(graft.functions.bloom_might_contain_long(bc, col("doc_id")))
-      } else docsText
-    val sh =
-      if (verifyMode == "string")
-        verifyBase.select(col("doc_id"),
-          graft.operators.MinHash.shingles(col("text")).as("sh"))
-      else
-        verifyBase.select(col("doc_id"),
-          array_distinct(graft.functions.word_ngram_hashes(
-            split(col("text"), " "), 3,
-            graft.operators.MinHash.VerifyHashSeed)).as("sh"))
-    val jacOf: (Column, Column) => Column =
-      if (verifyMode == "string") graft.functions.set_jaccard
-      else graft.functions.set_jaccard_hashes
-    val pairs = cands
-      .select(col("id_a"), col("id_b"),
-        explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-      .join(sh, "doc_id")
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(when(col("doc_id") === col("id_a"), col("sh"))).as("sh_a"),
-        max(when(col("doc_id") === col("id_b"), col("sh"))).as("sh_b"))
-      .select(col("id_a"), col("id_b"),
-        jacOf(col("sh_a"), col("sh_b")).as("jac"))
-      .filter(col("jac") >= 0.7)
-      .select(col("id_a").as("a"), col("id_b").as("b"))
-      .localCheckpoint()
-    val nPairs = pairs.count()
-    println(s"[dp]   near: verified pairs=$nPairs")
-    cands.unpersist() // dead once the verified pairs are materialized
-    lap("  near:verify")
+        buckets
+      case (name, df) =>
+        val m = df.localCheckpoint()
+        val n = m.count()
+        if (name == "cands") nCands = n else nPairs = n
+        println(s"[dp]   near: $name=$n")
+        stageFrame.foreach(_.unpersist()) // the previous stage is dead now
+        stageFrame = Some(m)
+        lap(s"  near:$name")
+        m
+    })
     // CC partitioning sized by the EDGE frame, not the session conf: the
     // session runs ~128 shuffle partitions per corpus GB for the text
     // stages, but the pair frame is ~1000x smaller — inheriting the
@@ -590,14 +403,13 @@ object DataPipelineBench {
     val ccParts = math.max(spark.sparkContext.defaultParallelism,
       (nPairs / 2000000L).toInt + 1)
     val clusters = graft.operators.Dedup
-      .connectedComponents(pairs, numPartitions = Some(ccParts))
+      .connectedComponents(near.pairs.select(col("id_a").as("a"), col("id_b").as("b")),
+        numPartitions = Some(ccParts))
       .select(col("id").as("doc_id"), col("cluster_id"))
-    pairs.unpersist() // connectedComponents checkpointed its own output
+    stageFrame.foreach(_.unpersist()) // connectedComponents checkpointed its own output
     lap("  near:cc")
-    // keep-best survivor stagings live in nearKeepBest (scaladoc there);
-    // SPARK_GRAFT_DP_KEEPBEST selects bloom (default) | anti | union
     val (survivorPlan, kbCleanup) =
-      nearKeepBest(spark, exactSurvivors, clusters, keepBestMode)
+      graft.operators.NearDup.keepBest(exactSurvivors, clusters)
     val nearSurvivors = ckptText(survivorPlan)
     val nNear = nearSurvivors.count()
     kbCleanup()
@@ -642,14 +454,12 @@ object DataPipelineBench {
 
     // --- stage 6: split + write (near-dups are gone, so a doc-hash split
     // is leakage-free by construction); partitioned parquet out.
-    // Output codec: zstd by default (guide §6) — IoLap 11.32 GB adjudication:
+    // Output codec zstd (IoLap 11.32 GB, iolap-write-11p3g.json):
     // clean-window write time equal to snappy (min 5.0 vs 5.7 s), output 32%
     // smaller (2.58 vs 3.81 GB; lz4 4.86), and the smallest worst case under
     // disk contention (71.9 s where snappy read 103.6 in the same window) —
     // at scale the deliverable's bytes are also every downstream reader's
-    // scan bytes. `SPARK_GRAFT_DP_OUTCODEC=snappy|lz4` keeps witness legs;
-    // row counts are codec-invariant (IoLap asserts read-back equality).
-    val outCodec = sys.env.getOrElse("SPARK_GRAFT_DP_OUTCODEC", "zstd")
+    // scan bytes.
     val outFrame = clean
       .withColumn("split",
         when(((col("doc_id") % 65536) * 40503L) % 65536 < 6554, "val")
@@ -657,7 +467,7 @@ object DataPipelineBench {
       .select(col("doc_id"), col("source"), col("split"),
         col("quality"), col("text"))
     outFrame.write.mode(SaveMode.Overwrite)
-      .option("compression", outCodec)
+      .option("compression", "zstd")
       .partitionBy("split").parquet(outDir)
     lap("split_write")
     // read-back counts lapped separately from the write (the write is the
@@ -674,140 +484,24 @@ object DataPipelineBench {
       "after_near_dedup" -> nNear,
       "after_decontam" -> nClean, "train" -> nTrain, "val" -> nVal,
       "band_parts" -> bandParts.toLong,
-      "verify_participants" -> nParticipants) ++
+      "verify_participants" -> near.participants) ++
       plantedCounts
   }
 
   /** Exact-dedup survivor plan over the qualified frame: keep the
-    * lowest-id row per content digest. Two stagings, result-identical by
-    * construction (`SPARK_GRAFT_DP_EXACT`):
-    *
-    *  - `agg` (default): fold survivor selection INTO the digest
-    *    aggregation (min_by of the whole row) — ONE digest-keyed shuffle,
-    *    map-side combined, no join. The pre-r13 shape
-    *    (groupBy.agg(min(doc_id)) + a doc_id-keyed LEFT SEMI back against
-    *    the text frame) shuffled the FULL-TEXT frame a second time and
-    *    went disk-bound at the 14.4 GB point (311 s vs 56 s at 7 GB).
-    *    min_by is a DeclarativeAggregate, so partial aggregation applies —
-    *    but duplicates are spread randomly across input partitions, so
-    *    map-side combine collapses almost nothing and ~the whole corpus
-    *    text still crosses the digest exchange.
-    *  - `bloom`: participant prefilter (the verify-stage staging applied
-    *    here). Pass 1 shuffles an 8-byte digest hash ALONE through a
-    *    count aggregation and folds the hashes held by >= 2 rows — the
-    *    only digests that can dedup anything (~1 per 5-group in the
-    *    synthesized mix; ~20-40% of rows in a web crawl) — into a
-    *    broadcast Bloom filter. Pass 2 splits the corpus MAP-SIDE: rows
-    *    whose digest hash misses the filter are provably digest-unique
-    *    and bypass the exchange entirely; only probably-duplicate rows
-    *    shuffle their text through the min_by aggregation. False
-    *    positives (1%) ride the aggregation as singleton groups that
-    *    min_by keeps unchanged; false negatives are impossible, so the
-    *    survivor SET is identical (DataPipelineSpec's A/B leg + the
-    *    DedupLap live checksum). The 64-bit digest-hash collision class
-    *    (~n²/2⁶⁵ pairs) only ever ADDS a row to the aggregation path —
-    *    grouping is by the true digest — so exactness is unconditional.
-    *    At 100 TB this is the difference between shuffling the corpus
-    *    and shuffling its duplicate fraction. MEASURED AND ADJUDICATED
-    *    AGAINST as the default at THIS duplicate mix (deduplap-11p3g.json,
-    *    interleaved laps, checksums identical): clean rep 49.6 s vs agg's
-    *    19.3 s — with 40% of rows digest-participants, the extra
-    *    corpus-wide hash shuffle + Bloom build + double corpus pass cost
-    *    more than bypassing 60% of the text saves. The staging inverts at
-    *    web-crawl participant fractions (~20%) or when the exchange is
-    *    network-bound (cluster) rather than page-cache-local (this box);
-    *    the lever records the decision boundary.
-    *
-    * `expectedDupDigests` sizes the Bloom filter (an upper bound is fine:
-    * oversizing only lowers the false-positive rate; 30 M keys at 1% is
-    * ~34 MB broadcast). */
-  def exactDedup(spark: SparkSession, qualified: DataFrame, mode: String,
-      expectedDupDigests: Long): DataFrame = {
-    def agg(df: DataFrame): DataFrame = df
+    * lowest-id row per content digest, folded INTO the digest aggregation
+    * (min_by of the whole row) — ONE digest-keyed shuffle, no join. The
+    * pre-r13 shape (groupBy.agg(min(doc_id)) + a doc_id-keyed LEFT SEMI
+    * back against the text frame) shuffled the FULL-TEXT frame a second
+    * time and went disk-bound at the 14.4 GB point (311 s vs 56 s at
+    * 7 GB). A Bloom prefilter that lets digest-unique rows bypass the
+    * exchange measured a wash at both duplicate mixes
+    * (deduplap-11p3g.json, deduplap-r16-sparse-13p4g.json). */
+  def exactDedup(qualified: DataFrame): DataFrame =
+    qualified
       .groupBy(col("digest"))
-      .agg(min_by(struct(df.columns.map(col): _*), col("doc_id")).as("__r"))
+      .agg(min_by(struct(qualified.columns.map(col): _*), col("doc_id")).as("__r"))
       .select(col("__r.*"))
-    mode match {
-      case "bloom" =>
-        val dupHashes = qualified
-          .select(xxhash64(col("digest")).as("dh"))
-          .groupBy(col("dh")).agg(count(lit(1)).as("n"))
-          .filter(col("n") >= lit(2L)).select(col("dh"))
-        val bloom = dupHashes.stat.bloomFilter("dh",
-          math.max(1000L, expectedDupDigests), 0.01)
-        val bc = spark.sparkContext.broadcast(bloom)
-        def mightDup: Column = graft.functions.bloom_might_contain_long(
-          bc, xxhash64(col("digest")))
-        qualified.filter(!mightDup)
-          .unionByName(agg(qualified.filter(mightDup)))
-      case _ => agg(qualified)
-    }
-  }
-
-  /** Near-dup keep-best survivor plan: from the cluster assignment, keep
-    * the best-quality member per cluster (lowest id on ties) plus every
-    * non-member. Returns (plan, cleanup) — run cleanup after the caller
-    * materializes the plan. Stagings (`SPARK_GRAFT_DP_KEEPBEST`), all
-    * set-identical (keepBest ⊆ inAnyCluster, so
-    * all − (inAnyCluster − keepBest) = non-members ∪ winners):
-    *
-    *  - `bloom` (default since the r15 DedupLap adjudication): participant
-    *    prefilter — the losers id-frame (~cluster members − clusters,
-    *    1000x below the corpus) folds into a broadcast Bloom filter; rows
-    *    missing it are provably keepers and bypass the exchange MAP-SIDE,
-    *    and only probable-losers (the losers plus ~1% false positives)
-    *    shuffle text through the anti-join, which drops the true losers
-    *    and recovers the false positives. False negatives are impossible,
-    *    so the survivor set is identical by construction. Text through
-    *    the exchange is loser-proportional instead of corpus-proportional
-    *    — the same argument as the verify-stage prefilter. Measured
-    *    (deduplap-11p3g.json, interleaved same-JVM laps, checksums
-    *    identical): 16.1/17.4 s across reps (±4%) where `anti` swung
-    *    68.9/16.9 s — equal clean-window minimum, 4x lower worst case,
-    *    and ~4x fewer text bytes through the exchange by construction
-    *    (25% of survivors are probable-losers at this mix). (A broadcast
-    *    of the EXACT loser id set would skip the recovery join but is
-    *    ~13x more bytes per key; at billions of losers neither broadcasts
-    *    and this staging degrades to `anti` — flip the mode, the results
-    *    are identical.)
-    *  - `anti`: losers computed entirely on id-sized frames, then ONE
-    *    doc_id-keyed anti-join against the text frame — the full
-    *    survivor text crosses that one exchange.
-    *  - `union`: the r14 witness shape — (non-members) UNION (semi-join
-    *    winners), two corpus-text exchanges; kept for paired A/Bs. */
-  def nearKeepBest(spark: SparkSession, exactSurvivors: DataFrame,
-      clusters: DataFrame, mode: String): (DataFrame, () => Unit) = {
-    val keepBest = clusters
-      .join(exactSurvivors.select(col("doc_id"), col("quality")), "doc_id")
-      .groupBy(col("cluster_id"))
-      .agg(max(struct(col("quality"), (-col("doc_id")).as("nid"))).as("m"))
-      .select((-col("m.nid")).as("doc_id"))
-    val inAnyCluster = clusters.select(col("doc_id"))
-    mode match {
-      case "union" =>
-        (exactSurvivors
-          .join(inAnyCluster, Seq("doc_id"), "left_anti")
-          .unionByName(
-            exactSurvivors.join(keepBest, Seq("doc_id"), "left_semi")),
-          () => ())
-      case "bloom" =>
-        val losers = inAnyCluster.join(keepBest, Seq("doc_id"), "left_anti")
-          .localCheckpoint() // referenced twice (Bloom build + recovery join)
-        val nLosers = losers.count()
-        val bloom = losers.stat.bloomFilter("doc_id",
-          math.max(1000L, nLosers), 0.01)
-        val bc = spark.sparkContext.broadcast(bloom)
-        def mightLose: Column =
-          graft.functions.bloom_might_contain_long(bc, col("doc_id"))
-        (exactSurvivors.filter(!mightLose)
-          .unionByName(exactSurvivors.filter(mightLose)
-            .join(losers, Seq("doc_id"), "left_anti")),
-          () => losers.unpersist())
-      case _ =>
-        val losers = inAnyCluster.join(keepBest, Seq("doc_id"), "left_anti")
-        (exactSurvivors.join(losers, Seq("doc_id"), "left_anti"), () => ())
-    }
-  }
 
   /** Synthesize a ~targetGB parquet corpus with a CONTROLLED duplicate
     * mix, engineered so every cross-row Jaccard sits FAR from the 0.7

@@ -14,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
   *     (guide §6: "for large sequential scans ... 512 MB - 1 GB splits cut
   *     task-scheduling overhead and reduce the map-task count feeding any
   *     shuffle"). Runtime-settable SQL conf, so variants interleave in ONE
-  *     JVM (the CandsLap protocol: ABC ABC reps against one input, serial
+  *     JVM (interleaved protocol: ABC ABC reps against one input, serial
   *     canary after every lap, equality witness across variants). The scan
   *     frame is re-read from disk per lap so each plan picks up the conf.
   *     Timed action: noop sink (§1.4); witness: an `Observation` row count

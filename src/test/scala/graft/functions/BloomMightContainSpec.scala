@@ -5,13 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** bloom_might_contain_long: no false negatives ever (every inserted key
-  * probes true), false positives bounded and benign for its use as the
-  * two-pass LSH prefilter (a leaked singleton key groups into a 1-element
-  * bucket and emits no pairs). Also pins the end-to-end prefilter
-  * equivalence: candidate pairs through the Bloom prefilter equal the
-  * single-pass grouped form exactly. */
+  * probes true), false positives bounded — the properties the near-dup
+  * operator's participant prefilters rely on (their end-to-end equivalence
+  * is pinned in NearDupSpec). */
 class BloomMightContainSpec extends SparkSpec {
-  import spark.implicits._
 
   test("no false negatives; false-positive rate near the requested fpp") {
     val keys = spark.range(0, 20000).select((col("id") * 2L).as("k")) // evens
@@ -25,32 +22,5 @@ class BloomMightContainSpec extends SparkSpec {
     val fps = spark.range(0, 20000).select((col("id") * 2L + 1L).as("k"))
       .filter(graft.functions.bloom_might_contain_long(bc, col("k"))).count()
     assert(fps < 20000L * 0.05, s"fp count $fps far above requested 1% fpp")
-  }
-
-  test("two-pass Bloom-prefiltered candidate pairs equal the single-pass form") {
-    // band-key-shaped frame: (doc_id, bh) with planted multi-doc buckets
-    // among a sea of singletons
-    val singletons = spark.range(0, 5000)
-      .select(col("id").as("doc_id"), xxhash64(col("id")).as("bh"))
-    val hotRows = Seq(
-      (9001L, 42L), (9002L, 42L), (9003L, 42L), // 3-doc bucket -> 3 pairs
-      (9004L, 77L), (9005L, 77L))               // 2-doc bucket -> 1 pair
-      .toDF("doc_id", "bh")
-    val buckets = singletons.unionByName(hotRows)
-    def pairsOf(df: org.apache.spark.sql.DataFrame) =
-      graft.operators.MinHash.bucketPairs(df, Seq("bh"), "doc_id")
-        .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val direct = pairsOf(buckets)
-    val hot = buckets.groupBy(col("bh")).agg(count(lit(1)).as("n"))
-      .filter(col("n") >= 2).select(col("bh"))
-    val bc = spark.sparkContext.broadcast(hot.stat.bloomFilter("bh", 5000L, 0.01))
-    val filtered = buckets
-      .filter(graft.functions.bloom_might_contain_long(bc, col("bh")))
-    assert(pairsOf(filtered) == direct)
-    assert(direct == Set((9001L, 9002L), (9001L, 9003L), (9002L, 9003L),
-      (9004L, 9005L)))
-    // and the prefilter actually filters: the kept fraction is the hot
-    // rows plus at most fp leakage
-    assert(filtered.count() < 5L + 5000L * 0.05)
   }
 }

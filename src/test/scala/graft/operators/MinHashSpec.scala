@@ -15,8 +15,8 @@ class MinHashSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   test("band keys: 32 bands per doc, shingle-less docs dropped") {
-    val keys = MinHash.bandKeys(docs, "text", Seq("doc_id")).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    val keys = MinHash.bandHashKeys(docs, "text", Seq("doc_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
     val perDoc = keys.groupBy(_._1).view.mapValues(_.length).toMap
     assert(perDoc == Map(1L -> MinHash.NumBands, 2L -> MinHash.NumBands,
       3L -> MinHash.NumBands))
@@ -24,16 +24,16 @@ class MinHashSpec extends SparkSpec {
   }
 
   test("identical text collides on every band; disjoint text on none") {
-    val keys = MinHash.bandKeys(docs, "text", Seq("doc_id")).collect()
-      .map(r => (r.getLong(0), (r.getInt(1), r.getLong(2))))
+    val keys = MinHash.bandHashKeys(docs, "text", Seq("doc_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
     val byDoc = keys.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert(byDoc(1L) == byDoc(2L))            // same signature, all 32 bands
     assert(byDoc(1L).intersect(byDoc(3L)).isEmpty) // no shared shingles
   }
 
   test("signature is deterministic across evaluations") {
-    val a = MinHash.bandKeys(docs, "text", Seq("doc_id")).collect().toSet
-    val b = MinHash.bandKeys(docs, "text", Seq("doc_id")).collect().toSet
+    val a = MinHash.bandHashKeys(docs, "text", Seq("doc_id")).collect().toSet
+    val b = MinHash.bandHashKeys(docs, "text", Seq("doc_id")).collect().toSet
     assert(a == b)
   }
 
@@ -86,11 +86,33 @@ class MinHashSpec extends SparkSpec {
     assert(f.exceptAll(c).isEmpty && c.exceptAll(f).isEmpty)
   }
 
+  /** The (carry, band, bh) band keys: one row per band per document, the
+    * band ordinal kept as a column beside its band hash. [[MinHash.bandHashKeys]]
+    * emits the same rows minus the band column — `bh` is already seeded by
+    * the band ordinal — so its output must equal this frame's (carry, bh)
+    * projection. Built from the same fused kernels as bandHashKeys. */
+  private def keyedByBand(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    df.filter(size(split(col("text"), " ")) >= 3)
+      .select(col("doc_id"), graft.functions.minhash_signatures(
+        graft.functions.word_ngram_hashes(split(col("text"), " "), 3,
+          MinHash.BaseHashSeed), MinHash.NumHashes).as("sig"))
+      .select(col("doc_id"), explode(array((0 until MinHash.NumBands).map { b =>
+        struct(lit(b).as("band"),
+          graft.functions.xxhash64_seeded(1000L + b,
+            col("sig").getItem(b * MinHash.BandRows),
+            col("sig").getItem(b * MinHash.BandRows + 1)).as("bh"))
+      }: _*)).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
+  }
+
   test("bandKeys equals the round-10 shingle-string formulation") {
     import org.apache.spark.sql.functions._
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val now = MinHash.bandKeys(real, "text", Seq("doc_id"))
+    // the band keys as the pipeline stages them (band folded into bh)
+    val now = MinHash.bandHashKeys(real, "text", Seq("doc_id"))
     // the old path: distinct shingle STRINGS -> per-shingle hash -> 64
     // column-per-family signature -> same band structs (distinct vs
     // multiset cannot matter: each family takes a MINIMUM)
@@ -106,7 +128,10 @@ class MinHashSpec extends SparkSpec {
             col(s"mh_${b * MinHash.BandRows + 1}")).as("bh"))
       }: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
-    assert(now.exceptAll(old).isEmpty && old.exceptAll(now).isEmpty)
+    val fusedBanded = keyedByBand(real)
+    assert(fusedBanded.exceptAll(old).isEmpty && old.exceptAll(fusedBanded).isEmpty)
+    val oldBh = old.select(col("doc_id"), col("bh"))
+    assert(now.exceptAll(oldBh).isEmpty && oldBh.exceptAll(now).isEmpty)
   }
 
   test("fused signature equals the column-per-family formulation") {
@@ -141,101 +166,18 @@ class MinHashSpec extends SparkSpec {
   }
 
   test("bandHashKeys equals bandKeys' bh column (band folded into the seeded hash)") {
-    // the bh-only staging the pipeline's candidate stage shuffles: same
-    // carry + bh MULTISET as bandKeys (each bh is already seeded by its
-    // band ordinal), just without ever materializing the band column
+    // the bh-only staging the candidate stage shuffles: same carry + bh
+    // MULTISET as the (carry, band, bh) keys (each bh is already seeded by
+    // its band ordinal), just without ever materializing the band column
     import org.apache.spark.sql.functions.col
-    val a = MinHash.bandKeys(docs, "text", Seq("doc_id"))
-      .select(col("doc_id"), col("bh"))
+    val a = keyedByBand(docs).select(col("doc_id"), col("bh"))
     val b = MinHash.bandHashKeys(docs, "text", Seq("doc_id"))
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     assert(b.count() == 3L * MinHash.NumBands) // doc 4 still dropped
-  }
-
-  // --- one-permutation + rotation-densification signature (the oph
-  //     candidate-stage lever: one bin-route per shingle vs 64 seeded
-  //     hashes; a DIFFERENT LSH family, so the contract here is shape +
-  //     estimator quality + banding recall, not equality with k-family) ---
-
-  private def ophSig(xs: Seq[Long]): IndexedSeq[Long] = {
-    val a = graft.functions.MinHashKernel.signaturesOph(
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(xs.toArray),
-      MinHash.NumHashes)
-    (0 until MinHash.NumHashes).map(a.getLong)
-  }
-
-  test("oph signature: shape, determinism, dup/permutation invariance, edges") {
-    val rnd = new scala.util.Random(7)
-    val xs = Seq.fill(40)(rnd.nextLong())
-    val s1 = ophSig(xs)
-    assert(s1.length == MinHash.NumHashes)
-    assert(s1 == ophSig(xs))                        // deterministic
-    assert(s1 == ophSig(rnd.shuffle(xs)))           // order-insensitive
-    assert(s1 == ophSig(xs ++ xs.take(13)))         // multiset = set (min)
-    // empty input -> all-null signature, like the k-family kernel
-    val empty = graft.functions.MinHashKernel.signaturesOph(
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Long]),
-      MinHash.NumHashes)
-    assert((0 until MinHash.NumHashes).forall(empty.isNullAt))
-    // non-empty input -> fully densified, no nulls, even from ONE element
-    val one = ophSig(Seq(42L))
-    assert(one.distinct.length == MinHash.NumHashes) // hop offsets differ
-  }
-
-  test("oph signature: slot agreement estimates Jaccard (statistical)") {
-    val rnd = new scala.util.Random(42)
-    def randLongs(n: Int) = Seq.fill(n)(rnd.nextLong())
-    // 200 pairs at J = 0.8 (120 shared / 15+15 own -> union 150); mean
-    // slot-agreement over 64 slots must track J. 150 elements over 64
-    // bins leaves few empty bins, so densification barely perturbs the
-    // plain per-bin-minwise estimator here.
-    val agrees = (1 to 200).map { _ =>
-      val shared = randLongs(120)
-      val (sa, sb) = (ophSig(shared ++ randLongs(15)),
-        ophSig(shared ++ randLongs(15)))
-      sa.zip(sb).count { case (x, y) => x == y } / 64.0
-    }
-    val mean = agrees.sum / agrees.size
-    assert(math.abs(mean - 0.8) < 0.05, f"mean slot agreement $mean%.3f")
-  }
-
-  test("oph banding: high-J pairs collide on >=1 band, disjoint sets on none") {
-    val rnd = new scala.util.Random(99)
-    def randLongs(n: Int) = Seq.fill(n)(rnd.nextLong())
-    def bands(sig: IndexedSeq[Long]): Set[(Int, (Long, Long))] =
-      (0 until MinHash.NumBands)
-        .map(b => (b, (sig(2 * b), sig(2 * b + 1)))).toSet
-    // J = 0.9 at SMALL set size (36 shared / 2+2 own -> union 40): most of
-    // the 64 bins are empty, so this exercises the densified slots — the
-    // regime where oph recall is weakest. Every pair must still share a
-    // band (per-band match ~J^2 = 0.81; P(all 32 miss) ~ 1e-23 if slots
-    // were independent — correlation from shared donors only HELPS here,
-    // since borrowed slots copy bins the sets agree on).
-    val missed = (1 to 100).count { _ =>
-      val shared = randLongs(36)
-      val a = bands(ophSig(shared ++ randLongs(2)))
-      val b = bands(ophSig(shared ++ randLongs(2)))
-      a.intersect(b).isEmpty
-    }
-    assert(missed == 0, s"$missed/100 J=0.9 pairs missed every band")
-    // disjoint sets share no band (64-bit slot equality is ~impossible)
-    val d = (1 to 50).count { _ =>
-      bands(ophSig(randLongs(40)))
-        .intersect(bands(ophSig(randLongs(40)))).nonEmpty
-    }
-    assert(d == 0, s"$d/50 disjoint pairs collided on a band")
-  }
-
-  test("bandHashKeysOph: 32 keys per doc, identical docs collide on all, disjoint on none") {
-    import org.apache.spark.sql.functions.col
-    val keys = MinHash.bandHashKeysOph(docs, "text", Seq("doc_id"))
-    assert(keys.count() == 3L * MinHash.NumBands) // doc 4 dropped (< 3 tokens)
-    val byDoc = keys.collect().map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    assert(byDoc(1L) == byDoc(2L))                  // identical text
-    assert(byDoc(1L).intersect(byDoc(3L)).isEmpty)  // disjoint tokens
-    // deterministic across evaluations
-    val again = MinHash.bandHashKeysOph(docs, "text", Seq("doc_id"))
-    assert(keys.exceptAll(again).isEmpty && again.exceptAll(keys).isEmpty)
+    // the band seed separates bands: one document's 32 band hashes are
+    // pairwise distinct, so no two bands of it share a bucket
+    val perDoc = b.collect().map(r => (r.getLong(0), r.getLong(1)))
+      .groupBy(_._1).view.mapValues(_.map(_._2).distinct.length).toMap
+    assert(perDoc.values.forall(_ == MinHash.NumBands))
   }
 }

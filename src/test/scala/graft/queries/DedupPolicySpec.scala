@@ -48,27 +48,4 @@ class DedupPolicySpec extends SparkSpec {
     // sanity: at least one cluster exists and kept ids are cluster members
     assert(kept.count() > 0)
   }
-
-  test("q32: size-gated verify prefilter is result-identical (bloom vs off)") {
-    // the auto gate reads plan-estimated input bytes, so at test SF it is
-    // OFF; force both stagings and assert the verified pair sets equal —
-    // the zero-false-negative construction witness for the query path
-    // (the pipeline twin holds the at-scale witness, VerifyLap r15)
-    def runWith(mode: String) = {
-      spark.conf.set("spark.graft.dedup.verifyPrefilter", mode)
-      try Catalog.byName("q32_dedup_minhash_lsh").fn(spark, dir).collect().toSeq
-      finally spark.conf.unset("spark.graft.dedup.verifyPrefilter")
-    }
-    val off   = runWith("off")
-    val bloom = runWith("bloom")
-    assert(off.nonEmpty, "verified pair set is empty — vacuous A/B")
-    assert(off == bloom,
-      "bloom-prefiltered verification changed the verified pair set")
-    // and the auto gate itself: sf0.001 documents are KBs, far below the
-    // 2 GiB default, so the default plan must not pay the prefilter's
-    // driver actions (asserted via the gate inputs, not timing)
-    val est = graft.Tables(spark, dir, "documents")
-      .queryExecution.optimizedPlan.stats.sizeInBytes
-    assert(est < (2L << 30), "test-SF scan estimate unexpectedly above gate")
-  }
 }

@@ -27,7 +27,7 @@ class LshBucketCapSpec extends SparkSpec {
       "across the whole mirror of the site with no variation at all"
 
   /** 120 identical boilerplate docs (the hot bucket: one signature, so all
-    * 32 (band, bh) keys hold 120 rows each) + two genuine near-dup pairs
+    * 32 bh keys hold 120 rows each) + two genuine near-dup pairs
     * + unrelated singletons. */
   private lazy val docs = {
     val hot = (0L until 120L).map(i => (i, boiler))
@@ -43,8 +43,8 @@ class LshBucketCapSpec extends SparkSpec {
   }
 
   test("capBuckets drops exactly the oversized keys, keeps the rest") {
-    val buckets = MinHash.bandKeys(docs, "text", Seq("doc_id"))
-    val capped  = MinHash.capBuckets(buckets, Seq("band", "bh"), cap = 50)
+    val buckets = MinHash.bandHashKeys(docs, "text", Seq("doc_id"))
+    val capped  = MinHash.capBuckets(buckets, Seq("bh"), cap = 50)
     // Every one of the hot block's 32 keys holds 120 > 50 rows -> all
     // dropped; every other doc's keys hold <= a handful of rows -> kept.
     val survivors = capped.select("doc_id").distinct()
@@ -53,15 +53,15 @@ class LshBucketCapSpec extends SparkSpec {
       "hot-bucket members must lose all their (shared) keys")
     assert(Set(200L, 201L, 202L, 203L, 300L, 301L).subsetOf(survivors))
     // No surviving bucket exceeds the cap.
-    val maxBucket = capped.groupBy("band", "bh").count()
+    val maxBucket = capped.groupBy("bh").count()
       .agg(max("count")).as[Long].head()
     assert(maxBucket <= 50)
   }
 
   test("cap is a no-op when no bucket is oversized") {
     val quiet = docs.filter(col("doc_id") >= 200L)
-    val buckets = MinHash.bandKeys(quiet, "text", Seq("doc_id"))
-    assert(MinHash.capBuckets(buckets, Seq("band", "bh"), cap = 50)
+    val buckets = MinHash.bandHashKeys(quiet, "text", Seq("doc_id"))
+    assert(MinHash.capBuckets(buckets, Seq("bh"), cap = 50)
       .count() === buckets.count())
   }
 
@@ -203,14 +203,14 @@ class LshBucketCapSpec extends SparkSpec {
     }
     spark.listenerManager.register(l)
     try {
-      val buckets = MinHash.bandKeys(docs, "text", Seq("doc_id"))
-      MinHash.capBuckets(buckets, Seq("band", "bh"), cap = 50)
+      val buckets = MinHash.bandHashKeys(docs, "text", Seq("doc_id"))
+      MinHash.capBuckets(buckets, Seq("bh"), cap = 50)
         .write.format("noop").mode("overwrite").save()
       // execution-listener dispatch is async — poll
       val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
       while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      // the 120-doc hot block shares one signature -> all 32 (band, bh)
-      // keys oversized, 120 rows each
+      // the 120-doc hot block shares one signature -> all 32 bh keys
+      // oversized, 120 rows each
       assert(seen.contains((32L, 32L * 120L)),
         s"expected observed metric (32, 3840), got $seen")
     } finally spark.listenerManager.unregister(l)

@@ -48,68 +48,4 @@ class DataPipelineSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(0L, 3L, 4L, 5L))
   }
-
-  test("A/B witness legs are result-identical: keep-best union shape, string verify") {
-    import spark.implicits._
-    def doc(p: String): String = (0 until 40).map(i => s"$p$i").mkString(" ")
-    val corpus = Seq(
-      (0L, "s0", doc("a")), (1L, "s0", doc("a")),
-      (2L, "s0", doc("b")), (3L, "s0", doc("b") + " extra"),
-      (4L, "s1", doc("c")), (5L, "s1", doc("d")),
-      (6L, "s1", doc("e") + " " + doc("q").split(" ").take(12).mkString(" ")),
-      (7L, "s1", "a b c")).toDF("doc_id", "source", "text")
-    val benchmark = Seq((100L, doc("q"))).toDF("bench_id", "text")
-    def leg(name: String, keepbest: String = "bloom",
-        verify: String = "hashed", cands: String = "bh",
-        verifypre: String = "bloom", sig: String = "family",
-        exact: String = "agg") = {
-      val out = graft.SparkSpec.tempDir(s"graft-dp-ab-$name")
-      val counts = DataPipelineBench.run(spark, corpus, benchmark, out,
-        verifyMode = verify, keepBestMode = keepbest, exactMode = exact,
-        candsMode = cands, verifyPre = verifypre, sigScheme = sig).toMap
-      val kept = spark.read.parquet(out).select(col("doc_id"))
-        .collect().map(_.getLong(0)).toSet
-      (counts, kept)
-    }
-    // the default path vs the witness legs the big-scale paired A/Bs run
-    // (SPARK_GRAFT_DP_KEEPBEST=union / SPARK_GRAFT_DP_VERIFY=string /
-    // SPARK_GRAFT_DP_CANDS=bandbh|bloom): every stage count and the
-    // survivor SET must be bit-identical — the legs differ only in how
-    // many bytes cross which exchange
-    val (cBase, kBase) = leg("base")
-    val (cUnion, kUnion) = leg("union", keepbest = "union")
-    val (cStr, kStr) = leg("strv", verify = "string")
-    val (cBandBh, kBandBh) = leg("bandbh", cands = "bandbh")
-    val (cBloom, kBloom) = leg("bloom", cands = "bloom")
-    // the Bloom participant stagings: rows provably outside any duplicate
-    // relation bypass the stage's exchange map-side; the survivor sets
-    // must be IDENTICAL by construction. keep-best's bloom staging is the
-    // DEFAULT since the r15 DedupLap adjudication, so `anti` is now the
-    // witness leg here (exact dedup adjudicated the other way: agg stays
-    // default, bloom is the lever).
-    val (cExB, kExB) = leg("exbloom", exact = "bloom")
-    val (cKbB, kKbB) = leg("kbanti", keepbest = "anti")
-    // the unfiltered-verify witness leg reports no participant count, so
-    // compare counts modulo that diagnostic key
-    val (cVpOff, kVpOff) = leg("vpoff", verifypre = "off")
-    assert(cUnion == cBase && kUnion == kBase)
-    assert(cStr == cBase && kStr == kBase)
-    assert(cBandBh == cBase && kBandBh == kBase)
-    assert(cBloom == cBase && kBloom == kBase)
-    assert(cExB == cBase && kExB == kBase)
-    assert(cKbB == cBase && kKbB == kBase)
-    assert((cVpOff - "verify_participants") == (cBase - "verify_participants")
-      && kVpOff == kBase)
-    assert(kBase == Set(0L, 3L, 4L, 5L))
-    // the one-permutation signature leg (SPARK_GRAFT_DP_SIG=oph) is a
-    // DIFFERENT LSH family — its candidate COUNT may legitimately differ —
-    // but exact verification makes the verified pairs, and therefore every
-    // survivor count and the final set, land identically on this corpus
-    // (the near-dup pair is J~0.95, far above any family's banding noise)
-    val (cOph, kOph) = leg("oph", sig = "oph")
-    assert(kOph == kBase)
-    assert(cOph("after_near_dedup") == cBase("after_near_dedup") &&
-      cOph("after_decontam") == cBase("after_decontam") &&
-      cOph("near_verified_pairs") == cBase("near_verified_pairs"))
-  }
 }
