@@ -99,17 +99,23 @@ object Corpus {
     * storage and shuffle volume to fixed-width rows. The pseudo-token
     * drop matches the string path exactly: only unigrams can match the
     * anchored [[DocIdPattern]] (multigrams contain a space), and unigram
-    * rows carry their string. */
+    * rows carry their string. Any input column besides `document_index`
+    * and `text` (e.g. the document's `sources`, [[Stats.documentSources]])
+    * rides along on every gram row of its document, after `tok`. */
   def tokenCountHashesFromNormalized(normalized: DataFrame, maxNgrams: Int,
       compatOffByOne: Boolean = false): DataFrame = {
     val maxN = maxDepth(maxNgrams, compatOffByOne)
+    val carry = normalized.columns.toSeq
+      .filterNot(Set("document_index", "text")).map(col)
     normalized
-      .select(col("document_index"),
-        graft.functions.ws_tokens(col("text")).as("tokens"))
-      .select(col("document_index"), size(col("tokens")).as("wc"),
-        explode(graft.functions.ngram_count_hashes(col("tokens"), maxN)).as("e"))
-      .select(col("document_index"), col("wc"), col("e.h").as("h"),
-        col("e.n").as("n"), col("e.tf").as("tf"), col("e.tok").as("tok"))
+      .select(col("document_index") +:
+        graft.functions.ws_tokens(col("text")).as("tokens") +: carry: _*)
+      .select(Seq(col("document_index"), size(col("tokens")).as("wc"),
+        explode(graft.functions.ngram_count_hashes(col("tokens"), maxN)).as("e")) ++
+        carry: _*)
+      .select(Seq(col("document_index"), col("wc"), col("e.h").as("h"),
+        col("e.n").as("n"), col("e.tf").as("tf"), col("e.tok").as("tok")) ++
+        carry: _*)
       .filter(col("n") =!= 1 ||
         !(col("tok").startsWith("nferdoccount_") &&
           col("tok").rlike(DocIdPattern)))

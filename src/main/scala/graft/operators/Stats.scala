@@ -2,16 +2,24 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** The stats spine (reference `compute_stats` +
   * `combine_corpus_with_sources`, `base.py:192-231`).
   *
   * Scale posture: the index->sources join broadcasts the small mapping
-  * (reference hinted the same, `base.py:223`); corpus⋈map shuffles on
-  * document_index once; both stats aggregations are partial+final hash
-  * aggs on their grouping keys. The `explode(sources)` fan-out happens
-  * AFTER the join, before the aggregation — one row per (doc, source),
-  * identical to the reference's dataflow.
+  * (reference hinted the same, `base.py:223`) and groups it to ONE row per
+  * document ([[documentSources]]), so sources attach at document
+  * granularity, before the n-gram kernel, instead of by a join over the
+  * exploded gram stream. The hashed job ([[computeScopedStatsHashed]])
+  * then expands each gram row into a global scope plus one scope per
+  * source and computes both stats tables in one partial+final hash
+  * aggregation: one exchange over the gram stream, fixed-width buffers,
+  * and an output-sized result. count and sum are decomposable, so
+  * aggregating both scopes in one pass is exact (eager aggregation, Yan &
+  * Larson, VLDB 1995). The string path keeps the reference's dataflow:
+  * [[combineCorpusWithSources]] fans each gram row out to one row per
+  * (doc, source) before [[computeStats]] aggregates each table.
   */
 object Stats {
 
@@ -28,62 +36,80 @@ object Stats {
 
   /** [[computeStats]] over the HASH-keyed gram frame
     * ([[graft.operators.Corpus.tokenCountHashesFromNormalized]] shape):
-    * aggregate DF/TF/tdsum by `(h[, extra])` — the exchange carries 8-byte
-    * keys instead of gram strings — then restore `token` at the
-    * vocab-sized OUTPUT: unigram strings ride the aggregation itself
-    * (`max(tok)`; non-null only on unigram rows, and all rows of one `h`
-    * are the same gram), multigram strings come from the broadcast
-    * vocabulary dictionary (post-filter multigrams are vocabulary members
-    * by construction). Column names/order match [[computeStats]] exactly.
+    * aggregate DF/TF/tdsum by `(h, tok[, extra])` (the exchange carries
+    * 8-byte keys, plus the string of unigram rows only), then restore
+    * `token` at the vocab-sized OUTPUT: unigram strings ride the grouping
+    * key itself (`tok`, non-null only on unigram rows), multigram strings
+    * come from the broadcast [[Vocabulary.hashIndex]] (post-filter
+    * multigrams are vocabulary members by construction). Column
+    * names/order match [[computeStats]] exactly.
     *
-    * Exactness caveat: two grams colliding on the full 64-bit
+    * Exactness caveat: two MULTIGRAMS colliding on the full 64-bit
     * `xxhash64(gram)` would merge one stats row (~n²/2⁶⁵ odds); the
     * hashed path is certified per corpus by A/B output equality against
-    * the string path (VspacePipelineSpec), not by construction. */
+    * the string path (VspacePipelineSpec), not by construction. A unigram
+    * never merges with another gram: its string is part of the key. */
   def computeStatsHashed(countsHashed: DataFrame, vocabulary: DataFrame,
-      extraGrouping: Seq[String]): DataFrame = {
-    // Vocabulary-side hash collisions are DETECTABLE in one vocab-sized
-    // aggregation (unlike the gram-stream side, which only the per-corpus
-    // A/B certifies), so detect them: a silent dropDuplicates pick would
-    // mislabel one token's stats with another's string. countDistinct on
-    // the token (not count(*)) so duplicate vocabulary ROWS — same string
-    // twice, legitimately deduped below — don't trip the guard.
-    val card = vocabulary.agg(
-      countDistinct(col("token")).as("t"),
-      countDistinct(xxhash64(col("token"))).as("h")).head()
-    if (card.getLong(0) != card.getLong(1))
-      throw new IllegalStateException(
-        s"computeStatsHashed: xxhash64 collision inside the vocabulary " +
-        s"(${card.getLong(0)} distinct tokens -> ${card.getLong(1)} " +
-        "distinct hashes) — the hashed stats path would mislabel a " +
-        "token's stats; use the string path (hashedstats = false)")
-    val dict = vocabulary
-      .select(xxhash64(col("token")).as("h"), col("token").as("__vtok"))
-      .dropDuplicates("h") // provably lossless: guard above ensures 1:1
+      extraGrouping: Seq[String]): DataFrame =
+    aggregateHashed(countsHashed, extraGrouping, Vocabulary.hashIndex(vocabulary))
+
+  /** Both hashed stats tables in ONE aggregation. `grams` is the
+    * vocabulary-filtered hash-keyed gram frame carrying each row's
+    * document `sources` (the corpus left-joined with [[documentSources]]
+    * before the n-gram kernel, so null when the document has none). Every
+    * gram row expands into the global scope (`global = true`, `source`
+    * null) plus one scope per element of `sources` (`global = false`; a
+    * null source stays distinct from the global scope); DF/TF/tdsum are
+    * aggregated by
+    * `(h, tok, global, source)` and the strings restored from `index`
+    * ([[Vocabulary.hashIndex]]). Output
+    * `(token, global, source, document_frequency, term_frequency, tdsum)`:
+    * the `global` rows are [[computeStatsHashed]] with no extra grouping,
+    * the others are [[computeStatsHashed]] over
+    * [[combineCorpusWithSources]] grouped by `source`, row for row. */
+  def computeScopedStatsHashed(grams: DataFrame, index: DataFrame): DataFrame = {
+    val scopes = concat(array(lit(null).cast(StringType)),
+      coalesce(col("sources"), typedLit(Seq.empty[String])))
+    val scoped = grams
+      .select(col("h"), col("tok"), col("tf"), col("wc"),
+        posexplode(scopes).as(Seq("scope", "source")))
+      .withColumn("global", col("scope") === 0)
+    aggregateHashed(scoped, Seq("global", "source"), index)
+  }
+
+  private def aggregateHashed(countsHashed: DataFrame, extraGrouping: Seq[String],
+      index: DataFrame): DataFrame =
     countsHashed
-      .groupBy(("h" +: extraGrouping).map(col): _*)
+      .groupBy((Seq("h", "tok") ++ extraGrouping).map(col): _*)
       .agg(count(lit(1)).as("document_frequency"),
         sum(col("tf")).as("term_frequency"),
-        sum(col("wc")).as("tdsum"),
-        max(col("tok")).as("__utok"))
-      .join(broadcast(dict), Seq("h"), "left")
-      .select(coalesce(col("__utok"), col("__vtok")).as("token") +:
+        sum(col("wc")).as("tdsum"))
+      .join(broadcast(index.withColumnRenamed("token", "__vtok")), Seq("h"), "left")
+      .select(coalesce(col("tok"), col("__vtok")).as("token") +:
         (extraGrouping.map(col) ++
           Seq(col("document_frequency"), col("term_frequency"),
             col("tdsum"))): _*)
-  }
 
-  /** index ⋈ broadcast(sources) on subsource, then corpus ⋈ map on
-    * document_index, then explode to one row per (doc, source). */
-  def combineCorpusWithSources(corpus: DataFrame, index: DataFrame,
-      sources: DataFrame): DataFrame = {
-    val sourceDocumentMap = index
+  /** The doc -> sources map: index ⋈ broadcast(sources) on subsource,
+    * grouped to ONE row per document. `sources` is the multiset over all
+    * the document's index rows, each contributing the sources that claim
+    * its subsource, so a document listed under two subsources that one
+    * source both claims appears under that source twice, exactly as in the
+    * reference's row-level join. Documents with no index row, or whose
+    * subsources no source claims, have no row. */
+  def documentSources(index: DataFrame, sources: DataFrame): DataFrame =
+    index
       .select(col("document_index"), col("subsource"))
       .join(broadcast(sources), Seq("subsource"))
-      .drop("subsource")
+      .groupBy(col("document_index"))
+      .agg(flatten(collect_list(col("sources"))).as("sources"))
+
+  /** corpus ⋈ [[documentSources]] on document_index, then explode to one
+    * row per (row, source). */
+  def combineCorpusWithSources(corpus: DataFrame, index: DataFrame,
+      sources: DataFrame): DataFrame =
     corpus
-      .join(sourceDocumentMap, Seq("document_index"))
+      .join(documentSources(index, sources), Seq("document_index"))
       .withColumn("source", explode(col("sources")))
       .drop("sources")
-  }
 }

@@ -82,13 +82,46 @@ object Vocabulary {
     * `h` column against `xxhash64(vocabulary.token)` instead of on gram
     * strings, with the unigram bypass read from the explicit gram order
     * `n` instead of from a contains-space test. */
-  def hashedSemiJoinFilter(df: DataFrame, vocabulary: DataFrame): DataFrame = {
-    val marked = vocabulary
-      .select(xxhash64(col("token")).as("h")).distinct()
-      .withColumn("__invocab", lit(true))
+  def hashedSemiJoinFilter(df: DataFrame, vocabulary: DataFrame): DataFrame =
+    hashIndexFilter(df,
+      vocabulary.select(xxhash64(col("token")).as("h")).distinct())
+
+  /** [[hashedSemiJoinFilter]] against a frame whose `h` column is already
+    * distinct, such as [[hashIndex]]: no `distinct` exchange on the
+    * vocabulary side. */
+  def hashIndexFilter(df: DataFrame, index: DataFrame): DataFrame = {
+    val marked = index.select(col("h"), lit(true).as("__invocab"))
     df.join(marked, Seq("h"), "left")
       .filter(col("n") === 1 || col("__invocab"))
       .select(df.columns.map(col): _*)
+  }
+
+  /** The vocabulary as a hash index `(h, token)`, `h = xxhash64(token)`,
+    * one row per `h`: the dictionary the hashed stats path probes for
+    * membership ([[hashIndexFilter]]) and restores gram strings from
+    * ([[Stats.computeStatsHashed]]).
+    *
+    * Vocabulary-side hash collisions are DETECTABLE in one vocab-sized
+    * aggregation (unlike the gram-stream side, which only the per-corpus
+    * A/B certifies), so this detects them and throws: silently keeping
+    * one string per hash would mislabel one token's stats with another's
+    * string. countDistinct on the token (not count(*)) so duplicate
+    * vocabulary ROWS (the same string twice, legitimately deduped) don't
+    * trip the guard. The guard runs one job when this is called, so build
+    * the index once per run. */
+  def hashIndex(vocabulary: DataFrame): DataFrame = {
+    val card = vocabulary.agg(
+      countDistinct(col("token")).as("t"),
+      countDistinct(xxhash64(col("token"))).as("h")).head()
+    if (card.getLong(0) != card.getLong(1))
+      throw new IllegalStateException(
+        s"hashIndex: xxhash64 collision inside the vocabulary " +
+        s"(${card.getLong(0)} distinct tokens -> ${card.getLong(1)} " +
+        "distinct hashes) — the hashed stats path would mislabel a " +
+        "token's stats; use the string path (hashedstats = false)")
+    // one row per h: the guard makes (h, token) pairs 1:1, and distinct
+    // (unlike dropDuplicates' first(token) buffer) stays a hash aggregate
+    vocabulary.select(xxhash64(col("token")).as("h"), col("token")).distinct()
   }
 
   /** Reference-shaped path: vocabulary collected once, broadcast as a

@@ -2,9 +2,8 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Corpus, Sinks, Stats, Vocabulary}
@@ -32,10 +31,10 @@ final case class VspaceConfig(
       * multi-file corpora (see CorpusSources.loadRawCorpusV2). */
     corpusReader: String = "builtin",
     /** Key the gram stream by `xxhash64(gram)` instead of gram strings
-      * through the counts materialization, vocabulary probe, and both
-      * stats exchanges, restoring strings at the vocab-sized stats
-      * output (Corpus.tokenCountHashesFromNormalized +
-      * Stats.computeStatsHashed). Same five outputs, same rows.
+      * through the vocabulary probe and the stats exchange, restoring
+      * strings at the vocab-sized stats output
+      * (Corpus.tokenCountHashesFromNormalized +
+      * Stats.computeScopedStatsHashed). Same five outputs, same rows.
       *
       * DEFAULT since round 14 (measured 85.02 vs 35.50 GB/h on the
       * 13.18 GB corpus — the 8-byte keys remove the gram-string bytes
@@ -44,7 +43,7 @@ final case class VspaceConfig(
       * The string path remains selectable (`hashedstats = false`) as the
       * independent A/B witness: VspacePipelineSpec certifies both stats
       * tables bit-equal between the paths every build, vocabulary-side
-      * hash collisions fail loudly (Stats.computeStatsHashed's
+      * hash collisions fail loudly (Vocabulary.hashIndex's
       * cardinality guard), and the residual gram-stream collision risk
       * (~n²/2⁶⁵) is certified per corpus by the same A/B when a corpus
       * warrants it. */
@@ -102,42 +101,56 @@ object VspaceConfig {
 }
 
 /** End-to-end vspace pipeline (reference `main()`, `base.py:306-441`):
-  * vocabulary job -> corpus job -> stats job, with the same persist points
-  * (vocabulary consumed twice, corpus consumed twice) and the same five
-  * outputs. One Catalyst plan per output; the only driver materialization
-  * is the optional BroadcastSetFilter path.
+  * vocabulary job -> corpus job -> stats job, with the same five outputs.
+  * The vocabulary and the normalized corpus are persisted (each consumed
+  * twice). On the default hashed path the stats job is ONE pass over the
+  * gram stream ([[Stats.computeScopedStatsHashed]]): sources attach per
+  * document before the n-gram kernel, one hash aggregation computes both
+  * stats tables, and only its output-sized result is persisted; the gram
+  * stream itself is never cached. The string path keeps the reference's
+  * two-pass shape over a persisted gram stream, as the independent
+  * witness VspacePipelineSpec compares the hashed path against.
   */
 object VspacePipeline {
 
-  /** SPARK_GRAFT_VSPACE_LAPS=1: print a per-action wall-time lap to stderr
-    * (vocabulary sink / normalized-corpus sink / n-gram+filter materialize
-    * / per-source stats / global stats). Laps mode additionally forces the
-    * `counts` cache through a count() action between the corpus and stats
-    * jobs so "per-doc n-gram CPU" is separately timeable from "stats
-    * joins+agg+sinks" — a measurement-only materialization production
-    * rounds don't pay (the Dedup profile-mode convention: the split is the
-    * signal, not the absolute sum). */
+  /** SPARK_GRAFT_VSPACE_LAPS=1: print each per-action wall-time lap
+    * (vocabulary sink / normalized-corpus sink / per-source stats / global
+    * stats) to stderr as well. */
   private val Laps = sys.env.get("SPARK_GRAFT_VSPACE_LAPS").contains("1")
-
-  /** SPARK_GRAFT_VSPACE_NOCACHE=1: do NOT persist the filtered n-gram
-    * `counts` frame between its two stats consumers — each recomputes from
-    * the cached normalized corpus instead. Measurement lever for the
-    * round-12 stage-lap question: the counts frame is the exploded ≤6-gram
-    * stream (~12 B rows at 13 GB input), and materializing it into the
-    * block store costs serialization + spill I/O that recomputation from
-    * `norm` (one cache read + the codegen'd gram kernel) may undercut now
-    * that the per-doc CPU is fused. */
-  private val NoCacheCounts = sys.env.get("SPARK_GRAFT_VSPACE_NOCACHE").contains("1")
 
   /** `onLap` receives (stage, seconds) after each output action — always,
     * not just under SPARK_GRAFT_VSPACE_LAPS (ThroughputBench persists the
     * laps into its artifact; round-13 lesson: stage tables that live only
-    * in stderr get lost with the window). The laps-only extra
-    * materialization between the corpus and stats jobs stays gated. */
+    * in stderr get lost with the window). On the hashed path the one stats
+    * pass runs inside `per_source_stats`; `global_stats` writes from its
+    * persisted result.
+    *
+    * The session's `spark.sql.shuffle.partitions` (set from `cfg.splits`)
+    * and the caller's job group are restored on return. */
   def run(spark: SparkSession, cfg: VspaceConfig,
-      useBroadcastFilter: Boolean = false,
       onLap: (String, Double) => Unit = (_, _) => ()): Unit = {
-    cfg.splits.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
+    val sc = spark.sparkContext
+    val jobGroupProps = Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel")
+    val callerJobGroup = jobGroupProps.map(k => k -> sc.getLocalProperty(k))
+    val callerPartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persist(df: DataFrame): DataFrame = {
+      persisted += df; df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    try {
+      cfg.splits.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
+      runJobs(spark, cfg, persist, onLap)
+    } finally {
+      persisted.foreach(_.unpersist())
+      callerJobGroup.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      spark.conf.set("spark.sql.shuffle.partitions", callerPartitions)
+    }
+  }
+
+  private def runJobs(spark: SparkSession, cfg: VspaceConfig,
+      persist: DataFrame => DataFrame,
+      onLap: (String, Double) => Unit): Unit = {
     val out = cfg.outputFolder
     // stage attribution in the Spark UI (reference sets a job group per
     // stage the same way, base.py:341,362,373,399)
@@ -154,16 +167,11 @@ object VspacePipeline {
 
     // --- vocabulary job (reference base.py:341-371) ---
     stage("vocabulary")
-    val vocabulary = Vocabulary.build(
+    val vocabulary = persist(Vocabulary.build(
       CorpusSources.loadPhrases(spark, cfg.phrases),
-      CorpusSources.loadCollections(spark, cfg.collections))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      CorpusSources.loadCollections(spark, cfg.collections)))
     Sinks.writeVocabulary(vocabulary, s"$out/vocabulary")
     lap("vocabulary")
-
-    val tokenFilter =
-      if (useBroadcastFilter) Vocabulary.BroadcastSetFilter(spark, vocabulary)
-      else Vocabulary.SemiJoinFilter(vocabulary)
 
     // --- corpus job (reference base.py:373-397) ---
     stage("corpus")
@@ -180,44 +188,47 @@ object VspacePipeline {
     // otherwise scanned + zipWithIndex'd + NFC-normalized twice. At cluster
     // scale the persist spills to local disk; that's still cheaper than a
     // second normalize pass over the full corpus.
-    val norm = Corpus.normalized(raw).persist(StorageLevel.MEMORY_AND_DISK)
+    val norm = persist(Corpus.normalized(raw))
     Sinks.writeNormalizedCorpus(norm, s"$out/normalized_corpus")
     lap("read+normalize+corpus_sink")
-    val countsBase =
-      if (cfg.hashedStats)
-        Vocabulary.hashedSemiJoinFilter(
-          Corpus.tokenCountHashesFromNormalized(norm, cfg.maxNgrams,
-            cfg.compatOffByOne), vocabulary)
-      else tokenFilter(
-        Corpus.tokenCountsFromNormalized(norm, cfg.maxNgrams, cfg.compatOffByOne),
-          "token")
-    val counts =
-      if (NoCacheCounts) countsBase
-      else countsBase.persist(StorageLevel.MEMORY_AND_DISK)
-    if (Laps && !NoCacheCounts) {
-      counts.count(); lap("ngrams+vocab_filter (laps-only materialize)")
-    }
 
     // --- stats job (reference base.py:399-439) ---
     stage("stats")
     val index   = CorpusSources.loadIndex(spark, cfg.index2doc)
     val sources = CorpusSources.loadSources(spark, cfg.src2sub)
-    val withSources = Stats.combineCorpusWithSources(counts, index, sources)
-    Sinks.writeStatsBySource(
-      if (cfg.hashedStats)
-        Stats.computeStatsHashed(withSources, vocabulary, Seq("source"))
-      else Stats.computeStats(withSources, Seq("token", "source")),
-      s"$out/stats_by_source")
-    lap("per_source_stats")
-    Sinks.writeStatsGlobal(
-      if (cfg.hashedStats) Stats.computeStatsHashed(counts, vocabulary, Seq.empty)
-      else Stats.computeStats(counts, Seq("token")),
-      s"$out/stats_global")
-    lap("global_stats")
-
-    if (!NoCacheCounts) counts.unpersist()
-    norm.unpersist()
-    vocabulary.unpersist()
+    if (cfg.hashedStats) {
+      val vocabIndex = persist(Vocabulary.hashIndex(vocabulary))
+      // sources attach per document, before the n-gram kernel
+      val withSources = norm.join(Stats.documentSources(index, sources),
+        Seq("document_index"), "left")
+      val grams = Vocabulary.hashIndexFilter(
+        Corpus.tokenCountHashesFromNormalized(withSources, cfg.maxNgrams,
+          cfg.compatOffByOne),
+        vocabIndex)
+      val stats = persist(Stats.computeScopedStatsHashed(grams, vocabIndex))
+      val measures = Seq("document_frequency", "term_frequency", "tdsum").map(col)
+      Sinks.writeStatsBySource(
+        stats.filter(!col("global"))
+          .select(col("token") +: col("source") +: measures: _*),
+        s"$out/stats_by_source")
+      lap("per_source_stats")
+      Sinks.writeStatsGlobal(
+        stats.filter(col("global")).select(col("token") +: measures: _*),
+        s"$out/stats_global")
+      lap("global_stats")
+    } else {
+      val counts = persist(Vocabulary.SemiJoinFilter(vocabulary)(
+        Corpus.tokenCountsFromNormalized(norm, cfg.maxNgrams, cfg.compatOffByOne),
+        "token"))
+      Sinks.writeStatsBySource(
+        Stats.computeStats(Stats.combineCorpusWithSources(counts, index, sources),
+          Seq("token", "source")),
+        s"$out/stats_by_source")
+      lap("per_source_stats")
+      Sinks.writeStatsGlobal(Stats.computeStats(counts, Seq("token")),
+        s"$out/stats_global")
+      lap("global_stats")
+    }
   }
 
   def main(args: Array[String]): Unit = {

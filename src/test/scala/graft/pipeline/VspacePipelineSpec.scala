@@ -1,10 +1,16 @@
 package graft.pipeline
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.functions.NGramCountHashes
 import graft.operators.{Corpus, Stats, Vocabulary}
 import graft.sources.CorpusSources
 
@@ -257,5 +263,150 @@ class VspacePipelineSpec extends SparkSpec {
         "source", regexp_extract(input_file_name(), "source=([^/]+)", 1))
       .collect().map(_.toSeq).toSet
     assert(bySourceSet(out3) == bySourceSet(out))
+  }
+
+  /** Edge-shape fixture for the stats job: a document with two index rows
+    * (different subsources), a document with no index row, a subsource
+    * claimed by two sources, and a subsource claimed by none.
+    *   doc0 "Big data systems."  [big, data, systems]  index sub1 + sub2
+    *   doc1 "data, data big"     [data, data, big]     index sub3 (unclaimed)
+    *   doc2 "Spark data"         [spark, data]         no index row
+    *   doc3 "big data"           [big, data]           index sub1
+    * sub1 -> SRC_A, SRC_B; sub2 -> SRC_B; so doc0's sources are the
+    * multiset {SRC_A, SRC_B, SRC_B} and doc3's {SRC_A, SRC_B}. */
+  private lazy val edgeDir = graft.SparkSpec.tempDir("vspace-edge")
+
+  private lazy val edgeConfig: VspaceConfig = {
+    val delim = CorpusSources.RecordDelimiter
+    def write(name: String, text: String): String = {
+      val p = s"$edgeDir/$name"; Files.writeString(Paths.get(p), text); p
+    }
+    VspaceConfig(
+      stagingLoc = s"$edgeDir/staging",
+      outputFolder = s"$edgeDir/out",
+      maxNgrams = 2,
+      splits = None,
+      corpus = write("corpus.txt", Seq("Big data systems.", "data, data big",
+        "Spark data", "big data").mkString(s" $delim ")),
+      index2doc = write("index.tsv", Seq(
+        "0\thttp://a\tsub1\t2020\t\tT0\tA\t\t\t",
+        "0\thttp://a\tsub2\t2020\t\tT0\tA\t\t\t",
+        "1\thttp://b\tsub3\t2021\t\tT1\tB\t\t\t",
+        "3\thttp://d\tsub1\t2022\t\tT3\tD\t\t\t").mkString("\n")),
+      src2sub = write("src2sub.txt", Seq("SRC_A sub1", "SRC_B sub1,sub2").mkString("\n")),
+      collections = write("collections.txt", "data_big"),
+      phrases = write("phrases.txt", "big_data extra"))
+  }
+
+  private type Measures = (Long, Long, Long)
+
+  /** Both stats tables a run wrote under `out`: token -> (DF, TF, tdsum)
+    * and (token, source) -> (DF, TF, tdsum). */
+  private def readStats(out: String): (Map[String, Measures], Map[(String, String), Measures]) = {
+    val schema = "token STRING, document_frequency LONG, term_frequency LONG, tdsum LONG"
+    def read(table: String) = spark.read.schema(schema).option("delimiter", "\t")
+      .csv(s"$out/$table")
+    def measures(r: org.apache.spark.sql.Row): Measures = (r.getLong(1), r.getLong(2), r.getLong(3))
+    val global = read("stats_global").collect().map(r => r.getString(0) -> measures(r))
+    val bySource = read("stats_by_source")
+      .withColumn("source", regexp_extract(input_file_name(), "source=([^/]+)", 1))
+      .collect().map(r => (r.getString(0), r.getString(4)) -> measures(r))
+    assert(global.length == global.toMap.size && bySource.length == bySource.toMap.size,
+      "a stats table repeats a key")
+    (global.toMap, bySource.toMap)
+  }
+
+  test("edge-shape index: hashed stats equal the string path and hand-checked values") {
+    val hashed = readStats {
+      VspacePipeline.run(spark, edgeConfig.copy(outputFolder = s"$edgeDir/hashed"))
+      s"$edgeDir/hashed"
+    }
+    val string = readStats {
+      VspacePipeline.run(spark, edgeConfig.copy(outputFolder = s"$edgeDir/string",
+        hashedStats = false))
+      s"$edgeDir/string"
+    }
+    assert(hashed == string)
+    val (global, bySource) = hashed
+    // doc0 counts ONCE in global DF despite its two index rows; doc2 (no
+    // index row) and doc1 (unclaimed subsource) count too
+    assert(global == Map(
+      "big" -> ((3L, 3L, 8L)), "data" -> ((4L, 5L, 10L)),
+      "systems" -> ((1L, 1L, 3L)), "spark" -> ((1L, 1L, 2L)),
+      "big data" -> ((2L, 2L, 5L)), "data big" -> ((1L, 1L, 3L))))
+    // SRC_A: docs 0, 3. SRC_B: doc0 twice (sub1 and sub2), doc3. Neither
+    // doc1 nor doc2 reaches any source.
+    assert(bySource == Map(
+      ("big", "SRC_A") -> ((2L, 2L, 5L)), ("data", "SRC_A") -> ((2L, 2L, 5L)),
+      ("systems", "SRC_A") -> ((1L, 1L, 3L)), ("big data", "SRC_A") -> ((2L, 2L, 5L)),
+      ("big", "SRC_B") -> ((3L, 3L, 8L)), ("data", "SRC_B") -> ((3L, 3L, 8L)),
+      ("systems", "SRC_B") -> ((2L, 2L, 6L)), ("big data", "SRC_B") -> ((3L, 3L, 8L))))
+  }
+
+  test("run restores the caller's shuffle partitions and job group") {
+    val sc = spark.sparkContext
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    sc.setJobGroup("caller", "caller jobs", interruptOnCancel = false)
+    try {
+      VspacePipeline.run(spark, edgeConfig.copy(outputFolder = s"$edgeDir/splits",
+        splits = Some(7)))
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller")
+    } finally sc.clearJobGroup()
+  }
+
+  /** Children of `p`, looking through adaptive wrappers, query stages,
+    * reused exchanges and cached relations. */
+  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+    case other => other.children
+  }
+
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+
+  private def isGramGenerate(p: SparkPlan): Boolean = p match {
+    case g: GenerateExec => g.generator.exists(_.isInstanceOf[NGramCountHashes])
+    case _ => false
+  }
+
+  /** True when the rows of `p` are the gram stream: the n-gram Generate
+    * reaches `p` without crossing an exchange. */
+  private def carriesGrams(p: SparkPlan): Boolean =
+    isGramGenerate(p) || (!p.isInstanceOf[Exchange] && kids(p).exists(carriesGrams))
+
+  test("hashed stats plan: hash aggregates only, one gram-stream exchange, no cached gram stream") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val stats = try {
+      VspacePipeline.run(spark, edgeConfig.copy(outputFolder = s"$edgeDir/lint"))
+      // execution-listener dispatch is async: wait for both stats writes
+      def statsPlans = plans.toArray(Array.empty[SparkPlan]).toSeq
+        .filter(nodes(_).exists(isGramGenerate))
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (statsPlans.length < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      statsPlans
+    } finally spark.listenerManager.unregister(listener)
+    assert(stats.length == 2, s"expected the two stats writes, got ${stats.length} plans")
+    val all = stats.flatMap(nodes)
+    val sortAggs = all.collect { case a: SortAggregateExec => a.simpleString(200) }
+    assert(sortAggs.isEmpty, s"stats aggregations fell back to SortAggregate: $sortAggs")
+    val gramExchanges = all.collect { case e: Exchange if e.children.exists(carriesGrams) => e }
+      .foldLeft(List.empty[Exchange])((seen, e) => if (seen.exists(_ eq e)) seen else e :: seen)
+    assert(gramExchanges.length == 1,
+      s"expected one exchange over the gram stream, got ${gramExchanges.length}")
+    assert(!all.exists {
+      case m: InMemoryTableScanExec => carriesGrams(m.relation.cachedPlan)
+      case _ => false
+    }, "the gram stream is cached")
   }
 }
