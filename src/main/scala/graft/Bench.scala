@@ -19,9 +19,7 @@ import graft.queries.Catalog
   * the session is rebuilt and the run continues.
   */
 object Bench {
-  private val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-  private val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-    Runtime.getRuntime.availableProcessors().toString)
+  private val sfDir = Sessions.sfDir
 
   /** Host-health canaries ([[HostCanary]]), timed immediately before every
     * rep. A rep whose SERIAL canary exceeds 1.5x the run's clean median ran
@@ -110,26 +108,7 @@ object Bench {
       System.err.println(s"[bench] canary-ref save failed (ignored): $e")
     }
 
-  private def newSession(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // testdata parquet files are single-row-group and would scan as ONE
-      // partition, serializing CPU-bound per-row work; force splittable
-      // scans (no-op at cluster scale where files exceed maxPartitionBytes)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the harness box freezes the whole JVM for seconds at a time; default
-      // 120s/10s timeouts have produced spurious mid-run RPC failures
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.rpc.askTimeout", "600s")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def newSession(): SparkSession = Sessions.local("graft-bench")
 
   def main(args: Array[String]): Unit = {
     // every emitted JSON line is built with the f-interpolator, which

@@ -17,7 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * sf0.1 gate. Each kernel here is the measured-hot composed form of one
   * catalog query, replaced by a bit-equal one-pass loop (equality pinned
   * per kernel in FoldKernelsSpec on real corpus text; hot/not-hot verdicts
-  * measured by [[graft.tools.HofLap]] at pipeline scale).
+  * measured composed vs fused at pipeline scale, SURVEY.md "The
+  * interpreted-HOF hunt").
   */
 
 /** Max element multiplicity of a string array (q57b's top-bigram mode) —
@@ -197,9 +198,10 @@ case class SharedSpanStats(left: Expression, right: Expression, w: Int)
   * `array_max(transform(array_distinct(g), x => size(filter(g, y => y === x))))`
   * over the materialized gram array) WITHOUT ever materializing the gram
   * array: one pass building each space-joined gram in place and counting
-  * multiplicities in a hash map. The round-12 HofLap measured that fusing
-  * only the terminal fold (top_count over a composed word_ngrams array)
-  * was NEUTRAL at pipeline scale — the interpreted per-position
+  * multiplicities in a hash map. The round-12 composed-vs-fused laps
+  * (SURVEY.md "The interpreted-HOF hunt") measured that fusing only the
+  * terminal fold (top_count over a composed word_ngrams array) was
+  * NEUTRAL at pipeline scale — the interpreted per-position
   * slice+array_join gram construction was the cost, exactly like round
   * 11's shingle kernels. Fewer than n tokens -> null (top_count of the
   * empty gram array); null tokens skipped within a gram like array_join.

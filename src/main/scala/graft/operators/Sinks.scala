@@ -16,9 +16,10 @@ object Sinks {
 
   /** W2: normalized corpus. The reference dumps Python tuple reprs via
     * saveAsTextFile (`base.py:394`); we keep it structured. zstd codec per
-    * the r15 IoLap adjudication (−32% bytes vs snappy at equal clean-window
-    * write time on the corpus-text shape; at 100 TB this intermediate is
-    * every downstream reader's scan cost) — this is the pipeline's one
+    * the r15 codec laps (`bench-artifacts/iolap-write-11p3g.json`: −32%
+    * bytes vs snappy at equal clean-window write time on the corpus-text
+    * shape; at 100 TB this intermediate is every downstream reader's scan
+    * cost) — this is the pipeline's one
     * non-reference-faithful intermediate, the W1/W3/W4 TSV sinks keep the
     * reference's text contract untouched. */
   def writeNormalizedCorpus(df: DataFrame, path: String): Unit =

@@ -148,43 +148,6 @@ object Vocabulary {
       vocabulary.select(col("token").as(tokenCol), col("tokenid")),
       Seq(tokenCol), "left")
 
-  /** Reference-shaped id lookup: (token, tokenid) collected once, broadcast
-    * as parallel sorted arrays, probed per row by binary search — the
-    * id-keyed DAWG's `__getitem__` without the trie. Bounded by driver
-    * memory, like [[BroadcastSetFilter]]. */
-  final class BroadcastIdMap(bc: Broadcast[(Array[String], Array[Long])])
-      extends Serializable {
-    def attach(df: DataFrame, tokenCol: String,
-        idCol: String = "tokenid"): DataFrame = {
-      val localBc = bc
-      val lookup = udf { t: String =>
-        val (toks, ids) = localBc.value
-        val i = Arrays.binarySearch(toks.asInstanceOf[Array[AnyRef]], t)
-        if (i >= 0) Some(ids(i)) else None
-      }
-      df.withColumn(idCol, lookup(col(tokenCol)))
-    }
-  }
-
-  object BroadcastIdMap {
-    /** Same executor-side range-sort + driver re-sort discipline as
-      * [[BroadcastSetFilter.apply]]; ids ride along with their tokens. */
-    def apply(spark: SparkSession, vocabulary: DataFrame,
-        numPartitions: Int = 20): BroadcastIdMap = {
-      val pairs = vocabulary
-        .select(col("token"), col("tokenid").cast("long"))
-        .na.drop()
-        .filter(length(trim(col("token"))) =!= 0)
-        .repartitionByRange(numPartitions, col("token"))
-        .sortWithinPartitions("token")
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-        .sortBy(_._1) // UTF-16 re-sort, matches binarySearch's comparator
-      new BroadcastIdMap(spark.sparkContext.broadcast(
-        (pairs.map(_._1), pairs.map(_._2))))
-    }
-  }
-
   object BroadcastSetFilter {
     /** Range-partition + in-partition sort before collecting (the
       * reference's DAWG prep, `dawg.py:96-98`): executors do the sort work

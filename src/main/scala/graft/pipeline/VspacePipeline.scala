@@ -50,8 +50,12 @@ final case class VspaceConfig(
     hashedStats: Boolean = true)
 
 object VspaceConfig {
-  /** Minimal INI parser: `[section]` headers, `key = value` pairs, `#`/`;`
-    * comments. No external deps. */
+  /** Minimal INI parser with ConfigParser's key rules: `[section]`
+    * headers (case-sensitive), `key = value` or `key: value` pairs split
+    * at the first `=` or `:`, option names lowercased (`optionxform`),
+    * `#`/`;` comments, and — as under ConfigParser's default
+    * `strict=True` — a section or an option (after lowercasing) given
+    * twice is an error, not a silent overwrite. No external deps. */
   def parseIni(text: String): Map[String, Map[String, String]] = {
     var section = ""
     val out = scala.collection.mutable.Map[String, scala.collection.mutable.Map[String, String]]()
@@ -60,12 +64,16 @@ object VspaceConfig {
       .foreach { l =>
         if (l.startsWith("[") && l.endsWith("]")) {
           section = l.substring(1, l.length - 1).trim
-          out.getOrElseUpdate(section, scala.collection.mutable.Map())
-        } else l.split("=", 2) match {
-          case Array(k, v) =>
-            out.getOrElseUpdate(section, scala.collection.mutable.Map())
-              .update(k.trim, v.trim)
-          case _ => ()
+          require(!out.contains(section), s"duplicate INI section [$section]")
+          out(section) = scala.collection.mutable.Map()
+        } else {
+          val i = l.indexWhere(c => c == '=' || c == ':')
+          if (i > 0) {
+            val key  = l.substring(0, i).trim.toLowerCase(java.util.Locale.ROOT)
+            val opts = out.getOrElseUpdate(section, scala.collection.mutable.Map())
+            require(!opts.contains(key), s"duplicate INI option '$key' in [$section]")
+            opts(key) = l.substring(i + 1).trim
+          }
         }
       }
     out.map { case (k, v) => k -> v.toMap }.toMap
@@ -83,8 +91,7 @@ object VspaceConfig {
       s"corpusreader must be 'builtin' or 'v2', got '$reader'")
     VspaceConfig(
       stagingLoc   = conf.getOrElse("stagingloc", "/tmp/vspace-staging"),
-      outputFolder = conf.getOrElse("outputFolder",
-        conf.getOrElse("outputfolder", "/tmp/vspace-out")),
+      outputFolder = conf.getOrElse("outputfolder", "/tmp/vspace-out"),
       maxNgrams    = conf.getOrElse("maxngrams", "3").toInt,
       splits       = conf.get("splits").map(_.toInt),
       corpus       = in("corpus"),
@@ -113,15 +120,11 @@ object VspaceConfig {
   */
 object VspacePipeline {
 
-  /** SPARK_GRAFT_VSPACE_LAPS=1: print each per-action wall-time lap
+  /** `onLap` receives (stage, seconds) after each output action
     * (vocabulary sink / normalized-corpus sink / per-source stats / global
-    * stats) to stderr as well. */
-  private val Laps = sys.env.get("SPARK_GRAFT_VSPACE_LAPS").contains("1")
-
-  /** `onLap` receives (stage, seconds) after each output action — always,
-    * not just under SPARK_GRAFT_VSPACE_LAPS (ThroughputBench persists the
-    * laps into its artifact; round-13 lesson: stage tables that live only
-    * in stderr get lost with the window). On the hashed path the one stats
+    * stats); ThroughputBench persists the laps into its artifact (round-13
+    * lesson: stage tables that live only in stderr get lost with the
+    * window). On the hashed path the one stats
     * pass runs inside `per_source_stats`; `global_stats` writes from its
     * persisted result.
     *
@@ -159,8 +162,6 @@ object VspacePipeline {
     var tLap = System.nanoTime()
     def lap(name: String): Unit = {
       val now = System.nanoTime()
-      if (Laps)
-        System.err.println(f"[vspace-lap] $name: ${(now - tLap) / 1e9}%.1f s")
       onLap(name, (now - tLap) / 1e9)
       tLap = now
     }
@@ -176,8 +177,8 @@ object VspacePipeline {
     // --- corpus job (reference base.py:373-397) ---
     stage("corpus")
     // guarded here as well as in VspaceConfig.load: a directly-constructed
-    // config (ThroughputBench's env passthrough) must not silently fall
-    // back to the builtin reader on a typo'd name
+    // config must not silently fall back to the builtin reader on a typo'd
+    // name
     require(Set("builtin", "v2").contains(cfg.corpusReader),
       s"corpusReader must be 'builtin' or 'v2', got '${cfg.corpusReader}'")
     val raw =
@@ -236,9 +237,7 @@ object VspacePipeline {
     val spark = SparkSession.builder()
       .appName("graft-vspace")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS",
-          Runtime.getRuntime.availableProcessors().toString))
+      .config("spark.sql.shuffle.partitions", graft.Sessions.cpus.toString)
       .getOrCreate()
     try run(spark, cfg) finally spark.stop()
   }

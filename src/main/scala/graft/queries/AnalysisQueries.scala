@@ -488,9 +488,10 @@ object AnalysisQueries {
     Q("q57b_gopher_repetition",
       (s, dir) => {
         val toks = split(col("text"), " ")
-        // Fully gram-free (round 12): the HofLap lap showed fusing only the
-        // terminal mode fold was NEUTRAL at pipeline scale — the
-        // interpreted word_ngrams ARRAY construction was the cost (the r11
+        // Fully gram-free (round 12): the composed-vs-fused laps (SURVEY.md
+        // "The interpreted-HOF hunt") showed fusing only the terminal
+        // mode fold was NEUTRAL at pipeline scale — the interpreted
+        // word_ngrams ARRAY construction was the cost (the r11
         // shingle lesson again). Now: distinct counts via the fused
         // word_ngrams_distinct, raw gram counts computed arithmetically
         // (word_ngram_count — the transform's output length), and the mode

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Catalog
 
 /** ANN family benchmark: retrieval latency + recall@10 for every
@@ -18,10 +16,7 @@ import graft.queries.Catalog
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.tools.AnnBench"
   */
 object AnnBench {
-  private val sfDir =
-    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-  private val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-    Runtime.getRuntime.availableProcessors().toString)
+  private val sfDir = graft.Sessions.sfDir
 
   // (family, top-k query, paired recall query; brute force IS the oracle)
   private val families = Seq(
@@ -33,17 +28,7 @@ object AnnBench {
     ("rerank", "q49c_ivfpq_rerank", Some("q49d_rerank_recall")))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("graft-ann-bench")
 
     def run(name: String): Unit =
       Catalog.byName(name).fn(spark, sfDir)

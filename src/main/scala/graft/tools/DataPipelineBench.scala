@@ -29,13 +29,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object DataPipelineBench {
 
-  /** Scan split size derived from corpus scale the way the shuffle
-    * partition count already is (~128/GB): 512 MiB at >= 10 GB corpora
-    * (measured ~7% scan-stage win, IoLap), Spark's 128 MiB default below
-    * (where bigger splits under-parallelize the scan). */
-  def derivedMaxPartitionBytes(targetGB: Double): Long =
-    if (targetGB >= 10.0) 512L << 20 else 128L << 20
-
   /** Duplicate-mix selector (SPARK_GRAFT_DP_MIX): group size of the
     * generator's controlled duplicate structure.
     *  - `dense` (default): 5-row groups — 20% exact dups, near-dup
@@ -52,42 +45,18 @@ object DataPipelineBench {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // dot-decimal JSON under any host locale
     val targetGB = if (args.length > 0) args(0).toDouble else 2.0
     val workDir  = if (args.length > 1) args(1) else "target/dpbench"
-    val cpus     = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val sfDir    = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus     = graft.Sessions.cpus
+    val sfDir    = graft.Sessions.sfDir
 
-    // shuffle partitions track data volume (the ThroughputBench sizing
-    // note): the band-key and verification shuffles carry corpus-order
-    // bytes, and ~128 partitions/GB keeps a task's slice ~100 MB
-    val shufflePartitions = math.max(cpus.toInt, (targetGB * 128).toInt)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .appName("graft-data-pipeline")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // scan split size derives from corpus scale the way shuffle
-      // partitions do (round 16, VERDICT #5): >= 10 GB → 512m (IoLap
-      // r15/r16: ~7% on the scan+score stage, guide §6's "512 MB - 1 GB
-      // splits for large sequential scans"), below → Spark's 128m default
-      // (a static 512m splits a 2 GB corpus into ~4 scan tasks and idles
-      // the other 28 cores — the hazard that blocked a static default)
-      .config("spark.sql.files.maxPartitionBytes",
-        derivedMaxPartitionBytes(targetGB).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      // Serialized checkpoint blocks compress only when this is on (it is
-      // NOT Spark's default); it pairs with the MEMORY_AND_DISK_SER
-      // checkpoint default below. Overridable via SPARK_GRAFT_CONF (env
-      // confs apply after, last write wins).
-      .config("spark.rdd.compress", "true")
-    // extra confs from env (Probe's convention), e.g.
-    // SPARK_GRAFT_CONF="spark.rdd.compress=false" for storage-lever A/Bs
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle partitions (Sessions.shufflePartitions) and the parquet scan
+    // split (Sessions.maxPartitionBytes) sized to the corpus.
+    // Serialized checkpoint blocks compress only when spark.rdd.compress
+    // is on (it is NOT Spark's default); it pairs with the
+    // MEMORY_AND_DISK_SER checkpoints below.
+    val spark = graft.Sessions.local("graft-data-pipeline", Some(targetGB),
+      fixed = Map(
+        "spark.sql.files.maxPartitionBytes" -> graft.Sessions.maxPartitionBytes(targetGB).toString,
+        "spark.rdd.compress" -> "true"))
 
     val tag = f"${targetGB}%.2f".replace('.', 'p')
     val in  = Paths.get(s"$workDir/in_$tag")
@@ -105,7 +74,7 @@ object DataPipelineBench {
     // planting bug, or no ground truth persisted) — regenerate
     if (doneMix.isEmpty || doneMix.get != mix ||
         !Files.exists(in.resolve("planted")))
-      generate(spark, sfDir, in, targetGB, cpus.toInt, groupSize, mix)
+      generate(spark, sfDir, in, targetGB, cpus, groupSize, mix)
     // SPARK_GRAFT_DP_GENONLY=1: synthesize the corpus and exit, so the
     // measured run starts against a SETTLED corpus in a separate JVM —
     // generating minutes before the run leaves the corpus parquet in
@@ -161,32 +130,18 @@ object DataPipelineBench {
     // stage table — the round's key scale evidence — lived only in SURVEY
     // prose and stdout)
     val stageSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // Storage level for the corpus-sized stage checkpoints.
-    // MEMORY_AND_DISK_SER (+ spark.rdd.compress above) is the DEFAULT
-    // since the round-14 paired A/B on identical corpora: serialized+
-    // compressed rows won EVERY stage measured — exact dedup 130.8 ->
-    // 42.2 s (3.1x) and +13% end-to-end at 11.32 GB — and completed the
-    // 17.35 GB point (55.85 GB/h) where the deserialized default died on
-    // ENOSPC in the verify stage twice (deserialized text frames are
-    // ~3x larger on disk, and 2 live corpus copies while a third
-    // materializes outgrow the volume). The same lever applies per
-    // executor on a cluster. SPARK_GRAFT_CKPT_LEVEL=deserialized selects
-    // the deserialized witness leg (Spark's own localCheckpoint default;
-    // the historical alias `default` — the selector name through round 14,
-    // where artifacts' ckpt_level:"default" MEANS deserialized — is still
-    // accepted but re-reported as "deserialized" so cross-round artifact
-    // comparison has one name per level from here on). Any other value
-    // names a StorageLevel.
-    val ckptLevelName0 = sys.env.get("SPARK_GRAFT_CKPT_LEVEL")
-      .map(_.trim).filter(_.nonEmpty).getOrElse("MEMORY_AND_DISK_SER")
-    val ckptLevelName =
-      if (ckptLevelName0.equalsIgnoreCase("default")) "deserialized"
-      else ckptLevelName0
-    val ckptLevel =
-      if (ckptLevelName.equalsIgnoreCase("deserialized")) None
-      else Some(StorageLevel.fromString(ckptLevelName))
+    // Corpus-sized stage checkpoints are serialized and compressed: the
+    // round-14 paired A/B on identical corpora won EVERY stage measured
+    // against deserialized blocks — exact dedup 130.8 -> 42.2 s (3.1x),
+    // +13% end-to-end at 11.32 GB — and completed the 17.35 GB point
+    // (55.85 GB/h) where the deserialized leg died on ENOSPC in the verify
+    // stage twice (bench-artifacts/pipeline-last-ser*.json,
+    // pipeline-last-half*.json). The same lever applies per executor on a
+    // cluster.
+    val ckptLevel = "MEMORY_AND_DISK_SER" // run's level and the artifact's ckpt_level
     val counts = run(spark, corpus, benchmark, outDir, Some(planted),
-      lapSink = (s, t) => stageSecs(s) = t, ckptLevel = ckptLevel)
+      lapSink = (s, t) => stageSecs(s) = t,
+      ckptLevel = Some(StorageLevel.fromString(ckptLevel)))
     val secs   = (System.nanoTime() - t0) / 1e9
     val cPost  = graft.HostCanary.sec()
     val pcPost = graft.HostCanary.parSec()
@@ -212,12 +167,7 @@ object DataPipelineBench {
     // threads x few-hundred-MB SER checkpoint blocks the default 8g OOMs
     // at GB scale, so scale runs set it explicitly; record what this run had
     val heapGb = Runtime.getRuntime.maxMemory() / 1e9
-    // conf provenance: SPARK_GRAFT_CONF injections (e.g. the io-codec A/B
-    // legs) change what the run measures without touching any mode env —
-    // persist them so every artifact names its non-default confs
-    val confExtra = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .replace("\\", "").replace("\"", "")
-    val summary = f"""{"metric":"pipeline","gb":$gb%.3f,"secs":$secs%.1f,"gb_per_hour":$gbPerHr%.2f,"cores":$cpus,"heap_gb":$heapGb%.1f,"conf_extra":"$confExtra","ckpt_level":"$ckptLevelName","mix":"$mix","group_size":$groupSize,"max_part_bytes":${derivedMaxPartitionBytes(targetGB)},"hotkey_rows":$hotKeyRows,"planted":$nPlanted,"canary_pre":$cPre%.3f,"canary_post":$cPost%.3f,"par_canary_pre":$pcPre%.3f,"par_canary_post":$pcPost%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"cand_per_group":$candPerGroup%.2f,"cand_gate_max":$candGateMax%.2f,"stage_secs":$stagesJson,$countsJson}"""
+    val summary = f"""{"metric":"pipeline","gb":$gb%.3f,"secs":$secs%.1f,"gb_per_hour":$gbPerHr%.2f,"cores":$cpus,"heap_gb":$heapGb%.1f,${graft.Sessions.decisionsJson(spark)},"ckpt_level":"$ckptLevel","mix":"$mix","group_size":$groupSize,"hotkey_rows":$hotKeyRows,"planted":$nPlanted,"canary_pre":$cPre%.3f,"canary_post":$cPost%.3f,"par_canary_pre":$pcPre%.3f,"par_canary_post":$pcPost%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"cand_per_group":$candPerGroup%.2f,"cand_gate_max":$candGateMax%.2f,"stage_secs":$stagesJson,$countsJson}"""
     println(summary)
     System.out.flush()
     graft.BenchOut.writeSummary("pipeline-last", summary)
@@ -454,7 +404,7 @@ object DataPipelineBench {
 
     // --- stage 6: split + write (near-dups are gone, so a doc-hash split
     // is leakage-free by construction); partitioned parquet out.
-    // Output codec zstd (IoLap 11.32 GB, iolap-write-11p3g.json):
+    // Output codec zstd (11.32 GB, bench-artifacts/iolap-write-11p3g.json):
     // clean-window write time equal to snappy (min 5.0 vs 5.7 s), output 32%
     // smaller (2.58 vs 3.81 GB; lz4 4.86), and the smallest worst case under
     // disk contention (71.9 s where snappy read 103.6 in the same window) —

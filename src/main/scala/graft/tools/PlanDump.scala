@@ -3,16 +3,15 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.queries.Catalog
 
 /** Dump `.explain("formatted")` for named catalog queries to files — the
   * evidence trail for plan-shape claims (Exchange counts, join strategy,
-  * PushedFilters) in the optimization notes. The session mirrors
-  * [[graft.Bench]]'s configuration so the dumped plan is the one the bench
-  * actually runs (same shuffle-partition and scan-split settings).
+  * PushedFilters) in the optimization notes. The session is
+  * [[graft.Bench]]'s ([[graft.Sessions]]), so the dumped plan is the one
+  * the bench actually runs.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> <q1,q2,...> [sfDir]
   * Writes <outDir>/<name>_<suffix>.txt per query.
@@ -22,24 +21,10 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val names  = args(2).split(",").map(_.trim).filter(_.nonEmpty)
-    val sfDir  = if (args.length > 3) args(3) else
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // extra confs from env (the DataPipelineBench convention) — lets a
-    // dump force a size-gated staging (e.g. the q32 verify prefilter) the
-    // auto gate would not fire at plan-dump SF
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir  = if (args.length > 3) args(3) else graft.Sessions.sfDir
+    // SPARK_GRAFT_CONF can force a size-gated staging (e.g. the q32 verify
+    // prefilter) the auto gate would not fire at plan-dump SF
+    val spark  = graft.Sessions.local("graft-plandump")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       val df = Catalog.byName(n).fn(spark, sfDir)

@@ -1,30 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Catalog
 
 /** Dev-only timing probe: run one named query N times in a warm session to
   * split plan/codegen/JIT warmup from steady-state. Usage:
   * runMain graft.tools.Probe <name> [reps] [sfDir]
+  * The session is Bench's ([[graft.Sessions]]), so `SPARK_GRAFT_CONF`
+  * can flip a conf for one probe.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val name  = args(0)
     val reps  = if (args.length > 1) args(1).toInt else 3
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-    // extra confs from env, e.g. SPARK_GRAFT_CONF="spark.sql.codegen.wholeStage=false;spark.x=y"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("graft-probe")
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {

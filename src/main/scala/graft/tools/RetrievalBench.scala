@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end RETRIEVAL benchmark — the ANN family's capstone, in the
@@ -26,19 +25,8 @@ object RetrievalBench {
     val k         = if (args.length > 1) args(1).toInt else 10
     val nprobe    = if (args.length > 2) args(2).toInt else 3
     val shortlist = if (args.length > 3) args(3).toInt else 3 * k
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = graft.Sessions.sfDir
+    val spark = graft.Sessions.local("graft-retrieval-bench")
 
     def lap[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()

@@ -56,13 +56,11 @@ object ScalingProbe {
     val factor  = if (args.length > 0) args(0).toInt else 10
     val workDir = if (args.length > 1) args(1) else "target/scaleprobe"
     val queries = if (args.length > 2) args(2).split(",").toSeq else DefaultQueries
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val sfDir   = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir   = graft.Sessions.sfDir
 
     val scaled = Paths.get(s"$workDir/x$factor")
     if (!Files.exists(scaled.resolve("_DONE"))) {
-      val s = newSession(cpus)
+      val s = graft.Sessions.local("graft-scaling-probe")
       generate(s, sfDir, scaled.toString, factor)
       s.stop()
     }
@@ -71,7 +69,7 @@ object ScalingProbe {
 
     val rows = for (q <- queries; (tag, dir) <- Seq(
         "x1" -> sfDir, s"x$factor" -> scaled.toString)) yield {
-      val spark = newSession(cpus)
+      val spark = graft.Sessions.local("graft-scaling-probe")
       def run(): Double = {
         val t0 = System.nanoTime()
         graft.queries.Catalog.byName(q).fn(spark, dir)
@@ -111,23 +109,6 @@ object ScalingProbe {
     println(summary)
     System.out.flush()
     graft.BenchOut.writeSummary("scaling-last", summary)
-  }
-
-  private def newSession(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .appName("graft-scaling-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.rpc.askTimeout", "600s")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 
   private def generate(spark: SparkSession, sfDir: String, out: String,

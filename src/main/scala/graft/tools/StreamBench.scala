@@ -68,22 +68,12 @@ object StreamBench {
     val files    = if (args.length > 1) args(1).toInt else 32
     val reps     = if (args.length > 2) args(2).toInt else 2
     val workDir  = if (args.length > 3) args(3) else "target/streambench"
-    val cpus     = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val sfDir    = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir    = graft.Sessions.sfDir
 
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .appName("graft-stream-bench")
-      // shuffle partitions bound the state-store partition count (state
-      // commits are per state partition per batch); cpus-sized like the
-      // batch bench — at cluster scale this is the usual ~cores sizing
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle partitions bound the state-store partition count (state
+    // commits are per state partition per batch); cpus-sized like the
+    // batch bench — at cluster scale this is the usual ~cores sizing
+    implicit val spark: SparkSession = graft.Sessions.local("graft-stream-bench")
     import spark.implicits._
 
     // --- untimed staging ---------------------------------------------------
@@ -233,7 +223,7 @@ object StreamBench {
     val lapsJson = laps.map { case (st, p, m, s, o, sr, sb, c) =>
       f"""{"stage":"$st","provider":"$p","mft":$m,"secs":$s%.2f,"rows_per_sec":${nRows / s}%.0f,"out_rows":$o,"state_rows":$sr,"state_bytes":$sb,"canary":$c%.3f}"""
     }.mkString("[", ",", "]")
-    val summary = f"""{"metric":"streambench","rows":$nRows,"files":$files,"replicas":$replicas,"reps":$reps,"cores":${cpus.toInt},"watermark":"$wm","canary_pre":$cPre%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"laps":$lapsJson}"""
+    val summary = f"""{"metric":"streambench","rows":$nRows,"files":$files,"replicas":$replicas,"reps":$reps,"cores":${graft.Sessions.cpus},"watermark":"$wm","canary_pre":$cPre%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"laps":$lapsJson}"""
     println(summary)
     graft.BenchOut.writeSummary("streambench", summary)
     spark.stop()

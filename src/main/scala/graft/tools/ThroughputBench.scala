@@ -27,44 +27,24 @@ object ThroughputBench {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // dot-decimal JSON under any host locale
     val targetGB = if (args.length > 0) args(0).toDouble else 1.0
     val workDir  = if (args.length > 1) args(1) else "target/tpbench"
-    val cpus     = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val sfDir    = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .appName("graft-throughput")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir    = graft.Sessions.sfDir
+    // shuffle partitions sized to the corpus (Sessions.shufflePartitions);
+    // the text scan keeps Spark's 128 MiB split: the 512 MiB rule
+    // (Sessions.maxPartitionBytes) was measured on DataPipelineBench's
+    // parquet scan only
+    val spark = graft.Sessions.local("graft-throughput", Some(targetGB))
 
     val tag = f"${targetGB}%.2f".replace('.', 'p')
     val in  = Paths.get(s"$workDir/in_$tag")
-    if (!Files.exists(in.resolve("_DONE"))) generate(spark, sfDir, in, targetGB, cpus.toInt)
+    if (!Files.exists(in.resolve("_DONE")))
+      generate(spark, sfDir, in, targetGB, graft.Sessions.cpus)
     val corpusBytes = dirBytes(in.resolve("corpus"))
 
-    // Shuffle partitions must track DATA volume, not core count: the
-    // ≤6-gram stats shuffle carries ~10-15x the corpus bytes, and 32
-    // partitions over a multi-GB corpus puts gigabytes through each hash
-    // aggregate task (measured: 16g heap OOMs at 6 GB input with 32
-    // partitions). ~128 partitions/GB keeps a task's slice ~100 MB; AQE
-    // coalesces the small stages back down, so over-partitioning is free.
-    val shufflePartitions = math.max(cpus.toInt, (targetGB * 128).toInt)
     val cfg = VspaceConfig(
       stagingLoc   = s"$workDir/staging",
       outputFolder = s"$workDir/out_$tag",
       maxNgrams    = 6, // the baseline's deeper depth (≤6-grams column)
-      splits       = Some(shufflePartitions),
-      corpusReader = sys.env.getOrElse("SPARK_GRAFT_CORPUS_READER", "builtin"),
-      // hash-keyed gram stream is the DEFAULT (round 14; 2.4x end-to-end,
-      // outputs bit-equal); SPARK_GRAFT_VSPACE_HASHED=0 selects the
-      // string path — the A/B witness leg
-      hashedStats  = !sys.env.get("SPARK_GRAFT_VSPACE_HASHED").contains("0"),
+      splits       = None, // the session's corpus-sized shuffle partitions
       corpus       = in.resolve("corpus").toString,
       index2doc    = in.resolve("index2doc").toString,
       src2sub      = in.resolve("src2sub").toString,
@@ -93,7 +73,7 @@ object ThroughputBench {
     // graft.HostCanary and Bench's dual-canary protocol.
     val stagesJson = stageSecs
       .map { case (k, v) => f""""$k":$v%.1f""" }.mkString("{", ",", "}")
-    val summary = f"""{"metric":"throughput","gb":$gb%.3f,"secs":$secs%.1f,"gb_per_hour":$gbPerHr%.2f,"cores":$cpus,"ngrams":6,"hashed":${cfg.hashedStats},"canary_pre":$cPre%.3f,"canary_post":$cPost%.3f,"par_canary_pre":$pcPre%.3f,"par_canary_post":$pcPost%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"stage_secs":$stagesJson,"ref_1gb_gb_per_hour":6.7,"ref_sustained_gb_per_hour":19.5}"""
+    val summary = f"""{"metric":"throughput","gb":$gb%.3f,"secs":$secs%.1f,"gb_per_hour":$gbPerHr%.2f,"cores":${graft.Sessions.cpus},"ngrams":6,"hashed":${cfg.hashedStats},${graft.Sessions.decisionsJson(spark)},"canary_pre":$cPre%.3f,"canary_post":$cPost%.3f,"par_canary_pre":$pcPre%.3f,"par_canary_post":$pcPost%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"stage_secs":$stagesJson,"ref_1gb_gb_per_hour":6.7,"ref_sustained_gb_per_hour":19.5}"""
     println(summary)
     System.out.flush()
     graft.BenchOut.writeSummary("throughput-last", summary)

@@ -1,0 +1,38 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** One way to start a local session: only `Sessions.scala` builds one
+  * (plus `VspacePipeline.scala`, the spark-submit entry, which keeps the
+  * cluster's master) and only it reads the session env. */
+class SessionLintSpec extends AnyFunSuite {
+
+  private lazy val sources: Seq[(String, String)] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map((p: Path) => root.relativize(p).toString -> Files.readString(p))
+    finally walk.close()
+  }
+
+  private def offenders(allowed: Set[String], pattern: String): Seq[String] =
+    sources.filterNot { case (f, _) => allowed(f) }
+      .filter { case (_, text) => pattern.r.findFirstIn(text).isDefined }
+      .map(_._1)
+
+  test("SparkSession.builder appears only in Sessions and VspacePipeline") {
+    assert(sources.size > 50)
+    assert(offenders(Set("graft/Sessions.scala", "graft/pipeline/VspacePipeline.scala"),
+      """SparkSession\s*\.\s*builder""") == Nil)
+  }
+
+  test("the session env is read only in Sessions") {
+    assert(offenders(Set("graft/Sessions.scala"),
+      "\"SPARK_GRAFT_(CPUS|SF_DIR|CONF)\"") == Nil)
+  }
+}

@@ -1,13 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** Id-keyed vocabulary lookup (the reference's `has_index=True` DAWG
-  * variant, `dawg.py:60-65`): the relational join path and the
-  * broadcast-binary-search path must produce identical encodings, and
-  * out-of-vocabulary tokens must keep a null id. */
+  * variant, `dawg.py:60-65`): out-of-vocabulary tokens must keep a null
+  * id. */
 class VocabularySpec extends SparkSpec {
 
   private def vocabDF = {
@@ -29,40 +26,5 @@ class VocabularySpec extends SparkSpec {
     assert(out == Set(
       (0L, "cat", Some(7L)), (0L, "axolotl", None),
       (1L, "fish", Some(11L)), (1L, "dog", Some(3L)), (2L, "dog", Some(3L))))
-  }
-
-  test("BroadcastIdMap agrees with the join path row for row") {
-    val viaJoin = Vocabulary.resolveIds(tokensDF, "token", vocabDF)
-      .select("doc_id", "token", "tokenid")
-      .collect().map(r => (r.getLong(0), r.getString(1), Option(r.get(2))))
-      .toSet
-    val viaMap = Vocabulary.BroadcastIdMap(spark, vocabDF)
-      .attach(tokensDF, "token")
-      .select("doc_id", "token", "tokenid")
-      .collect().map(r => (r.getLong(0), r.getString(1), Option(r.get(2))))
-      .toSet
-    assert(viaMap == viaJoin)
-  }
-
-  test("BroadcastIdMap drops null/blank vocabulary rows before broadcast") {
-    import spark.implicits._
-    val dirty = Seq(("cat", Some(7L)), ("  ", Some(1L)), (null, Some(2L)))
-      .toDF("token", "tokenid")
-    val out = Vocabulary.BroadcastIdMap(spark, dirty)
-      .attach(Seq("cat", " ").toDF("token"), "token")
-      .collect().map(r => r.getString(0) -> Option(r.get(1))).toMap
-    assert(out == Map("cat" -> Some(7L), " " -> None))
-  }
-
-  test("encoding survives a vocabulary larger than one range partition") {
-    import spark.implicits._
-    val big = (0 until 5000).map(i => (f"tok$i%05d", i.toLong))
-      .toDF("token", "tokenid")
-    val probe = Seq("tok00000", "tok04999", "tok02500", "nope").toDF("token")
-    val out = Vocabulary.BroadcastIdMap(spark, big, numPartitions = 8)
-      .attach(probe, "token")
-      .collect().map(r => r.getString(0) -> Option(r.get(1))).toMap
-    assert(out == Map("tok00000" -> Some(0L), "tok04999" -> Some(4999L),
-      "tok02500" -> Some(2500L), "nope" -> None))
   }
 }

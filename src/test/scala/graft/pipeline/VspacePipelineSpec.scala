@@ -265,6 +265,48 @@ class VspacePipelineSpec extends SparkSpec {
     assert(bySourceSet(out3) == bySourceSet(out))
   }
 
+  test("INI option names are case-insensitive and `:` separates like `=`") {
+    // ConfigParser lowercases option names (optionxform) and splits at the
+    // first `=` or `:`; section names stay case-sensitive
+    val conf =
+      """[vspace_conf]
+        |StagingLoc = /tmp/staging
+        |outputFolder: /tmp/out
+        |maxNgrams = 5
+        |Splits = 8
+        |HashedStats: false
+        |[vspace_input]
+        |Corpus = /data/corpus
+        |index2doc: hdfs://nn:8020/index=v1
+        |SRC2SUB = /data/src2sub
+        |collections = /data/collections
+        |Phrases = /data/phrases
+        |[VSPACE_CONF]
+        |maxngrams = 9
+        |""".stripMargin
+    val confPath = s"${graft.SparkSpec.tempDir("vspace-ini")}/job.conf"
+    Files.writeString(Paths.get(confPath), conf)
+    assert(VspaceConfig.load(confPath) == VspaceConfig(
+      stagingLoc = "/tmp/staging", outputFolder = "/tmp/out",
+      maxNgrams = 5, splits = Some(8),
+      corpus = "/data/corpus", index2doc = "hdfs://nn:8020/index=v1",
+      src2sub = "/data/src2sub", collections = "/data/collections",
+      phrases = "/data/phrases", hashedStats = false))
+  }
+
+  test("INI: a repeated option or section is an error, as under ConfigParser's strict mode") {
+    // option names compare after lowercasing, so `maxNgrams` and
+    // `maxngrams` are the same option; `[a]` and `[A]` are two sections
+    val dupOption = intercept[IllegalArgumentException](VspaceConfig.parseIni(
+      "[vspace_conf]\nmaxNgrams = 4\nmaxngrams: 5\n"))
+    assert(dupOption.getMessage.contains("duplicate INI option 'maxngrams' in [vspace_conf]"))
+    val dupSection = intercept[IllegalArgumentException](VspaceConfig.parseIni(
+      "[vspace_conf]\nsplits = 8\n[vspace_input]\ncorpus = /c\n[vspace_conf]\nmaxngrams = 4\n"))
+    assert(dupSection.getMessage.contains("duplicate INI section [vspace_conf]"))
+    assert(VspaceConfig.parseIni("[a]\nk = 1\n[A]\nk = 2\n") ==
+      Map("a" -> Map("k" -> "1"), "A" -> Map("k" -> "2")))
+  }
+
   /** Edge-shape fixture for the stats job: a document with two index rows
     * (different subsources), a document with no index row, a subsource
     * claimed by two sources, and a subsource claimed by none.
