@@ -63,8 +63,24 @@ object BenchOut {
     }
   }
 
-  /** Pull the `"gb":N` field out of a summary line, if present. */
+  /** Pull the `"gb":N` / `"sf":"dir"` field out of a summary line. */
   private val GbField = """"gb"\s*:\s*([0-9]+(?:\.[0-9]+)?)""".r.unanchored
+  private val SfField = """"sf"\s*:\s*"([^"]*)"""".r.unanchored
+
+  /** The scale a summary is keyed by, besides `<name>.json`: its `gb` to
+    * two decimals with trailing zeros dropped (0.05 → `0p05g`, 0.1 →
+    * `0p1g`, 0.82 → `0p82g`), else the basename of its `sf` dir
+    * (`/data/sf0.1` → `sf0p1`); None when it has neither. */
+  private[graft] def scaleKey(json: String): Option[String] = json match {
+    case GbField(gb) =>
+      val rounded = BigDecimal(gb).setScale(2, BigDecimal.RoundingMode.HALF_UP)
+      Some(rounded.bigDecimal.stripTrailingZeros.toPlainString
+        .replace('.', 'p') + "g")
+    case SfField(dir) =>
+      Some(dir.stripSuffix("/").split('/').last.replace('.', 'p'))
+        .filter(_.nonEmpty)
+    case _ => None
+  }
 
   def writeSummary(rawName: String, json: String): Unit = synchronized {
     val name = tagged(rawName)
@@ -77,15 +93,12 @@ object BenchOut {
       // Scale-keyed copy: `<name>.json` is "latest run" and ANY later run
       // overwrites it — which is how round 13's untagged 1.6 GB
       // certification leg clobbered the 13.18 GB headline even with the
-      // tag mechanism available. A summary carrying a `gb` field is a
-      // scale benchmark, so it ALSO persists under its scale
-      // (`throughput-last-13p2g.json`): headlines at different scales can
-      // never overwrite each other, tagged or not.
-      json match {
-        case GbField(gb) =>
-          val key = f"${gb.toDouble}%.1f".replace('.', 'p') + "g"
-          put(dir, s"$name-$key.json"); put(durableDir, s"$name-$key.json")
-        case _ => ()
+      // tag mechanism available. A summary carrying a `gb` or `sf` field
+      // is a scale benchmark, so it ALSO persists under its scale
+      // (`throughput-last-13p18g.json`, `bench-last-sf0p1.json`):
+      // headlines at different scales never overwrite each other.
+      scaleKey(json).foreach { key =>
+        put(dir, s"$name-$key.json"); put(durableDir, s"$name-$key.json")
       }
     } catch { case e: Exception =>
       System.err.println(s"[bench] persist $name.json failed: $e")

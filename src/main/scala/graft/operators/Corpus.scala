@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{everygrams, norm_tokens, normalize_text}
@@ -44,22 +44,9 @@ object Corpus {
     * has no shuffle at all; (token)-keyed stats downstream become the
     * pipeline's only exchange. */
   def tokenCounts(corpus: DataFrame, maxNgrams: Int,
-      compatOffByOne: Boolean = false): DataFrame = {
-    val maxN = maxDepth(maxNgrams, compatOffByOne)
-    corpus
-      .select(col("document_index"), norm_tokens(col("text")).as("tokens"))
-      .select(col("document_index"), size(col("tokens")).as("wc"),
-        explode(graft.functions.ngram_counts(col("tokens"), maxN)).as("e"))
-      .select(col("document_index"), col("wc"),
-        col("e.token").as("token"), col("e.tf").as("tf"))
-      // prefix short-circuit (round 12): every DocIdPattern match starts
-      // with the literal prefix, so `rlike => startsWith` and the regex
-      // (a per-ROW java.util.regex match + UTF8String->String conversion,
-      // paid once per exploded n-gram at corpus scale) only runs on the
-      // vanishingly rare prefixed tokens; And-codegen short-circuits.
-      .filter(!(col("token").startsWith("nferdoccount_") &&
-        col("token").rlike(DocIdPattern)))
-  }
+      compatOffByOne: Boolean = false): DataFrame =
+    countGrams(corpus, norm_tokens(col("text")),
+      maxDepth(maxNgrams, compatOffByOne))
 
   /** [[tokenCounts]] over text that is ALREADY normalized (single-space
     * separated) — tokenization is a plain whitespace split, skipping the
@@ -69,11 +56,16 @@ object Corpus {
     * `base.py:181-189,392-394`); normalize is idempotent (property-tested),
     * so the results are identical to tokenCounts on raw text. */
   def tokenCountsFromNormalized(normalized: DataFrame, maxNgrams: Int,
-      compatOffByOne: Boolean = false): DataFrame = {
-    val maxN = maxDepth(maxNgrams, compatOffByOne)
-    normalized
-      .select(col("document_index"),
-        graft.functions.ws_tokens(col("text")).as("tokens"))
+      compatOffByOne: Boolean = false): DataFrame =
+    countGrams(normalized, graft.functions.ws_tokens(col("text")),
+      maxDepth(maxNgrams, compatOffByOne))
+
+  /** The string n-gram kernel both token-count entry points share: per-doc
+    * 1..maxN gram counts of `tokens`, pseudo-tokens dropped. */
+  private def countGrams(docs: DataFrame, tokens: Column,
+      maxN: Int): DataFrame =
+    docs
+      .select(col("document_index"), tokens.as("tokens"))
       .select(col("document_index"), size(col("tokens")).as("wc"),
         explode(graft.functions.ngram_counts(col("tokens"), maxN)).as("e"))
       .select(col("document_index"), col("wc"),
@@ -85,7 +77,6 @@ object Corpus {
       // vanishingly rare prefixed tokens; And-codegen short-circuits.
       .filter(!(col("token").startsWith("nferdoccount_") &&
         col("token").rlike(DocIdPattern)))
-  }
 
   /** [[tokenCountsFromNormalized]] with HASH gram keys: long format
     * `(document_index, wc, h, n, tf, tok)` where `h = xxhash64(gram)`,

@@ -33,23 +33,4 @@ object Sinks {
   /** W4: global stats. */
   def writeStatsGlobal(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("delimiter", "\t").csv(path)
-
-  /** W2 variant: normalized corpus in the reference's NATIVE format
-    * (records joined by the multi-byte delimiter) via the vspace-corpus
-    * DSV2 writer — what a deployment emits when downstream consumers are
-    * other vspace-format readers rather than parquet tools. */
-  def writeCorpusNative(df: DataFrame, path: String,
-      textCol: String = "text"): Unit =
-    df.select(df(textCol).as("text"))
-      .write.format("vspace-corpus").mode("overwrite").save(path)
-
-  /** Hash-bucketed, bucket-sorted table write (scale extension): both
-    * sides of a repeated equi-join written with the same bucketing plan
-    * with ZERO exchanges — the co-located-join prep any 100 TB pipeline
-    * does once so downstream joins/aggs on the key never shuffle again.
-    * Bucket metadata lives in the session catalog, hence saveAsTable. */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-      buckets: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
 }

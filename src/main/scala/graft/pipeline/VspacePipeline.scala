@@ -24,12 +24,6 @@ final case class VspaceConfig(
     collections: String,
     phrases: String,
     compatOffByOne: Boolean = false,
-    /** "builtin" = lineSep text source (reference-shaped), "v2" = the
-      * native vspace-corpus DSV2 connector with explicit byte-range
-      * splits — the path for corpora whose files dwarf a default split.
-      * Ids are contiguous under both; their file ordering differs on
-      * multi-file corpora (see CorpusSources.loadRawCorpusV2). */
-    corpusReader: String = "builtin",
     /** Key the gram stream by `xxhash64(gram)` instead of gram strings
       * through the vocabulary probe and the stats exchange, restoring
       * strings at the vocab-sized stats output
@@ -83,12 +77,6 @@ object VspaceConfig {
     val ini  = parseIni(Files.readString(Paths.get(path)))
     val conf = ini.getOrElse("vspace_conf", Map.empty)
     val in   = ini.getOrElse("vspace_input", Map.empty)
-    // fail fast on a typo'd reader name ("V2", "dsv2", …): historically the
-    // two loaders could assign different doc ids on multi-file corpora, so a
-    // silent fallback to builtin picked a different scan path undiagnosed
-    val reader = conf.getOrElse("corpusreader", "builtin").toLowerCase
-    require(Set("builtin", "v2").contains(reader),
-      s"corpusreader must be 'builtin' or 'v2', got '$reader'")
     VspaceConfig(
       stagingLoc   = conf.getOrElse("stagingloc", "/tmp/vspace-staging"),
       outputFolder = conf.getOrElse("outputfolder", "/tmp/vspace-out"),
@@ -100,7 +88,6 @@ object VspaceConfig {
       collections  = in("collections"),
       phrases      = in("phrases"),
       compatOffByOne = conf.get("compatoffbyone").exists(_.toBoolean),
-      corpusReader   = reader,
       // absent => the hashed default (see the case-class scaladoc);
       // `hashedstats = false` selects the string path explicitly
       hashedStats    = conf.get("hashedstats").map(_.toBoolean).getOrElse(true))
@@ -176,14 +163,7 @@ object VspacePipeline {
 
     // --- corpus job (reference base.py:373-397) ---
     stage("corpus")
-    // guarded here as well as in VspaceConfig.load: a directly-constructed
-    // config must not silently fall back to the builtin reader on a typo'd
-    // name
-    require(Set("builtin", "v2").contains(cfg.corpusReader),
-      s"corpusReader must be 'builtin' or 'v2', got '${cfg.corpusReader}'")
-    val raw =
-      if (cfg.corpusReader == "v2") CorpusSources.loadRawCorpusV2(spark, cfg.corpus)
-      else CorpusSources.loadRawCorpus(spark, cfg.corpus)
+    val raw = CorpusSources.loadRawCorpus(spark, cfg.corpus)
     // Normalize ONCE and persist, like the reference's rdd1 (base.py:181,
     // persisted and feeding both the corpus write and the counts) — raw is
     // otherwise scanned + zipWithIndex'd + NFC-normalized twice. At cluster

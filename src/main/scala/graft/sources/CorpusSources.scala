@@ -33,11 +33,9 @@ object CorpusSources {
     StructField("meta4", StringType)))
 
   /** Corpus files under `path` (plain file, directory, or glob),
-    * lexicographically sorted by full path string — the ONE file order both
-    * corpus readers share, so doc ids agree between them on any corpus.
-    * Hidden files (`_`/`.` prefixed) are skipped, like Spark's file
-    * sources. Mirrors the V2 connector's listing
-    * ([[graft.sources.v2.CorpusScan]] `planInputPartitions`). */
+    * lexicographically sorted by full path string — the file order that
+    * fixes [[loadRawCorpus]]'s doc ids. Hidden files (`_`/`.` prefixed)
+    * are skipped, like Spark's file sources. */
   private[graft] def listCorpusFiles(spark: SparkSession, path: String): Seq[String] = {
     val p  = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -59,17 +57,15 @@ object CorpusSources {
     *
     * Doc ids are contiguous zero-based in (lexicographic file path, offset
     * within file) order, matching the reference's `zipWithIndex`
-    * (`base.py:73`) and — by construction — the V2 connector's id order
-    * ([[loadRawCorpusV2]]), so the two readers are interchangeable on any
-    * corpus (CorpusV2Spec pins it on a multi-file fixture). Files are
-    * enumerated explicitly and read one per scan, unioned in sorted order:
-    * handing the built-in text source several paths at once lets it pack
-    * splits largest-file-first internally, which permutes ids. Within one
+    * (`base.py:73`); CorpusSourcesSpec pins it on a multi-file fixture and
+    * across split boundaries. Files are enumerated explicitly and read one
+    * per scan, unioned in sorted order: handing the built-in text source
+    * several paths at once lets it pack splits largest-file-first
+    * internally, which permutes ids. Within one
     * file, split planning is offset-ordered (equal-size splits under a
     * stable sort), so per-file order is the file's record order. The
     * per-file unions are balanced pairwise (O(log files) plan depth, order
-    * preserved); for corpora of many thousands of files the V2 reader,
-    * whose listing is a flat scan, stays the better fit.
+    * preserved).
     */
   def loadRawCorpus(spark: SparkSession, path: String,
       recordDelimiter: String = RecordDelimiter): DataFrame = {
@@ -84,61 +80,6 @@ object CorpusSources {
     raw.rdd.map(_.getString(0)).zipWithIndex()
       .map { case (text, idx) => (idx, text) }
       .toDF("document_index", "text")
-  }
-
-  /** T1 via the native DSV2 connector ([[graft.sources.v2.CorpusDataSource]]):
-    * (document_index, text) with contiguous zero-based ids like
-    * [[loadRawCorpus]], but the scan plans explicit byte-range splits
-    * (`chunkBytes`) per file — the shape for corpora whose individual files
-    * are far larger than a default split. Ids are contiguous in
-    * (lexicographic file path, byte offset) order — the same order
-    * [[loadRawCorpus]] fixes, so the two readers assign identical ids on
-    * any corpus.
-    *
-    * Id assignment is sort-free AND stays relational (no RDD boundary, so
-    * column pruning and codegen survive): the connector emits each record's
-    * split ordinal and within-split sequence number, so pass 1 is a
-    * metadata-sized per-split count (the scan prunes to the `split` column
-    * — no text is ever materialized), the driver turns those counts into
-    * cumulative per-split bases (splits are planned in (path, byte-range)
-    * order, so base order IS id order), and pass 2 broadcast-joins the
-    * tiny base table back: id = base(split) + seq. Two scans total — the
-    * same job count `zipWithIndex` paid for its hidden partition-counting
-    * job, but both passes are pruned relational scans.
-    *
-    * ASSUMES AN IMMUTABLE CORPUS between the two passes (each pass
-    * re-lists files and re-plans splits). A file added/grown between
-    * passes yields split ordinals with no base row; the join is a LEFT
-    * join with a raise_error guard on a null base, so that mutation
-    * surfaces as a task failure naming the split instead of silently
-    * dropping the new rows. A file that shrank or vanished cannot be
-    * detected row-wise (its ids simply shift) — contiguous-id assignment
-    * over a mutating directory is unsound in any engine; snapshot first. */
-  def loadRawCorpusV2(spark: SparkSession, path: String,
-      recordDelimiter: String = RecordDelimiter,
-      chunkBytes: Long = graft.sources.v2.CorpusV2.DefaultChunkBytes): DataFrame = {
-    import spark.implicits._
-    val raw = spark.read.format("vspace-corpus")
-      .option("delimiter", recordDelimiter)
-      .option("chunkBytes", chunkBytes.toString)
-      .load(path)
-    // pass 1: rows per split — one result row per planned split
-    val counts = raw.groupBy("split").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    var acc = 0L
-    val bases = counts.map { case (split, n) =>
-      val b = acc; acc += n; (split, b)
-    }.toSeq
-    // pass 2: id = split's cumulative base + within-split ordinal. LEFT
-    // join + raise_error: a split planned in pass 2 but absent from the
-    // pass-1 base table means the corpus mutated between passes — fail
-    // loudly instead of (inner-join) silently dropping its rows.
-    val base = when(col("base").isNotNull, col("base"))
-      .otherwise(raise_error(concat(
-        lit("vspace-corpus: split "), col("split").cast("string"),
-        lit(" has no id base — corpus mutated between id-planning passes"))))
-    raw.join(broadcast(bases.toDF("split", "base")), Seq("split"), "left")
-      .select((base + col("seq")).as("document_index"), col("text"))
   }
 
   /** T2: tab-separated index file with the fixed 10-col schema. */

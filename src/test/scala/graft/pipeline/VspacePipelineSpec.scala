@@ -238,14 +238,8 @@ class VspacePipelineSpec extends SparkSpec {
     assert(Files.exists(java.nio.file.Paths.get(s"$out/vocabulary")))
     assert(Files.exists(java.nio.file.Paths.get(s"$out/normalized_corpus")))
 
-    // corpusreader = v2 routes the scan through the DSV2 connector and, on
-    // this single-file corpus, must produce identical global stats
-    val out2 = graft.SparkSpec.tempDir("vspace-out-v2")
-    VspacePipeline.run(spark, VspaceConfig.load(confPath)
-      .copy(outputFolder = out2, corpusReader = "v2"))
     def statsSet(o: String) = spark.read.option("delimiter", "\t")
       .csv(s"$o/stats_global").collect().map(_.toSeq).toSet
-    assert(statsSet(out2) == statsSet(out))
 
     // the DEFAULT path is hashed since round 14 (gram stream keyed by
     // xxhash64(gram), strings joined back at the stats output); the
@@ -267,10 +261,13 @@ class VspacePipelineSpec extends SparkSpec {
 
   test("INI option names are case-insensitive and `:` separates like `=`") {
     // ConfigParser lowercases option names (optionxform) and splits at the
-    // first `=` or `:`; section names stay case-sensitive
+    // first `=` or `:`; section names stay case-sensitive. An option the
+    // job does not read (here the retired `corpusreader`) is ignored, as
+    // ConfigParser ignores keys nobody asks for
     val conf =
       """[vspace_conf]
         |StagingLoc = /tmp/staging
+        |CorpusReader = v2
         |outputFolder: /tmp/out
         |maxNgrams = 5
         |Splits = 8
