@@ -707,8 +707,8 @@ object NgramHashKernel {
     * the histogram is an open-addressed long-keyed table instead of a
     * string-keyed LinkedHashMap. Two grams colliding on the full 64 bits
     * merge (their tfs sum, the first-seen n/tok win) — ~n²/2⁶⁵ odds,
-    * certified per corpus by A/B equality against the string path rather
-    * than by construction. */
+    * checked against the string-operator witness in VspacePipelineSpec
+    * rather than excluded by construction. */
   def countHashes(arr: ArrayData, maxN: Int): ArrayData = {
     val total = arr.numElements()
     val toks = new Array[UTF8String](total)
@@ -727,8 +727,7 @@ object NgramHashKernel {
     // multi-GB text) is a data error at any realistic scale.
     require(instances * 2 <= (1 << 30),
       s"ngram_count_hashes: document yields $instances n-gram instances, " +
-      "beyond the 2^30-slot histogram — split the document upstream or " +
-      "use the string kernel (hashedstats = false)")
+      "beyond the 2^30-slot histogram — split the document upstream")
     var cap = 16
     while (cap < instances * 2 && cap < (1 << 30)) cap <<= 1
     val mask   = cap - 1

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{everygrams, norm_tokens, normalize_text}
@@ -45,29 +45,11 @@ object Corpus {
     * pipeline's only exchange. */
   def tokenCounts(corpus: DataFrame, maxNgrams: Int,
       compatOffByOne: Boolean = false): DataFrame =
-    countGrams(corpus, norm_tokens(col("text")),
-      maxDepth(maxNgrams, compatOffByOne))
-
-  /** [[tokenCounts]] over text that is ALREADY normalized (single-space
-    * separated) — tokenization is a plain whitespace split, skipping the
-    * NFC+regex normalizer. The pipeline uses this to normalize the corpus
-    * exactly once (the reference does the same: `rdd1 = map(normalize)` is
-    * persisted and feeds both the normalized-corpus write and the counts,
-    * `base.py:181-189,392-394`); normalize is idempotent (property-tested),
-    * so the results are identical to tokenCounts on raw text. */
-  def tokenCountsFromNormalized(normalized: DataFrame, maxNgrams: Int,
-      compatOffByOne: Boolean = false): DataFrame =
-    countGrams(normalized, graft.functions.ws_tokens(col("text")),
-      maxDepth(maxNgrams, compatOffByOne))
-
-  /** The string n-gram kernel both token-count entry points share: per-doc
-    * 1..maxN gram counts of `tokens`, pseudo-tokens dropped. */
-  private def countGrams(docs: DataFrame, tokens: Column,
-      maxN: Int): DataFrame =
-    docs
-      .select(col("document_index"), tokens.as("tokens"))
+    corpus
+      .select(col("document_index"), norm_tokens(col("text")).as("tokens"))
       .select(col("document_index"), size(col("tokens")).as("wc"),
-        explode(graft.functions.ngram_counts(col("tokens"), maxN)).as("e"))
+        explode(graft.functions.ngram_counts(col("tokens"),
+          maxDepth(maxNgrams, compatOffByOne))).as("e"))
       .select(col("document_index"), col("wc"),
         col("e.token").as("token"), col("e.tf").as("tf"))
       // prefix short-circuit (round 12): every DocIdPattern match starts
@@ -78,7 +60,11 @@ object Corpus {
       .filter(!(col("token").startsWith("nferdoccount_") &&
         col("token").rlike(DocIdPattern)))
 
-  /** [[tokenCountsFromNormalized]] with HASH gram keys: long format
+  /** [[tokenCounts]] over ALREADY normalized (single-space separated)
+    * text, with HASH gram keys. The job normalizes once and feeds both the
+    * normalized-corpus write and this kernel, as the reference's persisted
+    * `rdd1` does (`base.py:181-189,392-394`); tokenization is then a plain
+    * whitespace split. Output is long format
     * `(document_index, wc, h, n, tf, tok)` where `h = xxhash64(gram)`,
     * `n` is the gram order, and `tok` carries the STRING for unigrams
     * only. The scale rationale: every downstream consumer of the gram
@@ -88,7 +74,7 @@ object Corpus {
     * 8-byte hashes and joining strings back at the OUTPUT
     * ([[Stats.computeStatsHashed]]) shrinks the pipeline's dominant
     * storage and shuffle volume to fixed-width rows. The pseudo-token
-    * drop matches the string path exactly: only unigrams can match the
+    * drop matches [[tokenCounts]] exactly: only unigrams can match the
     * anchored [[DocIdPattern]] (multigrams contain a space), and unigram
     * rows carry their string. Any input column besides `document_index`
     * and `text` (e.g. the document's `sources`, [[Stats.documentSources]])

@@ -35,14 +35,6 @@ object Dedup {
     * its component. Warns on stderr if maxIter is hit before convergence
     * (returned labels are then an upper bound, not final clusters).
     *
-    * `pathDoubling` adds a pointer-jump step per round (follow the
-    * propagated label one more hop through the label table itself), which
-    * makes the reach of a round double — O(log diameter) rounds instead of
-    * O(diameter). Off by default: near-dup cluster graphs are dense and
-    * low-diameter, so the extra node-sized join per round costs more than
-    * the rounds it saves; turn it on for chain-like graphs (e.g. edges
-    * from sliding-window or as-of relations) where diameter is unbounded.
-    *
     * CONCURRENCY: when `numPartitions` is set, this method temporarily
     * overrides the SESSION's `spark.sql.shuffle.partitions` for the
     * duration of the iteration (restored in `finally`; rationale in the
@@ -51,7 +43,7 @@ object Dedup {
     * call: they would plan their shuffles at the edge-sized count. All of
     * this library's own callers run it synchronously. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      pathDoubling: Boolean = false, numPartitions: Option[Int] = None): DataFrame = {
+      numPartitions: Option[Int] = None): DataFrame = {
     // Pre-partition the symmetric edge set on the join key BEFORE caching:
     // every iteration joins sym on `b`, and a cached frame keeps its
     // physical partitioning, so the per-round plan reuses this one shuffle
@@ -84,13 +76,13 @@ object Dedup {
     val prevParts = sessConf.get("spark.sql.shuffle.partitions")
     if (numPartitions.isDefined)
       sessConf.set("spark.sql.shuffle.partitions", parts)
-    try connectedComponentsImpl(edges, maxIter, pathDoubling, parts)
+    try connectedComponentsImpl(edges, maxIter, parts)
     finally if (numPartitions.isDefined)
       sessConf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
   private def connectedComponentsImpl(edges: DataFrame, maxIter: Int,
-      pathDoubling: Boolean, parts: Int): DataFrame = {
+      parts: Int): DataFrame = {
     val sym = edges.select(col("a"), col("b"))
       .union(edges.select(col("b").as("a"), col("a").as("b")))
       .repartition(parts, col("b"))
@@ -111,28 +103,12 @@ object Dedup {
       // Carry the "did this node improve?" bit through the update itself so
       // the convergence check is a count on the materialized frame, not a
       // second labels join per round.
-      val prop = labels
+      val joined = labels
         .join(nbrMin.select(col("a").as("id"), col("nbl")), Seq("id"), "left")
         .select(col("id"), col("lbl"),
           least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("plbl"))
-      val joined =
-        if (!pathDoubling)
-          prop.select(col("id"), col("plbl").as("lbl"),
-            (col("plbl") < col("lbl")).as("improved"))
-        else {
-          // A label is always the id of a node in the same component, so
-          // label[label[v]] is too — following one extra hop through the
-          // propagated table keeps every invariant and doubles the reach.
-          prop
-            .join(prop.select(col("id").as("plbl"), col("plbl").as("qlbl"))
-              .withColumnRenamed("plbl", "__p"),
-              col("plbl") === col("__p"), "left")
-            .select(col("id"),
-              least(col("plbl"), coalesce(col("qlbl"), col("plbl"))).as("lbl"),
-              (least(col("plbl"), coalesce(col("qlbl"), col("plbl")))
-                < col("lbl")).as("improved"))
-        }
-      val ckptRound = iter % CheckpointEvery == CheckpointEvery - 1
+        .select(col("id"), col("plbl").as("lbl"),
+          (col("plbl") < col("lbl")).as("improved"))
       val next =
         if (iter % CheckpointEvery == CheckpointEvery - 1)
           joined.localCheckpoint(eager = true)

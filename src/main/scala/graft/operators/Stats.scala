@@ -17,9 +17,11 @@ import org.apache.spark.sql.types.StringType
   * aggregation: one exchange over the gram stream, fixed-width buffers,
   * and an output-sized result. count and sum are decomposable, so
   * aggregating both scopes in one pass is exact (eager aggregation, Yan &
-  * Larson, VLDB 1995). The string path keeps the reference's dataflow:
-  * [[combineCorpusWithSources]] fans each gram row out to one row per
-  * (doc, source) before [[computeStats]] aggregates each table.
+  * Larson, VLDB 1995). The string operators keep the reference's
+  * dataflow: [[combineCorpusWithSources]] fans each gram row out to one
+  * row per (doc, source) before [[computeStats]] aggregates each table.
+  * q28 runs them, and VspacePipelineSpec builds from them the
+  * string-operator witness the hashed job is checked against.
   */
 object Stats {
 
@@ -46,8 +48,8 @@ object Stats {
     *
     * Exactness caveat: two MULTIGRAMS colliding on the full 64-bit
     * `xxhash64(gram)` would merge one stats row (~n²/2⁶⁵ odds); the
-    * hashed path is certified per corpus by A/B output equality against
-    * the string path (VspacePipelineSpec), not by construction. A unigram
+    * hashed path is checked against the string-operator witness in
+    * VspacePipelineSpec, not exact by construction. A unigram
     * never merges with another gram: its string is part of the key. */
   def computeStatsHashed(countsHashed: DataFrame, vocabulary: DataFrame,
       extraGrouping: Seq[String]): DataFrame =

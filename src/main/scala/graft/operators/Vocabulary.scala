@@ -12,13 +12,15 @@ import org.apache.spark.sql.functions._
   * The reference materializes the whole vocabulary on the driver as a list
   * of range-partitioned DAWG tries and broadcasts the pickle
   * (`dawg.py:107-117`, `base.py:364-367`) — workable at GB scale, a
-  * driver-memory wall at 100 TB. Here membership is, by default, a
-  * relational left-semi join (SemiJoinFilter): fully Catalyst-planned,
-  * broadcast automatically when the vocabulary is small, shuffle-partitioned
-  * when it is not, no driver materialization ever. BroadcastSetFilter keeps
-  * the reference's shape (driver collect + broadcast + per-row membership
-  * probe against a sorted array — binary search replaces the DAWG, which
-  * the reference only ever uses for `__contains__`, `dawg.py:179-193`).
+  * driver-memory wall at 100 TB. Here membership is a relational join:
+  * the vspace job probes the vocabulary's hash index on `xxhash64(gram)`
+  * ([[hashIndexFilter]]), q28 joins gram strings ([[SemiJoinFilter]]).
+  * Both are fully Catalyst-planned, broadcast automatically when the
+  * vocabulary is small, shuffle-partitioned when it is not, no driver
+  * materialization ever. BroadcastSetFilter keeps the reference's shape
+  * (driver collect + broadcast + per-row membership probe against a
+  * sorted array — binary search replaces the DAWG, which the reference
+  * only ever uses for `__contains__`, `dawg.py:179-193`).
   */
 object Vocabulary {
 
@@ -102,13 +104,13 @@ object Vocabulary {
     * ([[Stats.computeStatsHashed]]).
     *
     * Vocabulary-side hash collisions are DETECTABLE in one vocab-sized
-    * aggregation (unlike the gram-stream side, which only the per-corpus
-    * A/B certifies), so this detects them and throws: silently keeping
-    * one string per hash would mislabel one token's stats with another's
-    * string. countDistinct on the token (not count(*)) so duplicate
-    * vocabulary ROWS (the same string twice, legitimately deduped) don't
-    * trip the guard. The guard runs one job when this is called, so build
-    * the index once per run. */
+    * aggregation (unlike the gram-stream side, which is checked against
+    * the string-operator witness in VspacePipelineSpec), so this detects
+    * them and throws: silently keeping one string per hash would mislabel
+    * one token's stats with another's string. countDistinct on the token
+    * (not count(*)) so duplicate vocabulary ROWS (the same string twice,
+    * legitimately deduped) don't trip the guard. The guard runs one job
+    * when this is called, so build the index once per run. */
   def hashIndex(vocabulary: DataFrame): DataFrame = {
     val card = vocabulary.agg(
       countDistinct(col("token")).as("t"),
@@ -117,8 +119,8 @@ object Vocabulary {
       throw new IllegalStateException(
         s"hashIndex: xxhash64 collision inside the vocabulary " +
         s"(${card.getLong(0)} distinct tokens -> ${card.getLong(1)} " +
-        "distinct hashes) — the hashed stats path would mislabel a " +
-        "token's stats; use the string path (hashedstats = false)")
+        "distinct hashes) — the hashed stats job would mislabel a " +
+        "token's stats")
     // one row per h: the guard makes (h, token) pairs 1:1, and distinct
     // (unlike dropDuplicates' first(token) buffer) stays a hash aggregate
     vocabulary.select(xxhash64(col("token")).as("h"), col("token")).distinct()

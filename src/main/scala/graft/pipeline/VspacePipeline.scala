@@ -23,25 +23,7 @@ final case class VspaceConfig(
     src2sub: String,
     collections: String,
     phrases: String,
-    compatOffByOne: Boolean = false,
-    /** Key the gram stream by `xxhash64(gram)` instead of gram strings
-      * through the vocabulary probe and the stats exchange, restoring
-      * strings at the vocab-sized stats output
-      * (Corpus.tokenCountHashesFromNormalized +
-      * Stats.computeScopedStatsHashed). Same five outputs, same rows.
-      *
-      * DEFAULT since round 14 (measured 85.02 vs 35.50 GB/h on the
-      * 13.18 GB corpus — the 8-byte keys remove the gram-string bytes
-      * from the counts materialization and every stats exchange, an
-      * advantage that only grows with vocabulary size at corpus scale).
-      * The string path remains selectable (`hashedstats = false`) as the
-      * independent A/B witness: VspacePipelineSpec certifies both stats
-      * tables bit-equal between the paths every build, vocabulary-side
-      * hash collisions fail loudly (Vocabulary.hashIndex's
-      * cardinality guard), and the residual gram-stream collision risk
-      * (~n²/2⁶⁵) is certified per corpus by the same A/B when a corpus
-      * warrants it. */
-    hashedStats: Boolean = true)
+    compatOffByOne: Boolean = false)
 
 object VspaceConfig {
   /** Minimal INI parser with ConfigParser's key rules: `[section]`
@@ -87,23 +69,21 @@ object VspaceConfig {
       src2sub      = in("src2sub"),
       collections  = in("collections"),
       phrases      = in("phrases"),
-      compatOffByOne = conf.get("compatoffbyone").exists(_.toBoolean),
-      // absent => the hashed default (see the case-class scaladoc);
-      // `hashedstats = false` selects the string path explicitly
-      hashedStats    = conf.get("hashedstats").map(_.toBoolean).getOrElse(true))
+      compatOffByOne = conf.get("compatoffbyone").exists(_.toBoolean))
   }
 }
 
 /** End-to-end vspace pipeline (reference `main()`, `base.py:306-441`):
   * vocabulary job -> corpus job -> stats job, with the same five outputs.
   * The vocabulary and the normalized corpus are persisted (each consumed
-  * twice). On the default hashed path the stats job is ONE pass over the
-  * gram stream ([[Stats.computeScopedStatsHashed]]): sources attach per
-  * document before the n-gram kernel, one hash aggregation computes both
-  * stats tables, and only its output-sized result is persisted; the gram
-  * stream itself is never cached. The string path keeps the reference's
-  * two-pass shape over a persisted gram stream, as the independent
-  * witness VspacePipelineSpec compares the hashed path against.
+  * twice). The stats job is ONE pass over the gram stream
+  * ([[Stats.computeScopedStatsHashed]]): the gram stream is keyed by
+  * `xxhash64(gram)`, sources attach per document before the n-gram
+  * kernel, one hash aggregation computes both stats tables, and only its
+  * output-sized result is persisted; the gram stream itself is never
+  * cached. VspacePipelineSpec checks both tables against a witness built
+  * from the reference-shaped string operators ([[Corpus.tokenCounts]],
+  * [[Vocabulary.SemiJoinFilter]], [[Stats.computeStats]]).
   */
 object VspacePipeline {
 
@@ -111,9 +91,8 @@ object VspacePipeline {
     * (vocabulary sink / normalized-corpus sink / per-source stats / global
     * stats); ThroughputBench persists the laps into its artifact (round-13
     * lesson: stage tables that live only in stderr get lost with the
-    * window). On the hashed path the one stats
-    * pass runs inside `per_source_stats`; `global_stats` writes from its
-    * persisted result.
+    * window). The one stats pass runs inside `per_source_stats`;
+    * `global_stats` writes from its persisted result.
     *
     * The session's `spark.sql.shuffle.partitions` (set from `cfg.splits`)
     * and the caller's job group are restored on return. */
@@ -177,39 +156,25 @@ object VspacePipeline {
     stage("stats")
     val index   = CorpusSources.loadIndex(spark, cfg.index2doc)
     val sources = CorpusSources.loadSources(spark, cfg.src2sub)
-    if (cfg.hashedStats) {
-      val vocabIndex = persist(Vocabulary.hashIndex(vocabulary))
-      // sources attach per document, before the n-gram kernel
-      val withSources = norm.join(Stats.documentSources(index, sources),
-        Seq("document_index"), "left")
-      val grams = Vocabulary.hashIndexFilter(
-        Corpus.tokenCountHashesFromNormalized(withSources, cfg.maxNgrams,
-          cfg.compatOffByOne),
-        vocabIndex)
-      val stats = persist(Stats.computeScopedStatsHashed(grams, vocabIndex))
-      val measures = Seq("document_frequency", "term_frequency", "tdsum").map(col)
-      Sinks.writeStatsBySource(
-        stats.filter(!col("global"))
-          .select(col("token") +: col("source") +: measures: _*),
-        s"$out/stats_by_source")
-      lap("per_source_stats")
-      Sinks.writeStatsGlobal(
-        stats.filter(col("global")).select(col("token") +: measures: _*),
-        s"$out/stats_global")
-      lap("global_stats")
-    } else {
-      val counts = persist(Vocabulary.SemiJoinFilter(vocabulary)(
-        Corpus.tokenCountsFromNormalized(norm, cfg.maxNgrams, cfg.compatOffByOne),
-        "token"))
-      Sinks.writeStatsBySource(
-        Stats.computeStats(Stats.combineCorpusWithSources(counts, index, sources),
-          Seq("token", "source")),
-        s"$out/stats_by_source")
-      lap("per_source_stats")
-      Sinks.writeStatsGlobal(Stats.computeStats(counts, Seq("token")),
-        s"$out/stats_global")
-      lap("global_stats")
-    }
+    val vocabIndex = persist(Vocabulary.hashIndex(vocabulary))
+    // sources attach per document, before the n-gram kernel
+    val withSources = norm.join(Stats.documentSources(index, sources),
+      Seq("document_index"), "left")
+    val grams = Vocabulary.hashIndexFilter(
+      Corpus.tokenCountHashesFromNormalized(withSources, cfg.maxNgrams,
+        cfg.compatOffByOne),
+      vocabIndex)
+    val stats = persist(Stats.computeScopedStatsHashed(grams, vocabIndex))
+    val measures = Seq("document_frequency", "term_frequency", "tdsum").map(col)
+    Sinks.writeStatsBySource(
+      stats.filter(!col("global"))
+        .select(col("token") +: col("source") +: measures: _*),
+      s"$out/stats_by_source")
+    lap("per_source_stats")
+    Sinks.writeStatsGlobal(
+      stats.filter(col("global")).select(col("token") +: measures: _*),
+      s"$out/stats_global")
+    lap("global_stats")
   }
 
   def main(args: Array[String]): Unit = {

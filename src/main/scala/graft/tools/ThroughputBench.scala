@@ -73,7 +73,7 @@ object ThroughputBench {
     // graft.HostCanary and Bench's dual-canary protocol.
     val stagesJson = stageSecs
       .map { case (k, v) => f""""$k":$v%.1f""" }.mkString("{", ",", "}")
-    val summary = f"""{"metric":"throughput","gb":$gb%.3f,"secs":$secs%.1f,"gb_per_hour":$gbPerHr%.2f,"cores":${graft.Sessions.cpus},"ngrams":6,"hashed":${cfg.hashedStats},${graft.Sessions.decisionsJson(spark)},"canary_pre":$cPre%.3f,"canary_post":$cPost%.3f,"par_canary_pre":$pcPre%.3f,"par_canary_post":$pcPost%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"stage_secs":$stagesJson,"ref_1gb_gb_per_hour":6.7,"ref_sustained_gb_per_hour":19.5}"""
+    val summary = f"""{"metric":"throughput","gb":$gb%.3f,"secs":$secs%.1f,"gb_per_hour":$gbPerHr%.2f,"cores":${graft.Sessions.cpus},"ngrams":6,${graft.Sessions.decisionsJson(spark)},"canary_pre":$cPre%.3f,"canary_post":$cPost%.3f,"par_canary_pre":$pcPre%.3f,"par_canary_post":$pcPost%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"stage_secs":$stagesJson,"ref_1gb_gb_per_hour":6.7,"ref_sustained_gb_per_hour":19.5}"""
     println(summary)
     System.out.flush()
     graft.BenchOut.writeSummary("throughput-last", summary)

@@ -102,7 +102,15 @@ class NGramLawsSpec extends SparkSpec {
     val bset = graft.operators.Vocabulary.BroadcastSetFilter(spark, vocab)
       .apply(tokens, "token").collect()
       .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    assert(semi == bset && semi.nonEmpty)
+    // the vspace job's filter: a probe of the vocabulary's hash index on
+    // xxhash64(gram), with the unigram bypass read from the gram order
+    val hashed = graft.operators.Vocabulary.hashIndexFilter(
+        tokens.withColumn("h", xxhash64(col("token")))
+          .withColumn("n", size(split(col("token"), " "))),
+        graft.operators.Vocabulary.hashIndex(vocab))
+      .select("document_index", "token").collect()
+      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(semi == bset && semi == hashed && semi.nonEmpty)
     // multigrams outside the vocabulary are gone; unigrams all survive
     assert(!semi.exists { case (_, g) => g.contains(" ") && !Set("a b", "quick brown", "lazy dog", "z z")(g) })
     assert(semi.count(!_._2.contains(" ")) == docs.map(_.split(" ").length).sum)

@@ -37,20 +37,6 @@ class DedupSpec extends SparkSpec {
     assert(got(1L) == 0L && got(8L) == 7L)
   }
 
-  test("pathDoubling converges a 100-node chain within O(log d) rounds") {
-    val edges = (0L until 99L).map(i => (i, i + 1)).toDF("a", "b")
-    // reach after k doubling rounds is ~2^(k+1); 10 rounds cover any
-    // diameter up to ~2000 — plain propagation would need 99
-    val doubled = Dedup.connectedComponents(edges, maxIter = 10,
-      pathDoubling = true).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(doubled.size == 100 && doubled.values.forall(_ == 0L))
-    // same budget without doubling: must NOT have converged the far end
-    val plain = Dedup.connectedComponents(edges, maxIter = 10).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(plain(99L) != 0L)
-  }
-
   test("result stays valid after input caches are released") {
     // the returned frame is lineage-truncated: re-collecting after the
     // internal unpersist must not recompute (or fail on) the edge plan

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.NGramCountHashes
-import graft.operators.{Corpus, Stats, Vocabulary}
+import graft.operators.{Corpus, Sinks, Stats, Vocabulary}
 import graft.sources.CorpusSources
 
 /** End-to-end pipeline over a hand-verified mini fixture (SURVEY §5.4):
@@ -237,33 +237,20 @@ class VspacePipelineSpec extends SparkSpec {
     assert(bySource.count() > 0)
     assert(Files.exists(java.nio.file.Paths.get(s"$out/vocabulary")))
     assert(Files.exists(java.nio.file.Paths.get(s"$out/normalized_corpus")))
-
-    def statsSet(o: String) = spark.read.option("delimiter", "\t")
-      .csv(s"$o/stats_global").collect().map(_.toSeq).toSet
-
-    // the DEFAULT path is hashed since round 14 (gram stream keyed by
-    // xxhash64(gram), strings joined back at the stats output); the
-    // string path — the independent A/B witness — must produce BOTH
-    // stats tables exactly equal (the per-corpus certification the
-    // hashed path's collision caveat relies on)
-    assert(VspaceConfig.load(confPath).hashedStats,
-      "INI without a hashedstats key must default to the hashed path")
-    val out3 = graft.SparkSpec.tempDir("vspace-out-string")
-    VspacePipeline.run(spark, VspaceConfig.load(confPath)
-      .copy(outputFolder = out3, hashedStats = false))
-    assert(statsSet(out3) == statsSet(out))
-    def bySourceSet(o: String) = spark.read.option("delimiter", "\t")
-      .csv(s"$o/stats_by_source").withColumn(
-        "source", regexp_extract(input_file_name(), "source=([^/]+)", 1))
-      .collect().map(_.toSeq).toSet
-    assert(bySourceSet(out3) == bySourceSet(out))
+    // the job keys the gram stream by xxhash64(gram) and joins strings back
+    // at the stats output; the string-operator witness must give BOTH
+    // stats tables exactly (the check the hashed path's collision caveat
+    // relies on)
+    val witness = graft.SparkSpec.tempDir("vspace-out-witness")
+    writeWitness(VspaceConfig.load(confPath), witness)
+    assert(readStats(out) == readStats(witness))
   }
 
   test("INI option names are case-insensitive and `:` separates like `=`") {
     // ConfigParser lowercases option names (optionxform) and splits at the
     // first `=` or `:`; section names stay case-sensitive. An option the
-    // job does not read (here the retired `corpusreader`) is ignored, as
-    // ConfigParser ignores keys nobody asks for
+    // job does not read (here the retired `corpusreader` and `hashedstats`)
+    // is ignored, as ConfigParser ignores keys nobody asks for
     val conf =
       """[vspace_conf]
         |StagingLoc = /tmp/staging
@@ -288,7 +275,7 @@ class VspacePipelineSpec extends SparkSpec {
       maxNgrams = 5, splits = Some(8),
       corpus = "/data/corpus", index2doc = "hdfs://nn:8020/index=v1",
       src2sub = "/data/src2sub", collections = "/data/collections",
-      phrases = "/data/phrases", hashedStats = false))
+      phrases = "/data/phrases"))
   }
 
   test("INI: a repeated option or section is an error, as under ConfigParser's strict mode") {
@@ -309,10 +296,13 @@ class VspacePipelineSpec extends SparkSpec {
     * claimed by two sources, and a subsource claimed by none.
     *   doc0 "Big data systems."  [big, data, systems]  index sub1 + sub2
     *   doc1 "data, data big"     [data, data, big]     index sub3 (unclaimed)
-    *   doc2 "Spark data"         [spark, data]         no index row
+    *   doc2 "Spark data 𝐀lpha"   [spark, data, 𝐀lpha]  no index row
     *   doc3 "big data"           [big, data]           index sub1
     * sub1 -> SRC_A, SRC_B; sub2 -> SRC_B; so doc0's sources are the
-    * multiset {SRC_A, SRC_B, SRC_B} and doc3's {SRC_A, SRC_B}. */
+    * multiset {SRC_A, SRC_B, SRC_B} and doc3's {SRC_A, SRC_B}. `𝐀`
+    * (U+1D400) is a supplementary-plane letter that NFC and lowercasing
+    * keep, so the vocabulary bigram "data 𝐀lpha" makes the hashed kernel
+    * assemble a 4-byte UTF-8 character into a gram. */
   private lazy val edgeDir = graft.SparkSpec.tempDir("vspace-edge")
 
   private lazy val edgeConfig: VspaceConfig = {
@@ -326,14 +316,14 @@ class VspacePipelineSpec extends SparkSpec {
       maxNgrams = 2,
       splits = None,
       corpus = write("corpus.txt", Seq("Big data systems.", "data, data big",
-        "Spark data", "big data").mkString(s" $delim ")),
+        "Spark data 𝐀lpha", "big data").mkString(s" $delim ")),
       index2doc = write("index.tsv", Seq(
         "0\thttp://a\tsub1\t2020\t\tT0\tA\t\t\t",
         "0\thttp://a\tsub2\t2020\t\tT0\tA\t\t\t",
         "1\thttp://b\tsub3\t2021\t\tT1\tB\t\t\t",
         "3\thttp://d\tsub1\t2022\t\tT3\tD\t\t\t").mkString("\n")),
       src2sub = write("src2sub.txt", Seq("SRC_A sub1", "SRC_B sub1,sub2").mkString("\n")),
-      collections = write("collections.txt", "data_big"),
+      collections = write("collections.txt", "data_big\ndata_𝐀lpha"),
       phrases = write("phrases.txt", "big_data extra"))
   }
 
@@ -355,23 +345,42 @@ class VspacePipelineSpec extends SparkSpec {
     (global.toMap, bySource.toMap)
   }
 
+  /** The string-operator witness: both stats tables of `cfg`'s job built
+    * from the reference-shaped operators (string grams over the raw corpus,
+    * [[Vocabulary.SemiJoinFilter]], [[Stats.combineCorpusWithSources]] +
+    * [[Stats.computeStats]]) and written through the job's sinks under
+    * `out`, so a comparison with the job stays CSV to CSV. */
+  private def writeWitness(cfg: VspaceConfig, out: String): Unit = {
+    val vocabulary = Vocabulary.build(
+      CorpusSources.loadPhrases(spark, cfg.phrases),
+      CorpusSources.loadCollections(spark, cfg.collections))
+    val counts = Vocabulary.SemiJoinFilter(vocabulary)(
+      Corpus.tokenCounts(CorpusSources.loadRawCorpus(spark, cfg.corpus),
+        cfg.maxNgrams, cfg.compatOffByOne),
+      "token")
+    Sinks.writeStatsBySource(
+      Stats.computeStats(Stats.combineCorpusWithSources(counts,
+        CorpusSources.loadIndex(spark, cfg.index2doc),
+        CorpusSources.loadSources(spark, cfg.src2sub)), Seq("token", "source")),
+      s"$out/stats_by_source")
+    Sinks.writeStatsGlobal(Stats.computeStats(counts, Seq("token")),
+      s"$out/stats_global")
+  }
+
   test("edge-shape index: hashed stats equal the string path and hand-checked values") {
     val hashed = readStats {
       VspacePipeline.run(spark, edgeConfig.copy(outputFolder = s"$edgeDir/hashed"))
       s"$edgeDir/hashed"
     }
-    val string = readStats {
-      VspacePipeline.run(spark, edgeConfig.copy(outputFolder = s"$edgeDir/string",
-        hashedStats = false))
-      s"$edgeDir/string"
-    }
-    assert(hashed == string)
+    writeWitness(edgeConfig, s"$edgeDir/witness")
+    assert(hashed == readStats(s"$edgeDir/witness"))
     val (global, bySource) = hashed
     // doc0 counts ONCE in global DF despite its two index rows; doc2 (no
     // index row) and doc1 (unclaimed subsource) count too
     assert(global == Map(
-      "big" -> ((3L, 3L, 8L)), "data" -> ((4L, 5L, 10L)),
-      "systems" -> ((1L, 1L, 3L)), "spark" -> ((1L, 1L, 2L)),
+      "big" -> ((3L, 3L, 8L)), "data" -> ((4L, 5L, 11L)),
+      "systems" -> ((1L, 1L, 3L)), "spark" -> ((1L, 1L, 3L)),
+      "𝐀lpha" -> ((1L, 1L, 3L)), "data 𝐀lpha" -> ((1L, 1L, 3L)),
       "big data" -> ((2L, 2L, 5L)), "data big" -> ((1L, 1L, 3L))))
     // SRC_A: docs 0, 3. SRC_B: doc0 twice (sub1 and sub2), doc3. Neither
     // doc1 nor doc2 reaches any source.
@@ -380,6 +389,19 @@ class VspacePipelineSpec extends SparkSpec {
       ("systems", "SRC_A") -> ((1L, 1L, 3L)), ("big data", "SRC_A") -> ((2L, 2L, 5L)),
       ("big", "SRC_B") -> ((3L, 3L, 8L)), ("data", "SRC_B") -> ((3L, 3L, 8L)),
       ("systems", "SRC_B") -> ((2L, 2L, 6L)), ("big data", "SRC_B") -> ((3L, 3L, 8L))))
+  }
+
+  test("empty corpus: the job writes the vocabulary and empty stats equal to the witness") {
+    val empty = edgeConfig.copy(corpus = s"$edgeDir/empty.txt",
+      outputFolder = s"$edgeDir/empty")
+    Files.writeString(Paths.get(empty.corpus), "")
+    VspacePipeline.run(spark, empty)
+    val vocab = spark.read.option("delimiter", "\t").csv(s"$edgeDir/empty/vocabulary")
+    assert(vocab.count() == 3)
+    writeWitness(empty, s"$edgeDir/empty-witness")
+    val stats = readStats(s"$edgeDir/empty")
+    assert(stats == ((Map.empty, Map.empty)))
+    assert(stats == readStats(s"$edgeDir/empty-witness"))
   }
 
   test("run restores the caller's shuffle partitions and job group") {
