@@ -61,16 +61,22 @@ object Bench {
     * updates monotonically downward (min of persisted and this run's
     * end-of-run clean medians, with >= 8 clean samples required), since
     * the clean floor of a fixed workload only moves if the hardware does.
-    * Delete the file after a REAL hardware change.
+    *
+    * Keyed by box ([[HostCanary.boxKey]]: cores, CPU model, max heap), so
+    * a run on one box neither reads nor lowers another box's band (an
+    * sf0.01 smoke run on 4 cores once moved the 32-core band 0.165 →
+    * 0.158). `bench-artifacts/canary-ref.json` is the unkeyed 32-core
+    * record from before the key and is no longer read.
     *
     * Dual-located (round-14 lesson): `target/` is wiped by clean/round
     * resets — round 14 opened with the band file gone — so the band also
-    * lives at the git-tracked `bench-artifacts/canary-ref.json`; load
-    * prefers target (freshest) and falls back to the durable copy, save
-    * writes both. */
-  private val CanaryRefPath = java.nio.file.Paths.get("target/canary-ref.json")
+    * lives at the git-tracked `bench-artifacts/canary-ref-<box>.json`;
+    * load prefers target (freshest) and falls back to the durable copy,
+    * save writes both. */
+  private val box = HostCanary.thisBox()
+  private val CanaryRefPath = java.nio.file.Paths.get(s"target/canary-ref-$box.json")
   private val CanaryRefDurablePath =
-    java.nio.file.Paths.get("bench-artifacts/canary-ref.json")
+    java.nio.file.Paths.get(s"bench-artifacts/canary-ref-$box.json")
   private def loadCanaryRef(): Option[(Double, Double)] =
     try {
       val p = Seq(CanaryRefPath, CanaryRefDurablePath)
@@ -156,7 +162,7 @@ object Bench {
     (1 to 3).foreach { _ => canaries += canarySec(); parCanaries += parCanarySec() }
     val persistedRef = loadCanaryRef()
     persistedRef.foreach { case (s, p) =>
-      System.err.println(f"[bench] canary reference band (persisted): serial $s%.3f, parallel $p%.3f")
+      System.err.println(f"[bench] canary reference band (persisted, $box): serial $s%.3f, parallel $p%.3f")
     }
     // effective reference = min(persisted clean band, live clean median):
     // from rep 1 a degraded-start window is judged against the box's known

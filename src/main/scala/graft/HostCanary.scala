@@ -60,4 +60,33 @@ object HostCanary {
   def loadAvg(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
+
+  /** The box a clean canary band belongs to, as a file-name-safe key:
+    * logical cores, max heap rounded to whole GiB, and the CPU model
+    * slugged (`4c-3g-intel-xeon-platinum-8375c-cpu-2-90ghz`). The canary's
+    * clean value is a property of exactly these, so bands measured on
+    * different boxes never mix. Pure. */
+  def boxKey(cores: Int, cpuModel: String, maxHeapBytes: Long): String = {
+    val model = cpuModel.toLowerCase(java.util.Locale.ROOT)
+      .replace("(r)", "").replace("(tm)", "")
+      .replaceAll("[^a-z0-9]+", "-").stripPrefix("-").take(48).stripSuffix("-")
+    val heapGb = math.round(maxHeapBytes.toDouble / (1L << 30))
+    s"${cores}c-${heapGb}g-${if (model.isEmpty) "unknown" else model}"
+  }
+
+  /** [[boxKey]] of this JVM's box: available processors, `-Xmx`, and the
+    * first `model name` in /proc/cpuinfo (the OS architecture where that
+    * file is absent). */
+  def thisBox(): String = {
+    val model =
+      try {
+        val src = scala.io.Source.fromFile("/proc/cpuinfo")
+        try src.getLines().collectFirst {
+          case l if l.startsWith("model name") => l.dropWhile(_ != ':').drop(1).trim
+        } finally src.close()
+      } catch { case _: java.io.IOException => None }
+    boxKey(Runtime.getRuntime.availableProcessors(),
+      model.getOrElse(System.getProperty("os.arch", "")),
+      Runtime.getRuntime.maxMemory())
+  }
 }

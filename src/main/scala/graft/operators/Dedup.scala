@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Duplicate-cluster resolution: after near-dup PAIR detection (MinHash/
   * SimHash/cosine), production dedup needs the transitive closure — one
@@ -17,18 +17,18 @@ import org.apache.spark.storage.StorageLevel
   * driver only checks the "any label changed?" bit per round.
   *
   * Iteration hygiene (the part naive loops get wrong at scale): the edge
-  * set is persisted once up front — its lineage is often an expensive
+  * set is checkpointed once up front — its lineage is often an expensive
   * candidate-generation pipeline (MinHash→LSH→verification) that must not
-  * re-run per round — and the label frontier is localCheckpoint'ed every
-  * few rounds so the plan doesn't accrete one join per iteration (growing
-  * lineage blows up planning time and, on executor loss, recompute cost).
+  * re-run per round — and so is every round's label frontier, so the plan
+  * never accretes one join per iteration (growing lineage blows up
+  * planning time and, on executor loss, recompute cost). Local
+  * checkpoints rather than persisted frames: each is
+  * written by its own SQL execution, which owns that round's shuffles, so
+  * a session with `spark.sql.classic.shuffleDependency.fileCleanup.enabled`
+  * removes them as the rounds go (a persisted frame's cached-plan
+  * shuffles wait for a driver GC).
   */
 object Dedup {
-
-  /** How often to truncate the label lineage: every third round (measured
-    * best on the q36 graph — cadence trades lineage growth against
-    * checkpoint-write round trips). */
-  private val CheckpointEvery = 3
 
   /** edges: undirected pairs in columns (a, b). Returns (id, cluster_id)
     * for every node that appears in an edge, cluster_id = min node id of
@@ -38,22 +38,22 @@ object Dedup {
     * CONCURRENCY: when `numPartitions` is set, this method temporarily
     * overrides the SESSION's `spark.sql.shuffle.partitions` for the
     * duration of the iteration (restored in `finally`; rationale in the
-    * body — cached-plan exchanges ignore a per-plan repartition). Do NOT
+    * body — the per-round exchanges plan at the session count). Do NOT
     * run other actions on the same SparkSession concurrently with such a
     * call: they would plan their shuffles at the edge-sized count. All of
     * this library's own callers run it synchronously. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
       numPartitions: Option[Int] = None): DataFrame = {
-    // Pre-partition the symmetric edge set on the join key BEFORE caching:
-    // every iteration joins sym on `b`, and a cached frame keeps its
-    // physical partitioning, so the per-round plan reuses this one shuffle
+    // Pre-partition the symmetric edge set on the join key BEFORE
+    // checkpointing: every iteration joins sym on `b`, and a checkpoint
+    // keeps its physical partitioning, so the per-round plan reuses this one shuffle
     // instead of re-exchanging the (potentially huge) edge set every round.
     //
     // `numPartitions` sizes that ONE partitioning — and with it every
     // per-round stage, because the iterative joins co-partition to the
-    // cached sym (a USER repartition, exempt from AQE coalescing). Pass it
-    // when the session's shuffle partitions are sized for a much larger
-    // frame: inside the data pipeline the session runs ~128
+    // checkpointed sym (a USER repartition, exempt from AQE coalescing).
+    // Pass it when the session's shuffle partitions are sized for a much
+    // larger frame: inside the data pipeline the session runs ~128
     // partitions/GB-of-corpus for the text shuffles, but the edge frame is
     // 1000x smaller than the corpus, so inheriting the session count made
     // every CC round pay ~1800 near-empty tasks x several stages x 2
@@ -65,13 +65,11 @@ object Dedup {
     // session is sized for frames like the edges themselves.
     val parts = numPartitions.getOrElse(
       edges.sparkSession.sessionState.conf.numShufflePartitions)
-    // Scoping the conf (not just sym's repartition) matters: every
-    // per-round frame is persisted, and AQE does not re-plan cached-plan
-    // exchanges (canChangeCachedPlanOutputPartitioning defaults false), so
-    // the per-round groupBy/join exchanges would otherwise still run at
-    // the session count. All actions against these plans happen inside
-    // this function (counts in the loop + the final localCheckpoint), so
-    // restoring the conf afterwards is safe.
+    // Scoping the conf (not just sym's repartition) matters: the per-round
+    // groupBy/join exchanges are planned at the session count, which AQE
+    // can only coalesce after paying its map-side files. All actions
+    // against these plans happen inside this function (the checkpoints and
+    // counts in the loop), so restoring the conf afterwards is safe.
     val sessConf = edges.sparkSession.conf
     val prevParts = sessConf.get("spark.sql.shuffle.partitions")
     if (numPartitions.isDefined)
@@ -86,13 +84,12 @@ object Dedup {
     val sym = edges.select(col("a"), col("b"))
       .union(edges.select(col("b").as("a"), col("a").as("b")))
       .repartition(parts, col("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // `cached` is the frame actually holding materialized data (persisted or
-    // checkpointed); `labels` is the (id, lbl) view over it. Tracked
-    // separately so unpersist() targets the exact cached plan.
+      .localCheckpoint(eager = true)
+    // `cached` is the checkpoint actually holding the labels; `labels` is
+    // the (id, lbl) view over it.
     var cached = sym.select(col("a").as("id")).distinct()
       .withColumn("lbl", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = true)
     var labels  = cached
     var iter    = 0
     var changed = true
@@ -103,18 +100,15 @@ object Dedup {
       // Carry the "did this node improve?" bit through the update itself so
       // the convergence check is a count on the materialized frame, not a
       // second labels join per round.
-      val joined = labels
+      val next = labels
         .join(nbrMin.select(col("a").as("id"), col("nbl")), Seq("id"), "left")
         .select(col("id"), col("lbl"),
           least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("plbl"))
         .select(col("id"), col("plbl").as("lbl"),
           (col("plbl") < col("lbl")).as("improved"))
-      val next =
-        if (iter % CheckpointEvery == CheckpointEvery - 1)
-          joined.localCheckpoint(eager = true)
-        else joined.persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager = true)
       changed = next.filter(col("improved")).limit(1).count() > 0
-      cached.unpersist()
+      release(cached)
       cached = next
       labels = next.drop("improved")
       iter += 1
@@ -124,12 +118,15 @@ object Dedup {
         s"[graft] Dedup.connectedComponents: NOT converged after $maxIter " +
           "iterations — labels are not final; raise maxIter (graph diameter " +
           "exceeds it)")
-    // Truncate lineage before releasing the edge cache so the returned frame
-    // never re-derives the (possibly very expensive) pair pipeline.
-    val out = labels.localCheckpoint(eager = true)
-      .withColumnRenamed("lbl", "cluster_id")
-    cached.unpersist()
-    sym.unpersist()
-    out
+    release(sym)
+    labels.withColumnRenamed("lbl", "cluster_id")
+  }
+
+  /** Drop a local checkpoint's blocks now. `Dataset.unpersist` only reaches
+    * the CacheManager, which never holds a checkpoint, so it would leave
+    * them until the driver GC collects the RDD. */
+  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
   }
 }

@@ -244,11 +244,38 @@ object DataPipelineBench {
     * (how many escaped it) — so the caller can assert the stage actually
     * caught the contamination instead of trusting survivor totals. Both
     * probes run against already-checkpointed frames with a broadcast-
-    * small right side: wall cost is seconds against a 20-minute run. */
+    * small right side: wall cost is seconds against a 20-minute run.
+    *
+    * Shuffle files are removed when the SQL execution that wrote them
+    * ends: `run` sets `spark.sql.classic.shuffleDependency.fileCleanup.enabled`
+    * for its own duration (the caller's value is restored on return), so
+    * every frame it derives plans in Spark's `RemoveShuffleFiles` mode. A
+    * stage's shuffles are gone once its action returns and none are left
+    * behind after `run` returns (connected components checkpoints each
+    * round, so its shuffles go the same way). Re-executing the SAME Dataset after its
+    * shuffles are removed would recompute their map stages, so every
+    * action here runs on a fresh derivation or on a checkpointed frame. */
   def run(spark: SparkSession, corpus: DataFrame, benchmark: DataFrame,
       outDir: String, plantedIds: Option[DataFrame] = None,
       lapSink: (String, Double) => Unit = (_, _) => (),
       ckptLevel: Option[StorageLevel] = None): Seq[(String, Long)] = {
+    // bound when each QueryExecution is created, so it is set before any
+    // frame below is derived
+    val callerCleanup = spark.conf.get(ShuffleFileCleanup)
+    spark.conf.set(ShuffleFileCleanup, "true")
+    try stages(spark, corpus, benchmark, outDir, plantedIds, lapSink, ckptLevel)
+    finally spark.conf.set(ShuffleFileCleanup, callerCleanup)
+  }
+
+  /** The session conf under which [[run]] removes each SQL execution's
+    * shuffle files when the execution ends. */
+  private[graft] val ShuffleFileCleanup =
+    "spark.sql.classic.shuffleDependency.fileCleanup.enabled"
+
+  private def stages(spark: SparkSession, corpus: DataFrame,
+      benchmark: DataFrame, outDir: String, plantedIds: Option[DataFrame],
+      lapSink: (String, Double) => Unit,
+      ckptLevel: Option[StorageLevel]): Seq[(String, Long)] = {
     import graft.functions.normalize_text
 
     // Corpus-sized stage frames checkpoint at `ckptLevel` when given
@@ -266,19 +293,12 @@ object DataPipelineBench {
       println(f"[dp] $stage: ${(now - tLast) / 1e9}%.1f s")
       lapSink(stage.trim, (now - tLast) / 1e9)
       tLast = now
-      // Shuffle files from completed stages are reaped by the
-      // ContextCleaner only when their ShuffleDependency objects are GC'd
-      // on the driver; in one long-lived job over a multi-GB corpus the
-      // accumulated dead spill was the DISK ceiling (measured: the 3x-size
-      // run filled the volume with shuffle files three stages after the
-      // shuffles were last referenced). One explicit gc per stage boundary
-      // lets the cleaner keep pace; wall cost is milliseconds per stage.
-      // NOTE for cluster deployment: Spark ships a CONFIG for exactly this
-      // — `spark.cleaner.periodicGC.interval` (default 30min; set it to
-      // ~1-5min for long shuffle-heavy jobs). Tune the config there, not
-      // the code; the explicit call stays here only because this tool's
-      // per-stage laps want deterministic reap points inside ONE job.
-      System.gc()
+      // No reaping here: the stage's shuffle files went when its SQL
+      // execution ended (see run). Left to the ContextCleaner, which reaps
+      // a shuffle only after a driver GC collects its ShuffleDependency,
+      // that dead spill was the DISK ceiling of one long-lived job over a
+      // multi-GB corpus (the 3x-size run filled the volume with shuffle
+      // files three stages after they were last referenced).
     }
 
     // --- stage 1: one scan computes everything per-doc and map-side:

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One way to start a local session: only `Sessions.scala` builds one
   * (plus `VspacePipeline.scala`, the spark-submit entry, which keeps the
-  * cluster's master) and only it reads the session env. */
+  * cluster's master) and only it reads the session env. Explicit GCs stay
+  * in the harness mains that quiet the heap between timed reps. */
 class SessionLintSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(String, String)] = {
@@ -34,5 +35,11 @@ class SessionLintSpec extends AnyFunSuite {
   test("the session env is read only in Sessions") {
     assert(offenders(Set("graft/Sessions.scala"),
       "\"SPARK_GRAFT_(CPUS|SF_DIR|CONF)\"") == Nil)
+  }
+
+  test("System.gc() appears only in the harness mains, between timed reps") {
+    assert(offenders(Set("graft/Bench.scala", "graft/tools/ScalingProbe.scala",
+      "graft/tools/StreamBench.scala", "graft/tools/AnnBench.scala"),
+      """System\s*\.\s*gc\s*\(""") == Nil)
   }
 }

@@ -19,8 +19,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("chain longer than one propagation round still converges") {
-    // a 9-node path: min label must travel 8 hops (> CheckpointEvery, so
-    // the localCheckpoint path is exercised too)
+    // a 9-node path: min label must travel 8 hops, each round reading the
+    // previous round's checkpoint
     val edges = (0L until 8L).map(i => (i, i + 1)).toDF("a", "b")
     val got = Dedup.connectedComponents(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -39,7 +39,8 @@ class DedupSpec extends SparkSpec {
 
   test("result stays valid after input caches are released") {
     // the returned frame is lineage-truncated: re-collecting after the
-    // internal unpersist must not recompute (or fail on) the edge plan
+    // internal release of the edge checkpoint must not recompute (or fail
+    // on) the edge plan
     val edges = Seq((5L, 4L), (4L, 3L)).toDF("a", "b")
     val cc = Dedup.connectedComponents(edges)
     val first  = cc.orderBy(col("id")).collect().map(_.getLong(1)).toSeq

@@ -1,5 +1,10 @@
 package graft.tools
 
+import java.io.IOException
+import java.nio.file.{FileVisitResult, Files, Path, Paths, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -9,14 +14,19 @@ import graft.SparkSpec
   * counts and the final output are asserted exactly. */
 class DataPipelineSpec extends SparkSpec {
 
-  test("pipeline removes exact dups, near-dups, and planted contamination") {
-    import spark.implicits._
-    // 40-token docs in per-doc token namespaces, so the ONLY shared
-    // n-grams are the ones planted below (a shared cyclic vocabulary
-    // would collide 7-token runs across unrelated docs)
-    def doc(p: String): String = (0 until 40).map(i => s"$p$i").mkString(" ")
+  // 40-token docs in per-doc token namespaces, so the ONLY shared
+  // n-grams are the ones planted below (a shared cyclic vocabulary
+  // would collide 7-token runs across unrelated docs)
+  private def doc(p: String): String = (0 until 40).map(i => s"$p$i").mkString(" ")
 
-    val corpus = Seq(
+  private lazy val benchmark: DataFrame = {
+    import spark.implicits._
+    Seq((100L, doc("q"))).toDF("bench_id", "text")
+  }
+
+  private lazy val corpus: DataFrame = {
+    import spark.implicits._
+    Seq(
       // exact-dup pair: 0 kept (lowest id), 1 dropped
       (0L, "s0", doc("a")),
       (1L, "s0", doc("a")),
@@ -32,8 +42,9 @@ class DataPipelineSpec extends SparkSpec {
       // too short for the quality floor (wc < 5)
       (7L, "s1", "a b c")
     ).toDF("doc_id", "source", "text")
-    val benchmark = Seq((100L, doc("q"))).toDF("bench_id", "text")
+  }
 
+  test("pipeline removes exact dups, near-dups, and planted contamination") {
     val out = graft.SparkSpec.tempDir("graft-dp-spec")
     val counts = DataPipelineBench.run(spark, corpus, benchmark, out).toMap
 
@@ -47,5 +58,64 @@ class DataPipelineSpec extends SparkSpec {
     val kept = spark.read.parquet(out).select(col("doc_id"))
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(0L, 3L, 4L, 5L))
+  }
+
+  /** Shuffle data and index files under the session's local dirs, resolved
+    * as Spark resolves them: SPARK_LOCAL_DIRS, else spark.local.dir, else
+    * java.io.tmpdir. Requires a block-manager dir among them, so an empty
+    * result cannot come from looking in the wrong place. */
+  private def shuffleFiles(): Set[Path] = {
+    val roots = sys.env.get("SPARK_LOCAL_DIRS")
+      .orElse(spark.sparkContext.getConf.getOption("spark.local.dir"))
+      .getOrElse(System.getProperty("java.io.tmpdir"))
+      .split(",").map(d => Paths.get(d.trim)).filter(Files.isDirectory(_))
+    val found = Set.newBuilder[Path]
+    var blockManagerDirs = 0
+    roots.foreach { root =>
+      // files vanish mid-walk (other cleanups run concurrently): skip them
+      Files.walkFileTree(root, java.util.Set.of(), 5, new SimpleFileVisitor[Path] {
+        override def preVisitDirectory(d: Path, a: BasicFileAttributes): FileVisitResult = {
+          if (d.getFileName.toString.startsWith("blockmgr-")) blockManagerDirs += 1
+          FileVisitResult.CONTINUE
+        }
+        override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
+          if (f.getFileName.toString.startsWith("shuffle_")) found += f
+          FileVisitResult.CONTINUE
+        }
+        override def visitFileFailed(f: Path, e: IOException): FileVisitResult =
+          FileVisitResult.CONTINUE
+      })
+    }
+    assert(blockManagerDirs > 0, s"no blockmgr-* dir under ${roots.mkString(", ")}")
+    found.result()
+  }
+
+  test("run removes every shuffle file it wrote before it returns") {
+    val before = shuffleFiles()
+    val counts = DataPipelineBench.run(spark, corpus, benchmark,
+      graft.SparkSpec.tempDir("graft-dp-spec")).toMap
+    assert(counts("after_decontam") == 4L)
+    // removal is asynchronous outside Spark's testing mode: poll briefly
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    var left = shuffleFiles() -- before
+    while (left.nonEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(100)
+      left = shuffleFiles() -- before
+    }
+    assert(left.isEmpty, s"${left.size} shuffle files left: ${left.take(5).mkString(", ")}")
+  }
+
+  test("run restores the caller's shuffle-file cleanup conf") {
+    val key = DataPipelineBench.ShuffleFileCleanup
+    val caller = spark.conf.getOption(key) // Some("false") when unset
+    try Seq("false", "true").foreach { v =>
+      spark.conf.set(key, v)
+      val during = scala.collection.mutable.Set.empty[String]
+      DataPipelineBench.run(spark, corpus, benchmark,
+        graft.SparkSpec.tempDir("graft-dp-spec"),
+        lapSink = (_, _) => during += spark.conf.get(key))
+      assert(during == Set("true"))
+      assert(spark.conf.get(key) == v)
+    } finally caller.foreach(spark.conf.set(key, _))
   }
 }
