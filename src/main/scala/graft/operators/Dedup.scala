@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+
+import graft.Checkpoints.release
 
 /** Duplicate-cluster resolution: after near-dup PAIR detection (MinHash/
   * SimHash/cosine), production dedup needs the transitive closure — one
@@ -34,6 +35,10 @@ object Dedup {
     * for every node that appears in an edge, cluster_id = min node id of
     * its component. Warns on stderr if maxIter is hit before convergence
     * (returned labels are then an upper bound, not final clusters).
+    *
+    * The returned labels read a local checkpoint that the caller owns:
+    * free it with [[graft.Checkpoints.release]] once nothing reads them
+    * again (otherwise its blocks stay until a driver GC collects the RDD).
     *
     * CONCURRENCY: when `numPartitions` is set, this method temporarily
     * overrides the SESSION's `spark.sql.shuffle.partitions` for the
@@ -120,13 +125,5 @@ object Dedup {
           "exceeds it)")
     release(sym)
     labels.withColumnRenamed("lbl", "cluster_id")
-  }
-
-  /** Drop a local checkpoint's blocks now. `Dataset.unpersist` only reaches
-    * the CacheManager, which never holds a checkpoint, so it would leave
-    * them until the driver GC collects the RDD. */
-  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ =>
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
+import graft.Checkpoints.release
+
 /** The near-duplicate operator: exact-verified MinHash-LSH over a
   * `(doc_id, text)` frame, the one implementation behind the catalog's
   * near-dup queries (q32/q36/q37/q92/q94/q95/q120/q152), the data
@@ -171,8 +173,10 @@ object NearDup {
   /** Keep-best survivors: every row of `docs` (`doc_id`, `quality`, ...)
     * outside any cluster, plus the best-quality member of each cluster
     * (lowest id on ties), from the cluster assignment `(doc_id,
-    * cluster_id)`. Returns (plan, cleanup); run cleanup once the caller
-    * has materialized the plan.
+    * cluster_id)`. Returns (plan, cleanup). The plan reads a local
+    * checkpoint of the losers; cleanup frees its blocks irrecoverably, so
+    * run it once the caller has materialized the plan and never reads it
+    * again. `clusters` stays the caller's to free.
     *
     * The losers (cluster members minus winners, id-sized) fold into a
     * broadcast Bloom filter: rows missing it are provably keepers and
@@ -194,7 +198,7 @@ object NearDup {
       broadcastBloom(losers, losers.count()), col("doc_id"))
     (docs.filter(!mightLose)
       .unionByName(docs.filter(mightLose).join(losers, Seq("doc_id"), "left_anti")),
-      () => losers.unpersist())
+      () => release(losers))
   }
 
   /** A broadcast 1%-fpp Bloom filter of the `n` ids in `ids.doc_id`. An

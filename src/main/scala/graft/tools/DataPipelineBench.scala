@@ -25,21 +25,13 @@ import org.apache.spark.storage.StorageLevel
   * the shape a web-scale ingest actually sees, scaled down.
   *
   * Usage: runMain graft.tools.DataPipelineBench [targetGB] [workDir]
-  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_SF_DIR (doc source), SPARK_DRIVER_MEM.
+  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_SF_DIR (doc source), SPARK_DRIVER_MEM,
+  * SPARK_GRAFT_DP_GENONLY (generate the corpus and exit).
   */
 object DataPipelineBench {
 
-  /** Duplicate-mix selector (SPARK_GRAFT_DP_MIX): group size of the
-    * generator's controlled duplicate structure.
-    *  - `dense` (default): 5-row groups — 20% exact dups, near-dup
-    *    participant fraction ~50% of exact survivors. The r12-r15 corpus.
-    *  - `sparse`: 10-row groups (1 exact dup + 1 near-dup + 7 uniques) —
-    *    10% exact dups, participant fraction ~22%, hot-band-key rows ~22%:
-    *    the web-crawl-like mix. */
-  def mixGroupSize(mix: String): Int = mix match {
-    case "sparse" => 10
-    case _        => 5
-  }
+  /** Rows per duplicate group of the generated corpus (see [[generate]]). */
+  private val GroupSize = 5
 
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // dot-decimal JSON under any host locale
@@ -60,21 +52,14 @@ object DataPipelineBench {
 
     val tag = f"${targetGB}%.2f".replace('.', 'p')
     val in  = Paths.get(s"$workDir/in_$tag")
-    // duplicate-mix selector (see mixGroupSize) — the group size is baked
-    // into the corpus, so the _DONE marker records it and a mismatched
-    // reuse regenerates rather than silently mis-gating the count checks
-    val mix = sys.env.getOrElse("SPARK_GRAFT_DP_MIX", "dense")
-    val groupSize = mixGroupSize(mix)
-    val doneMix =
-      if (!Files.exists(in.resolve("_DONE"))) None
-      else Some(new String(Files.readAllBytes(in.resolve("_DONE")),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-        .map(s => if (s.isEmpty) "dense" else s) // legacy marker = dense
-    // `planted` missing ⇒ a corpus from the pre-fix generator (round 12's
-    // planting bug, or no ground truth persisted) — regenerate
-    if (doneMix.isEmpty || doneMix.get != mix ||
+    // The _DONE marker names the duplicate mix the corpus was built with
+    // (empty in legacy corpora, which are dense). A corpus of another mix
+    // would mis-gate the count checks, and one without `planted` comes
+    // from the pre-fix generator (round 12's planting bug): regenerate both.
+    val done = in.resolve("_DONE")
+    if (!Files.exists(done) || !Set("", "dense")(Files.readString(done).trim) ||
         !Files.exists(in.resolve("planted")))
-      generate(spark, sfDir, in, targetGB, cpus, groupSize, mix)
+      generate(spark, sfDir, in, targetGB, cpus)
     // SPARK_GRAFT_DP_GENONLY=1: synthesize the corpus and exit, so the
     // measured run starts against a SETTLED corpus in a separate JVM —
     // generating minutes before the run leaves the corpus parquet in
@@ -84,41 +69,11 @@ object DataPipelineBench {
       println(s"[dp] generate-only: corpus ready at $in")
       spark.stop(); return
     }
-    val baseCorpus = spark.read.parquet(in.resolve("docs").toString)
+    val corpus = spark.read.parquet(in.resolve("docs").toString)
     val benchmark = spark.read.parquet(in.resolve("bench").toString)
     val planted = spark.read.parquet(in.resolve("planted").toString)
     val nPlanted = planted.count()
 
-    // SPARK_GRAFT_DP_HOTKEY=N: hot-key stress — plant N near-identical
-    // boilerplate rows (one shared base text + a per-row unique tail token).
-    // Distinct digests survive exact dedup; the shared base makes most of
-    // the 32 band keys COLLIDE across all N rows, so bucketPairs sees ~30
-    // bh buckets of ~N rows each — the exact shape that OOMs an
-    // unbounded collect_list and that collect_capped bounds at cap+1
-    // elements of state. Self-validating: the run must complete with the
-    // cap listener logging the dropped buckets, the verified-pair count
-    // unchanged vs the unplanted run (tail shingles are row-unique, so hot
-    // rows only ever collide in DROPPED buckets and produce no pairs), and
-    // every stage count shifted by exactly +N.
-    val hotKeyRows = sys.env.get("SPARK_GRAFT_DP_HOTKEY").map(_.toLong).getOrElse(0L)
-    val corpus =
-      if (hotKeyRows <= 0) baseCorpus
-      else {
-        // The shared base is SYNTHESIZED from tokens guaranteed absent from
-        // the corpus (an earlier revision sampled a real corpus document,
-        // whose own buckets — and therefore its GENUINE near-dup pairs —
-        // went hot and were capped away, spuriously breaking the
-        // "verified pairs unchanged" invariant below). 64 unique synthetic
-        // tokens give the planted rows a full shingle set that collides
-        // only among themselves.
-        val baseText = (0 until 64).map(i => s"zzhotkeybase$i").mkString(" ")
-        val maxId = baseCorpus.agg(max(col("doc_id"))).head().getLong(0)
-        baseCorpus.unionByName(
-          spark.range(hotKeyRows).select(
-            (col("id") + maxId + 1L).as("doc_id"),
-            lit("hotkey").as("source"),
-            concat(lit(baseText), lit(" h"), col("id")).as("text")))
-      }
     val gb = corpus.agg(sum(length(col("text")))).head().getLong(0) / 1e9
 
     val outDir = s"$workDir/out_$tag"
@@ -158,7 +113,7 @@ object DataPipelineBench {
     val cm = counts.toMap
     val docsIn = cm.getOrElse("docs_in", 0L)
     val nCands = cm.getOrElse("near_candidates", 0L)
-    val candGroups = math.max(1L, (docsIn - hotKeyRows) / groupSize)
+    val candGroups = math.max(1L, docsIn / GroupSize)
     val candPerGroup = nCands.toDouble / candGroups
     val candGateMax = (3.5 + 0.6 * math.max(0.0,
       math.log(docsIn / 19.1e6) / math.log(2.0))) * 1.5
@@ -167,7 +122,7 @@ object DataPipelineBench {
     // threads x few-hundred-MB SER checkpoint blocks the default 8g OOMs
     // at GB scale, so scale runs set it explicitly; record what this run had
     val heapGb = Runtime.getRuntime.maxMemory() / 1e9
-    val summary = f"""{"metric":"pipeline","gb":$gb%.3f,"secs":$secs%.1f,"gb_per_hour":$gbPerHr%.2f,"cores":$cpus,"heap_gb":$heapGb%.1f,${graft.Sessions.decisionsJson(spark)},"ckpt_level":"$ckptLevel","mix":"$mix","group_size":$groupSize,"hotkey_rows":$hotKeyRows,"planted":$nPlanted,"canary_pre":$cPre%.3f,"canary_post":$cPost%.3f,"par_canary_pre":$pcPre%.3f,"par_canary_post":$pcPost%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"cand_per_group":$candPerGroup%.2f,"cand_gate_max":$candGateMax%.2f,"stage_secs":$stagesJson,$countsJson}"""
+    val summary = f"""{"metric":"pipeline","gb":$gb%.3f,"secs":$secs%.1f,"gb_per_hour":$gbPerHr%.2f,"cores":$cpus,"heap_gb":$heapGb%.1f,${graft.Sessions.decisionsJson(spark)},"ckpt_level":"$ckptLevel","planted":$nPlanted,"canary_pre":$cPre%.3f,"canary_post":$cPost%.3f,"par_canary_pre":$pcPre%.3f,"par_canary_post":$pcPost%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"cand_per_group":$candPerGroup%.2f,"cand_gate_max":$candGateMax%.2f,"stage_secs":$stagesJson,$countsJson}"""
     println(summary)
     System.out.flush()
     graft.BenchOut.writeSummary("pipeline-last", summary)
@@ -213,10 +168,7 @@ object DataPipelineBench {
       println(f"[dp] candidate self-validation: candidates=$nCands " +
         f"groups=$candGroups per_group=$candPerGroup%.2f " +
         f"gate_max=$candGateMax%.2f")
-      // the noise-band model (3.5 + 0.6·log2) was calibrated on the dense
-      // 5-group mix; non-default mixes print per-group for the record but
-      // do not enforce against a model fit to a different group structure
-      if (mix == "dense" && docsIn >= 5000000L && candPerGroup > candGateMax) {
+      if (docsIn >= 5000000L && candPerGroup > candGateMax) {
         System.err.println(
           f"[dp] CANDIDATE GATE FAILED: $candPerGroup%.2f distinct " +
           f"candidates per duplicate group exceeds the banding-noise band " +
@@ -276,6 +228,7 @@ object DataPipelineBench {
       benchmark: DataFrame, outDir: String, plantedIds: Option[DataFrame],
       lapSink: (String, Double) => Unit,
       ckptLevel: Option[StorageLevel]): Seq[(String, Long)] = {
+    import graft.Checkpoints.release
     import graft.functions.normalize_text
 
     // Corpus-sized stage frames checkpoint at `ckptLevel` when given
@@ -332,11 +285,12 @@ object DataPipelineBench {
     // ~5 live corpus copies of block storage (measured as the disk ceiling
     // of the 3x-size run; the same 5x storage bill would be paid by a real
     // cluster's executors). Once the NEXT checkpoint is materialized, the
-    // previous stage's frame is dead — nothing re-reads it — so unpersist
-    // it and cap live storage at ~2 copies. (Unpersisting a
-    // local-checkpointed frame destroys it irrecoverably; safe here
-    // precisely because no later stage references it.)
-    scored.unpersist()
+    // previous stage's frame is dead — nothing re-reads it — so release
+    // drops its blocks and live storage stays at ~2 copies. Dataset
+    // unpersist would not: it never reaches a checkpoint. Releasing is
+    // irrecoverable, so it follows the last read of each frame, and no
+    // checkpoint made here outlives `run`.
+    release(scored)
     lap("exact_dedup")
 
     // --- stage 4: near-dup dedup on the survivors (operators.NearDup):
@@ -358,7 +312,7 @@ object DataPipelineBench {
         val n = m.count()
         if (name == "cands") nCands = n else nPairs = n
         println(s"[dp]   near: $name=$n")
-        stageFrame.foreach(_.unpersist()) // the previous stage is dead now
+        stageFrame.foreach(release) // m was its last reader
         stageFrame = Some(m)
         lap(s"  near:$name")
         m
@@ -376,14 +330,15 @@ object DataPipelineBench {
       .connectedComponents(near.pairs.select(col("id_a").as("a"), col("id_b").as("b")),
         numPartitions = Some(ccParts))
       .select(col("id").as("doc_id"), col("cluster_id"))
-    stageFrame.foreach(_.unpersist()) // connectedComponents checkpointed its own output
+    stageFrame.foreach(release) // connectedComponents checkpointed its edges
     lap("  near:cc")
     val (survivorPlan, kbCleanup) =
       graft.operators.NearDup.keepBest(exactSurvivors, clusters)
     val nearSurvivors = ckptText(survivorPlan)
     val nNear = nearSurvivors.count()
     kbCleanup()
-    exactSurvivors.unpersist() // superseded by nearSurvivors
+    release(clusters)
+    release(exactSurvivors) // superseded by nearSurvivors
     lap("near_dedup")
 
     // --- stage 5: benchmark decontamination — the EXTERNAL benchmark
@@ -419,7 +374,7 @@ object DataPipelineBench {
         "planted_after_decontam" ->
           clean.join(pb, Seq("doc_id"), "left_semi").count())
     }.getOrElse(Seq.empty)
-    nearSurvivors.unpersist() // superseded by clean
+    release(nearSurvivors) // superseded by clean
     lap("decontam")
 
     // --- stage 6: split + write (near-dups are gone, so a doc-hash split
@@ -447,6 +402,7 @@ object DataPipelineBench {
     val nTrain = written.filter(col("split") === "train").count()
     val nVal = written.filter(col("split") === "val").count()
     lap("out_count")
+    release(clean) // written out
 
     Seq("docs_in" -> nIn, "after_quality" -> nQualified,
       "after_exact_dedup" -> nExact,
@@ -476,13 +432,7 @@ object DataPipelineBench {
   /** Synthesize a ~targetGB parquet corpus with a CONTROLLED duplicate
     * mix, engineered so every cross-row Jaccard sits FAR from the 0.7
     * near-dup threshold. Each source doc expands to `copies` rows in
-    * groups of `groupSize` (default 5 — the dense mix; `sparse` selects 10,
-    * same structural pair per group but 7 uniques, which halves the exact-
-    * dup rate and drops the near-dup participant / hot-band-key fractions
-    * to ~22% — the web-crawl-like mix for the Bloom-lever adjudications).
-    * The dense description below reads "5" throughout; only variants 0-2
-    * are special, every variant >= 3 is a salted unique row under any
-    * group size. Groups of 5:
+    * groups of 5 (the dense mix):
     *
     * Distinctness everywhere is by SALTING: every 3rd token of the source
     * doc is replaced by a marker, so EVERY 3-token shingle contains a
@@ -518,10 +468,8 @@ object DataPipelineBench {
     * kept); decontamination then removes ~the planted rows — so the
     * reported counts self-validate against docs_in. */
   private def generate(spark: SparkSession, sfDir: String, in: Path,
-      targetGB: Double, cpus: Int, groupSize: Int = 5,
-      mix: String = "dense"): Unit = {
+      targetGB: Double, cpus: Int): Unit = {
     import org.apache.spark.sql.expressions.Window
-    require(groupSize >= 5, s"groupSize must be >= 5, got $groupSize")
 
     val all = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("source"), col("text"))
@@ -542,9 +490,9 @@ object DataPipelineBench {
     val nDocs = stats.getLong(0)
     val bytes = stats.getLong(1)
     val nBench = math.max(1L, bench.count())
-    val copies = math.max(groupSize.toLong,
+    val copies = math.max(GroupSize.toLong,
       math.ceil(targetGB * 1e9 / (bytes.toDouble + nDocs * 16)).toLong
-        / groupSize * groupSize)
+        / GroupSize * GroupSize)
 
     // Contamination planting must stay BOUNDED PER BENCH DOC: the planted
     // rows append raw benchmark text (unsalted by necessity — the decontam
@@ -569,7 +517,7 @@ object DataPipelineBench {
     // rows has no modulus to collide with: variant-3 rows number
     // nDocs·copies/5, so 1-in-plantEvery of them ≈ 16·nBench planted.
     val plantEvery = math.max(1L,
-      nDocs * copies / (groupSize.toLong * 16L * nBench))
+      nDocs * copies / (GroupSize.toLong * 16L * nBench))
     val plantedGate = col("variant") === 3 &&
       pmod(xxhash64(lit("plant"), col("r")), lit(plantEvery)) === 0
     val rotated = docs.select(col("idx").as("rot_idx"),
@@ -591,8 +539,8 @@ object DataPipelineBench {
       // below is ~all of the generator's CPU). The old repartition at the
       // WRITE was below the projections and did not help.
       .repartition(cpus * 4)
-      .withColumn("gid", floor(col("copy") / groupSize))
-      .withColumn("variant", col("copy") % groupSize)
+      .withColumn("gid", floor(col("copy") / GroupSize))
+      .withColumn("variant", col("copy") % GroupSize)
       .withColumn("r", col("idx") * copies + col("copy"))
       .withColumn("rot_idx", (col("idx") + col("gid")) % nDocs)
       // bench_idx by hash too: an arithmetic pmod(r, nBench) concentrates
@@ -635,17 +583,15 @@ object DataPipelineBench {
     // doc_id arithmetic (doc_id == r), so this is one column-pruned scan.
     spark.read.parquet(in.resolve("docs").toString)
       .select(col("doc_id"))
-      // doc_id = idx*copies + copy with copies ≡ 0 (mod groupSize), so
-      // doc_id % groupSize == variant
-      .filter(col("doc_id") % groupSize === 3 &&
+      // doc_id = idx*copies + copy with copies ≡ 0 (mod GroupSize), so
+      // doc_id % GroupSize == variant
+      .filter(col("doc_id") % GroupSize === 3 &&
         pmod(xxhash64(lit("plant"), col("doc_id")), lit(plantEvery)) === 0)
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(in.resolve("planted").toString)
 
     Files.createDirectories(in)
-    // the marker records the MIX the corpus was built with (legacy empty
-    // markers mean dense) so a reuse under a different mix regenerates
-    Files.write(in.resolve("_DONE"),
-      mix.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // the marker names the mix, so a corpus of another mix is regenerated
+    Files.writeString(in.resolve("_DONE"), "dense")
   }
 }

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One way to start a local session: only `Sessions.scala` builds one
   * (plus `VspacePipeline.scala`, the spark-submit entry, which keeps the
-  * cluster's master) and only it reads the session env. Explicit GCs stay
-  * in the harness mains that quiet the heap between timed reps. */
+  * cluster's master) and only it reads the session env. The other
+  * `SPARK_GRAFT_*` env levers are pinned, each to its one file. Explicit
+  * GCs stay in the harness mains that quiet the heap between timed reps. */
 class SessionLintSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(String, String)] = {
@@ -32,9 +33,22 @@ class SessionLintSpec extends AnyFunSuite {
       """SparkSession\s*\.\s*builder""") == Nil)
   }
 
-  test("the session env is read only in Sessions") {
-    assert(offenders(Set("graft/Sessions.scala"),
-      "\"SPARK_GRAFT_(CPUS|SF_DIR|CONF)\"") == Nil)
+  /** Every `SPARK_GRAFT_*` env lever the program reads, and its one file. */
+  private val envLevers = Map(
+    "CPUS" -> "graft/Sessions.scala",
+    "SF_DIR" -> "graft/Sessions.scala",
+    "CONF" -> "graft/Sessions.scala",
+    "BENCH_TAG" -> "graft/BenchOut.scala",
+    "EXPLAIN" -> "graft/tools/Probe.scala",
+    "DP_GENONLY" -> "graft/tools/DataPipelineBench.scala")
+
+  test("SPARK_GRAFT_ env levers: each read in its one file, no others") {
+    val read = (for {
+      (f, text) <- sources
+      m <- "\"SPARK_GRAFT_([A-Z0-9_]+)\"".r.findAllMatchIn(text)
+    } yield m.group(1) -> f).toSet
+    assert(read -- envLevers == Set.empty, "read outside the allowlist or its file")
+    assert(envLevers.toSet -- read == Set.empty, "allowlisted but no longer read")
   }
 
   test("System.gc() appears only in the harness mains, between timed reps") {

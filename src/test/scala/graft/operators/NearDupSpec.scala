@@ -13,6 +13,9 @@ class NearDupSpec extends SparkSpec {
   private def pairSet(df: DataFrame): Set[(Long, Long)] =
     df.select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSet
 
+  /** Ids of the RDDs the session holds persisted. */
+  private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("empty input: no candidates, no pairs, no survivors") {
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(NearDup.candidates(empty).isEmpty)
@@ -21,11 +24,13 @@ class NearDupSpec extends SparkSpec {
     val forced = NearDup.verify(NearDup.candidates(empty), empty, 0.7,
       prefilterMinBytes = 0L)
     assert(forced.pairs.isEmpty && forced.participants == 0L)
+    val before = persisted()
     val (kept, cleanup) = NearDup.keepBest(
       Seq.empty[(Long, Double)].toDF("doc_id", "quality"),
       Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id"))
     assert(kept.isEmpty)
     cleanup()
+    assert(persisted() -- before == Set.empty)
   }
 
   test("null text and docs under 3 tokens yield no pairs and no error") {
@@ -68,9 +73,11 @@ class NearDupSpec extends SparkSpec {
     val scored = docs.select(col("doc_id"),
         when(col("doc_id").isin(7L, 9L), 0.9).otherwise(0.5).as("quality"))
       .unionByName(Seq((100L, 0.1)).toDF("doc_id", "quality"))
+    val before = persisted()
     val (kept, cleanup) = NearDup.keepBest(scored, clusters)
     assert(kept.select(col("doc_id")).as[Long].collect().toSet == Set(7L, 100L))
     cleanup()
+    assert(persisted() -- before == Set.empty)
   }
 
   test("prefilter forced on vs off: bit-identical verified pairs") {

@@ -6,6 +6,7 @@ import java.nio.file.attribute.BasicFileAttributes
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
 
@@ -58,6 +59,19 @@ class DataPipelineSpec extends SparkSpec {
     val kept = spark.read.parquet(out).select(col("doc_id"))
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(0L, 3L, 4L, 5L))
+  }
+
+  test("run leaves no checkpoint persisted, at either checkpoint level") {
+    Seq(None, Some(StorageLevel.MEMORY_AND_DISK_SER)).foreach { level =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val counts = DataPipelineBench.run(spark, corpus, benchmark,
+        graft.SparkSpec.tempDir("graft-dp-spec"), ckptLevel = level).toMap
+      assert(counts("after_exact_dedup") == 6L)
+      assert(counts("after_near_dedup") == 5L)
+      assert(counts("after_decontam") == 4L)
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"at $level, persisted RDDs left: ${left.toSeq.sorted}")
+    }
   }
 
   /** Shuffle data and index files under the session's local dirs, resolved
