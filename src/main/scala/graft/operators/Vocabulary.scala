@@ -28,30 +28,20 @@ object Vocabulary {
     * (reference `base.py:341-355`; ids via monotonically_increasing_id are
     * non-contiguous there too and never consumed downstream).
     *
-    * `preFilter = true` (default) drops null/blank tokens BEFORE the
-    * vocabulary is written — a pinned divergence: the reference writes the
-    * CSV unfiltered and only drops those rows inside the DAWG build
-    * (`dawg.py:101-102`), so membership semantics are identical either
-    * way. Pass `preFilter = false` for a byte-faithful reference artifact
-    * on dirty input. */
-  def build(phrases: DataFrame, collections: DataFrame,
-      preFilter: Boolean = true): DataFrame = {
-    val unioned = phrases.toDF("token").union(collections.toDF("token"))
-    val cleaned =
-      if (preFilter)
-        unioned.na.drop().filter(length(trim(col("token"))) =!= 0)
-      else unioned
-    cleaned.distinct().withColumn("tokenid", monotonically_increasing_id())
-  }
+    * Null/blank tokens are dropped BEFORE the vocabulary is written — a
+    * pinned divergence: the reference writes the CSV unfiltered and only
+    * drops those rows inside the DAWG build (`dawg.py:101-102`), so
+    * membership semantics are identical either way. */
+  def build(phrases: DataFrame, collections: DataFrame): DataFrame =
+    phrases.toDF("token").union(collections.toDF("token"))
+      .na.drop().filter(length(trim(col("token"))) =!= 0)
+      .distinct().withColumn("tokenid", monotonically_increasing_id())
 
-  sealed trait TokenFilter {
-    /** Keep rows of `df` whose `tokenCol` passes the reference predicate:
-      * unigrams (no space) always pass; multi-grams must be in the
-      * vocabulary (`base.py:385-389`). */
-    def apply(df: DataFrame, tokenCol: String): DataFrame
-  }
-
-  /** Default, scale path: ONE left join against the (distinct) vocabulary
+  /** Keep rows of `df` whose `tokenCol` passes the reference predicate:
+    * unigrams (no space) always pass; multi-grams must be in the
+    * vocabulary (`base.py:385-389`).
+    *
+    * Default, scale path: ONE left join against the (distinct) vocabulary
     * marks membership, one filter keeps unigrams (bypass) or marked
     * multigrams, and the original column order is restored.
     *
@@ -68,8 +58,8 @@ object Vocabulary {
     * degrades to SMJ exactly like the semi-join did — the one-pass shape
     * then shuffles unigram rows too (~1/6 of ≤6-gram traffic), still far
     * cheaper than recomputing the gram pipeline per branch. */
-  final case class SemiJoinFilter(vocabulary: DataFrame) extends TokenFilter {
-    override def apply(df: DataFrame, tokenCol: String): DataFrame = {
+  final case class SemiJoinFilter(vocabulary: DataFrame) {
+    def apply(df: DataFrame, tokenCol: String): DataFrame = {
       val marked = vocabulary.select(col("token").as(tokenCol)).distinct()
         .withColumn("__invocab", lit(true))
       df.join(marked, Seq(tokenCol), "left")
@@ -126,11 +116,12 @@ object Vocabulary {
     vocabulary.select(xxhash64(col("token")).as("h"), col("token")).distinct()
   }
 
-  /** Reference-shaped path: vocabulary collected once, broadcast as a
-    * sorted array, probed per row by binary search. Bounded by driver
-    * memory — use only when the vocabulary is known-small. */
-  final class BroadcastSetFilter(bc: Broadcast[Array[String]]) extends TokenFilter {
-    override def apply(df: DataFrame, tokenCol: String): DataFrame = {
+  /** Reference-shaped path: the [[SemiJoinFilter]] predicate with the
+    * vocabulary collected once, broadcast as a sorted array, probed per
+    * row by binary search. Bounded by driver memory — use only when the
+    * vocabulary is known-small. */
+  final class BroadcastSetFilter(bc: Broadcast[Array[String]]) {
+    def apply(df: DataFrame, tokenCol: String): DataFrame = {
       val localBc  = bc // avoid capturing non-serializable `this` in the UDF
       val contains = udf { t: String =>
         !t.contains(" ") || Arrays.binarySearch(localBc.value.asInstanceOf[Array[AnyRef]], t) >= 0

@@ -1378,10 +1378,10 @@ object AnalysisQueries {
             .orderBy(col("m"), col("rep"))))
         d.agg(count(lit(1)).as("n_docs"),
             round(avg(col("n_chars")), 4).as("mean_nchars"))
-          .crossJoin(ranked.filter(col("rk") === 2)
-            .select(round(col("m"), 4).as("ci_lo")))
-          .crossJoin(ranked.filter(col("rk") === 49)
-            .select(round(col("m"), 4).as("ci_hi")))
+          .crossJoin(broadcast(ranked.filter(col("rk") === 2)
+            .select(round(col("m"), 4).as("ci_lo"))))
+          .crossJoin(broadcast(ranked.filter(col("rk") === 49)
+            .select(round(col("m"), 4).as("ci_hi"))))
           .withColumn("n_reps", lit(reps))
       },
       Some("""WITH d AS (SELECT doc_id, n_chars FROM documents),
@@ -2073,11 +2073,13 @@ object AnalysisQueries {
           .agg(count(lit(1)).cast("double").as("x"))
           .localCheckpoint()
         val lags = (1 to 7).map(lit(_))
+        // a.day = b.day + lag, keyed on b's day so it plans as an
+        // equi-join rather than a nested loop over day pairs
         daily
           .select(explode(array(lags: _*)).as("lag"), col("day"), col("x"))
+          .withColumn("b_day", date_sub(col("day"), col("lag")))
           .as("a")
-          .join(daily.as("b"),
-            expr("a.day = date_add(b.day, a.lag)"))
+          .join(daily.as("b"), col("a.b_day") === col("b.day"))
           .groupBy(col("lag"))
           .agg(count(lit(1)).as("n_pairs"),
             round(corr(col("a.x"), col("b.x")), 4).as("acf"))

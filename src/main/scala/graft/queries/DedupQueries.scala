@@ -473,7 +473,7 @@ object DedupQueries {
       (s, dir) => {
         val sh = shingled(Tables(s, dir, "documents").filter(col("doc_id") < 250))
         sh.toDF("id_a", "sh_a")
-          .join(sh.toDF("id_b", "sh_b"), col("id_a") < col("id_b"))
+          .join(broadcast(sh.toDF("id_b", "sh_b")), col("id_a") < col("id_b"))
           .select(col("id_a"), col("id_b"),
             round(jaccard(col("sh_a"), col("sh_b")), 4).as("jac"))
           .filter(col("jac") >= 0.2)
@@ -552,7 +552,7 @@ object DedupQueries {
           .filter(col("vec_id") < 500)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         e.toDF("id_a", "va")
-          .join(e.toDF("id_b", "vb"), col("id_a") < col("id_b"))
+          .join(broadcast(e.toDF("id_b", "vb")), col("id_a") < col("id_b"))
           .select(col("id_a"), col("id_b"),
             round(graft.functions.cosine_sim(col("va"), col("vb")), 4).as("sim"))
           .filter(col("sim") >= 0.4)
@@ -594,7 +594,7 @@ object DedupQueries {
           .filter(col("vec_id") < 500)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val exact = e.toDF("id_a", "va")
-          .join(e.toDF("id_b", "vb"), col("id_a") < col("id_b"))
+          .join(broadcast(e.toDF("id_b", "vb")), col("id_a") < col("id_b"))
           .select(col("id_a"), col("id_b"),
             round(graft.functions.cosine_sim(col("va"), col("vb")), 4).as("sim"))
           .filter(col("sim") >= 0.4)
@@ -823,7 +823,7 @@ object DedupQueries {
           .filter(col("vec_id") < bound)
           .select(col("vec_id"), col("v"))
         val exact = sub.as("a")
-          .join(sub.as("b"), col("a.vec_id") < col("b.vec_id"))
+          .join(broadcast(sub.as("b")), col("a.vec_id") < col("b.vec_id"))
           .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
             graft.functions.cosine_sim(col("a.v"), col("b.v")).as("sim"))
           .filter(col("sim") >= 0.4)

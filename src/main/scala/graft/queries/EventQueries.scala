@@ -533,7 +533,7 @@ object EventQueries {
         val types = ev.select(col("event_type")).distinct()
         val w = Window.partitionBy(col("event_type")).orderBy(col("h"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        hours.crossJoin(types)
+        hours.crossJoin(broadcast(types))
           .join(hourly, Seq("h", "event_type"), "left")
           .select(col("h"), col("event_type"),
             coalesce(col("n"), lit(0L)).as("n"),
@@ -811,8 +811,8 @@ object EventQueries {
           countDistinct(col("day")).as("n_days"))
         dau.agg(round(avg(col("dau")), 4).as("avg_dau"),
             max(col("dau")).as("max_dau"))
-          .crossJoin(wau.agg(round(avg(col("wau")), 4).as("avg_wau")))
-          .crossJoin(tot)
+          .crossJoin(broadcast(wau.agg(round(avg(col("wau")), 4).as("avg_wau"))))
+          .crossJoin(broadcast(tot))
           .select(col("avg_dau"), col("max_dau"), col("avg_wau"),
             col("total_users"), col("n_days"),
             round(col("avg_dau") / col("total_users"), 4).as("stickiness"))
@@ -1609,7 +1609,7 @@ object EventQueries {
           .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id")))
             .as("est_direct"),
             count_distinct(col("user_id")).as("n_exact"))
-        merged.crossJoin(direct)
+        merged.crossJoin(broadcast(direct))
           .select(col("n_exact"), col("est_merged"), col("est_direct"),
             (col("est_merged") === col("est_direct")).as("merge_consistent"),
             (abs(col("est_merged") - col("n_exact"))

@@ -1391,7 +1391,7 @@ object TextQueries {
         val sc = toks.join(broadcast(top.select("tok")), "tok")
           .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("cs"))
         // every (source, top-term) pair, absent terms at worst rank 51
-        val grid = top.crossJoin(
+        val grid = broadcast(top).crossJoin(
             toks.select(col("source")).distinct())
           .join(sc.select(col("source"), col("tok"), col("cs"),
             lit(1).as("present")), Seq("source", "tok"), "left")

@@ -6,7 +6,10 @@ import graft.queries.Catalog
   * split plan/codegen/JIT warmup from steady-state. Usage:
   * runMain graft.tools.Probe <name> [reps] [sfDir]
   * The session is Bench's ([[graft.Sessions]]), so `SPARK_GRAFT_CONF`
-  * can flip a conf for one probe.
+  * can flip a conf for one probe. Each rep executes through the
+  * full-plan `noop` sink exactly like [[graft.Bench]] (a `count()` would
+  * let Catalyst prune the aggregate expressions it does not need); the
+  * plan itself is [[PlanDump]]'s job.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -24,13 +27,6 @@ object Probe {
       }
     })
     val q = Catalog.byName(name)
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
-      q.fn(spark, sfDir).explain("formatted")
-    // PROBE_NOOP=1 executes via the full-plan noop sink exactly like Bench
-    // (count() lets Catalyst PRUNE aggregate expressions the count doesn't
-    // need, so the two modes can legitimately measure different work —
-    // compare both before calling a bench number noise)
-    val useNoop = sys.env.contains("PROBE_NOOP")
     // same fixed pure-CPU canary as graft.Bench (graft.HostCanary),
     // printed per rep so a probe taken in a degraded-host window is
     // visibly degraded (don't adjudicate bench numbers with an
@@ -42,12 +38,10 @@ object Probe {
       val t0 = System.nanoTime()
       val df = q.fn(spark, sfDir)
       val t1 = System.nanoTime()
-      val n  = if (useNoop) {
-        df.write.format("noop").mode("overwrite").save(); -1L
-      } else df.count()
+      df.write.format("noop").mode("overwrite").save()
       val t2 = System.nanoTime()
       println(f"[probe] $name rep$i: build=${(t1 - t0) / 1e9}%.3f s " +
-        f"exec=${(t2 - t1) / 1e9}%.3f s canary=$c%.2f s ($n rows)")
+        f"exec=${(t2 - t1) / 1e9}%.3f s canary=$c%.2f s")
     }
     spark.stop()
   }

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One way to start a local session: only `Sessions.scala` builds one
   * (plus `VspacePipeline.scala`, the spark-submit entry, which keeps the
-  * cluster's master) and only it reads the session env. The other
-  * `SPARK_GRAFT_*` env levers are pinned, each to its one file. Explicit
+  * cluster's master) and only it reads the session env. Every other
+  * environment read is pinned, each to its one file. Explicit
   * GCs stay in the harness mains that quiet the heap between timed reps. */
 class SessionLintSpec extends AnyFunSuite {
 
@@ -33,27 +33,33 @@ class SessionLintSpec extends AnyFunSuite {
       """SparkSession\s*\.\s*builder""") == Nil)
   }
 
-  /** Every `SPARK_GRAFT_*` env lever the program reads, and its one file. */
+  /** Every environment variable the program reads, and its one file. */
   private val envLevers = Map(
-    "CPUS" -> "graft/Sessions.scala",
-    "SF_DIR" -> "graft/Sessions.scala",
-    "CONF" -> "graft/Sessions.scala",
-    "BENCH_TAG" -> "graft/BenchOut.scala",
-    "EXPLAIN" -> "graft/tools/Probe.scala",
-    "DP_GENONLY" -> "graft/tools/DataPipelineBench.scala")
+    "SPARK_GRAFT_CPUS" -> "graft/Sessions.scala",
+    "SPARK_GRAFT_SF_DIR" -> "graft/Sessions.scala",
+    "SPARK_GRAFT_CONF" -> "graft/Sessions.scala",
+    "SPARK_GRAFT_BENCH_TAG" -> "graft/BenchOut.scala",
+    "SPARK_GRAFT_DP_GENONLY" -> "graft/tools/DataPipelineBench.scala",
+    "BENCH_ONLY" -> "graft/Bench.scala")
 
-  test("SPARK_GRAFT_ env levers: each read in its one file, no others") {
+  test("env levers: each read in its one file, by a literal name, no others") {
+    val access = """sys\s*\.\s*env\b|System\s*\.\s*getenv\b"""
+    val named = """(?:sys\s*\.\s*env(?:\s*\.\s*(?:get|getOrElse|contains|apply))?""" +
+      """|System\s*\.\s*getenv)\s*\(\s*"([A-Za-z0-9_]+)""""
+    val unnamed = sources.filter { case (_, text) =>
+      access.r.findAllIn(text).length != named.r.findAllIn(text).length
+    }.map(_._1)
+    assert(unnamed == Nil, "reads the environment without a literal name")
     val read = (for {
       (f, text) <- sources
-      m <- "\"SPARK_GRAFT_([A-Z0-9_]+)\"".r.findAllMatchIn(text)
+      m <- named.r.findAllMatchIn(text)
     } yield m.group(1) -> f).toSet
     assert(read -- envLevers == Set.empty, "read outside the allowlist or its file")
     assert(envLevers.toSet -- read == Set.empty, "allowlisted but no longer read")
   }
 
   test("System.gc() appears only in the harness mains, between timed reps") {
-    assert(offenders(Set("graft/Bench.scala", "graft/tools/ScalingProbe.scala",
-      "graft/tools/StreamBench.scala", "graft/tools/AnnBench.scala"),
+    assert(offenders(Set("graft/Bench.scala", "graft/tools/StreamBench.scala"),
       """System\s*\.\s*gc\s*\(""") == Nil)
   }
 }

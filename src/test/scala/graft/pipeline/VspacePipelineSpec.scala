@@ -132,10 +132,6 @@ class VspacePipelineSpec extends SparkSpec {
     val tokens = Vocabulary.build(phrases, collections)
       .select("token").collect().map(_.getString(0)).toSet
     assert(tokens == Set("good one", "other"))
-    // preFilter = false reproduces the reference's unfiltered artifact
-    val raw = Vocabulary.build(phrases, collections, preFilter = false)
-      .select("token").collect().map(_.getString(0)).toSet
-    assert(raw == Set("good one", "other", "", "   "))
   }
 
   test("token counts: normalized unigrams+bigrams, hand-checked") {

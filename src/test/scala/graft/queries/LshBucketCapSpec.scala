@@ -153,10 +153,11 @@ class LshBucketCapSpec extends SparkSpec {
 
   test("capBuckets is plan-pure: constructing q32/q38 frames launches zero jobs") {
     // Round-8 shape ran a key-count job + localCheckpoint at CONSTRUCTION
-    // time, so explain()/PlanAudit/catalog sweeps launched Spark jobs. The
-    // plan-pure shape (always left_anti against the observed hot frame,
-    // lazy checkpoints) must not: full physical planning of both LSH pair
-    // generators — the frames capBuckets participates in — runs no job.
+    // time, so explain() and catalog plan sweeps (BenchPlanSpec) launched
+    // Spark jobs. The plan-pure shape (always left_anti against the
+    // observed hot frame, lazy checkpoints) must not: full physical
+    // planning of both LSH pair generators — the frames capBuckets
+    // participates in — runs no job.
     // (q36 = this + connected components, q95 = this + an index WRITE;
     // those run jobs by design of their iterative/materializing stages.)
     // Scoped by JOB GROUP, not a raw job counter: job groups are
