@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.json4s.{DefaultFormats, JObject}
+import org.json4s.jackson.JsonMethods
 
 import graft.queries.Catalog
 
@@ -36,8 +38,6 @@ object Bench {
     * inflated — nothing discardable) is visibly polluted to any later
     * reader comparing canaries across rounds.
     */
-  private def canarySec(): Double = HostCanary.sec()
-  private def parCanarySec(): Double = HostCanary.parSec()
   private val canaries    = scala.collection.mutable.ArrayBuffer.empty[Double]
   private val parCanaries = scala.collection.mutable.ArrayBuffer.empty[Double]
   private def median(xs: Seq[Double]): Double = {
@@ -79,36 +79,26 @@ object Bench {
     java.nio.file.Paths.get(s"bench-artifacts/canary-ref-$box.json")
   private def loadCanaryRef(): Option[(Double, Double)] =
     try {
-      val p = Seq(CanaryRefPath, CanaryRefDurablePath)
+      Seq(CanaryRefPath, CanaryRefDurablePath)
         .find(java.nio.file.Files.exists(_))
-      if (p.isEmpty) None
-      else {
-        val s = new String(java.nio.file.Files.readAllBytes(p.get),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val m = """"serial"\s*:\s*([0-9.]+).*"parallel"\s*:\s*([0-9.]+)""".r
-          .findFirstMatchIn(s)
-        m.map(g => (g.group(1).toDouble, g.group(2).toDouble))
-          .filter { case (a, b) => a > 0 && b > 0 }
-      }
+        .flatMap { p =>
+          implicit val formats: DefaultFormats.type = DefaultFormats
+          val band = JsonMethods.parse(java.nio.file.Files.readString(p))
+          for {
+            s <- (band \ "serial").extractOpt[Double]
+            q <- (band \ "parallel").extractOpt[Double]
+            if s > 0 && q > 0
+          } yield (s, q)
+        }
     } catch { case e: Exception =>
       System.err.println(s"[bench] canary-ref load failed (ignored): $e"); None
     }
   private def saveCanaryRef(serial: Double, parallel: Double): Unit =
     try {
-      // Locale.ROOT explicitly: the f-interpolator formats with the JVM
-      // default locale, and under a comma-decimal locale (de_DE) this
-      // file would round-trip through loadCanaryRef's [0-9.]+ regex as a
-      // silently TRUNCATED value ("0,351" → 0.0-ish band) rather than
-      // failing — corrupting the degradation gate's reference.
-      val bytes = String.format(java.util.Locale.ROOT,
-        "{\"serial\":%.3f,\"parallel\":%.3f}%n",
-        Double.box(serial), Double.box(parallel))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val band = BenchOut.render(BenchOut.obj("serial" -> serial, "parallel" -> parallel))
       Seq(CanaryRefPath, CanaryRefDurablePath).foreach { p =>
         if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.write(p, bytes,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
+        java.nio.file.Files.writeString(p, band + "\n")
       }
     } catch { case e: Exception =>
       System.err.println(s"[bench] canary-ref save failed (ignored): $e")
@@ -117,10 +107,6 @@ object Bench {
   private def newSession(): SparkSession = Sessions.local("graft-bench")
 
   def main(args: Array[String]): Unit = {
-    // every emitted JSON line is built with the f-interpolator, which
-    // formats via the default locale — pin it so numbers are always
-    // dot-decimal regardless of the host's locale
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     var spark = newSession()
 
     def execute(name: String): Unit = {
@@ -158,8 +144,8 @@ object Bench {
     // sample would otherwise sit in the clean-median pool and skew the
     // 1.5x threshold for the first queries), then bootstrap the reference
     // pools with 3 warm samples each.
-    canarySec(); parCanarySec()
-    (1 to 3).foreach { _ => canaries += canarySec(); parCanaries += parCanarySec() }
+    HostCanary.sec(); HostCanary.parSec()
+    (1 to 3).foreach { _ => canaries += HostCanary.sec(); parCanaries += HostCanary.parSec() }
     val persistedRef = loadCanaryRef()
     persistedRef.foreach { case (s, p) =>
       System.err.println(f"[bench] canary reference band (persisted, $box): serial $s%.3f, parallel $p%.3f")
@@ -197,8 +183,8 @@ object Bench {
       var attempts    = 0
       def rep(force: Boolean): Unit = {
         attempts += 1
-        val c = canarySec()
-        val pc = parCanarySec()
+        val c = HostCanary.sec()
+        val pc = HostCanary.parSec()
         val la = HostCanary.loadAvg()
         qAllCan += c; qAllParCan += pc; qAllLoads += la
         // Degradation is judged against the CLEAN-rep medians only: feeding
@@ -259,17 +245,14 @@ object Bench {
       val cRatio  = if (refSerial > 0) qc / refSerial else -1.0
       val pcRatio = if (refParallel > 0) qpc / refParallel else -1.0
       // incremental per-query line — parseable even if the run dies later
-      emit(f"""{"metric":"query","name":"$n","value":$best,"unit":"sec","canary":$qc%.3f,"par_canary":$qpc%.3f,"canary_ratio":$cRatio%.2f,"par_canary_ratio":$pcRatio%.2f,"loadavg":$ql%.1f,"corroborated":$clean,"sf":"$sfDir"}""")
+      emit(BenchOut.obj("metric" -> "query", "name" -> n, "value" -> best,
+        "unit" -> "sec", "canary" -> qc, "par_canary" -> qpc,
+        "canary_ratio" -> cRatio, "par_canary_ratio" -> pcRatio,
+        "loadavg" -> ql, "corroborated" -> clean, "sf" -> sfDir))
       (n, best, qc, qpc, ql)
     }
-    val qs = results.map { case (k, v, _, _, _) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val qcs = results.map { case (k, _, c, _, _) => f""""$k":$c%.3f""" }
-      .mkString("{", ",", "}")
-    val qpcs = results.map { case (k, _, _, p, _) => f""""$k":$p%.3f""" }
-      .mkString("{", ",", "}")
-    val qls = results.map { case (k, _, _, _, l) => f""""$k":$l%.1f""" }
-      .mkString("{", ",", "}")
+    def perQuery(pick: ((String, Double, Double, Double, Double)) => Double) =
+      BenchOut.obj(results.map(r => r._1 -> pick(r)): _*)
     val total = results.map(_._2).filter(_ >= 0).sum
     // Post-hoc pollution flag: the degradation gate judges each rep against
     // the canary pool AS OF THAT MOMENT, so a run that STARTS in a degraded
@@ -287,8 +270,8 @@ object Bench {
     val cRef  = persistedRef.map(r => math.min(r._1, cMed)).getOrElse(cMed)
     val pcRef = persistedRef.map(r => math.min(r._2, pcMed)).getOrElse(pcMed)
     val suspect = results.collect {
-      case (k, _, c, p, _) if c > 1.5 * cRef || p > 1.5 * pcRef => "\"" + k + "\""
-    }.mkString("[", ",", "]")
+      case (k, _, c, p, _) if c > 1.5 * cRef || p > 1.5 * pcRef => k
+    }
     // amber = 1.2-1.5x the clean band on either canary: inside the skip
     // gate (so the row shipped) but far enough from clean that a reader
     // comparing rounds should discount the row before calling it a
@@ -297,37 +280,41 @@ object Bench {
     val amber = results.collect {
       case (k, _, c, p, _)
         if (c > 1.2 * cRef || p > 1.2 * pcRef) &&
-          !(c > 1.5 * cRef || p > 1.5 * pcRef) => "\"" + k + "\""
-    }.mkString("[", ",", "]")
+          !(c > 1.5 * cRef || p > 1.5 * pcRef) => k
+    }
     // per-query ratios RECOMPUTED against the final cRef/pcRef — the
     // per-query lines' canary_ratio uses the rolling reference as of that
     // query, so a line can print <1.2x yet land in the amber list (which
     // buckets against the final refs); these summary maps are the ones the
     // amber/suspect membership arithmetic actually follows
-    def ratioMap(pick: ((String, Double, Double, Double, Double)) => Double,
-        ref: Double) = results.map { r =>
-      f""""${r._1}":${if (ref > 0) pick(r) / ref else -1.0}%.2f"""
-    }.mkString("{", ",", "}")
-    val qcr  = ratioMap(_._3, cRef)
-    val qpcr = ratioMap(_._4, pcRef)
-    val summary = f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"canary_median":$cMed%.3f,"par_canary_median":$pcMed%.3f,"canary_ref":$cRef%.3f,"par_canary_ref":$pcRef%.3f,"canaries":$qcs,"par_canaries":$qpcs,"canary_ratios":$qcr,"par_canary_ratios":$qpcr,"loadavgs":$qls,"suspect":$suspect,"amber":$amber,"sf":"$sfDir"}"""
-    emit(summary)
+    def ratios(pick: ((String, Double, Double, Double, Double)) => Double,
+        ref: Double) = perQuery(r => if (ref > 0) pick(r) / ref else -1.0)
+    val summary = BenchOut.obj("metric" -> "total", "value" -> total,
+      "unit" -> "sec", "queries" -> perQuery(_._2),
+      "canary_median" -> cMed, "par_canary_median" -> pcMed,
+      "canary_ref" -> cRef, "par_canary_ref" -> pcRef,
+      "canaries" -> perQuery(_._3), "par_canaries" -> perQuery(_._4),
+      "canary_ratios" -> ratios(_._3, cRef),
+      "par_canary_ratios" -> ratios(_._4, pcRef),
+      "loadavgs" -> perQuery(_._5), "suspect" -> suspect, "amber" -> amber,
+      "sf" -> sfDir)
+    // The driver captures stdout's TAIL, which has truncated past runs into
+    // unparseable fragments (BENCH_r10: total lost); the file copy makes
+    // every run self-archiving. Summary alone in .json (one parseable
+    // object, also printed), full line history in .jsonl.
+    BenchOut.appendLine("bench-last", summary)
+    BenchOut.writeSummary("bench-last", summary)
     // monotone-downward band update, only from a run with a real sample base
     if (canaries.size >= 8 && parCanaries.size >= 8) {
       val newS = persistedRef.map(r => math.min(r._1, cMed)).getOrElse(cMed)
       val newP = persistedRef.map(r => math.min(r._2, pcMed)).getOrElse(pcMed)
       saveCanaryRef(newS, newP)
     }
-    // The driver captures stdout's TAIL, which has truncated past runs into
-    // unparseable fragments (BENCH_r10: total lost); the file copy makes
-    // every run self-archiving. Summary alone in .json (one parseable
-    // object), full line history in .jsonl.
-    BenchOut.writeSummary("bench-last", summary)
     spark.stop()
   }
 
-  private def emit(line: String): Unit = {
-    println(line)
+  private def emit(line: JObject): Unit = {
+    println(BenchOut.render(line))
     System.out.flush()
     BenchOut.appendLine("bench-last", line)
   }

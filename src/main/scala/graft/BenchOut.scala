@@ -3,14 +3,23 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-/** File persistence for benchmark mains. The round driver captures stdout's
-  * TAIL, which has truncated long runs into unparseable fragments (round
-  * 10's bench artifact lost its total line this way) — so every bench main
-  * also writes its final summary to `target/<name>.json` (one parseable
-  * JSON object, atomically replaced per run) and appends its per-query
-  * lines to `target/<name>.jsonl` (truncated at run start). Paths are
-  * relative to the working directory, which for every documented invocation
-  * (`sbt "runMain graft.Bench"`) is the repo root.
+import org.json4s.{DefaultFormats, Extraction, JObject, JString}
+import org.json4s.jackson.JsonMethods
+
+/** The one writer of run artifacts: every JSON text a graft main emits
+  * (bench and pipeline summaries, Bench's per-query lines and canary band,
+  * Verify's `oracle_sql.json`) is rendered here from ordered fields through
+  * json4s, so escaping, number format and any field every artifact should
+  * carry live in this file alone.
+  *
+  * The round driver captures stdout's TAIL, which has truncated long runs
+  * into unparseable fragments (round 10's bench artifact lost its total
+  * line this way) — so every bench main also writes its final summary to
+  * `target/<name>.json` (one parseable JSON object, atomically replaced
+  * per run) and appends its per-query lines to `target/<name>.jsonl`
+  * (truncated at run start). Paths are relative to the working directory,
+  * which for every documented invocation (`sbt "runMain graft.Bench"`) is
+  * the repo root.
   */
 object BenchOut {
   private def dir = {
@@ -48,7 +57,16 @@ object BenchOut {
     sys.env.get("SPARK_GRAFT_BENCH_TAG").map(_.trim).filter(_.nonEmpty)
       .map(t => s"$name-$t").getOrElse(name)
 
-  def appendLine(rawName: String, line: String): Unit = synchronized {
+  /** Ordered fields as a JSON object. json4s decomposes each value: a
+    * `JValue` (a nested [[obj]]) as is, a `Map` as an object in its
+    * iteration order, a collection as an array, a NaN as null. */
+  def obj(fields: (String, Any)*): JObject =
+    JObject(fields.map { case (k, v) => k -> Extraction.decompose(v)(DefaultFormats) }.toList)
+
+  /** One line of compact JSON: numbers at full precision, strings escaped. */
+  def render(fields: JObject): String = JsonMethods.compact(fields)
+
+  def appendLine(rawName: String, line: JObject): Unit = synchronized {
     val name = tagged(rawName)
     try {
       val p = dir.resolve(s"$name.jsonl")
@@ -57,35 +75,39 @@ object BenchOut {
           Array(StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
         else
           Array(StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-      Files.write(p, (line + "\n").getBytes(StandardCharsets.UTF_8), opts: _*)
+      Files.write(p, (render(line) + "\n").getBytes(StandardCharsets.UTF_8), opts: _*)
     } catch { case e: Exception =>
       System.err.println(s"[bench] persist $name.jsonl failed: $e")
     }
   }
 
-  /** Pull the `"gb":N` / `"sf":"dir"` field out of a summary line. */
-  private val GbField = """"gb"\s*:\s*([0-9]+(?:\.[0-9]+)?)""".r.unanchored
-  private val SfField = """"sf"\s*:\s*"([^"]*)"""".r.unanchored
-
   /** The scale a summary is keyed by, besides `<name>.json`: its `gb` to
     * two decimals with trailing zeros dropped (0.05 → `0p05g`, 0.1 →
     * `0p1g`, 0.82 → `0p82g`), else the basename of its `sf` dir
     * (`/data/sf0.1` → `sf0p1`); None when it has neither. */
-  private[graft] def scaleKey(json: String): Option[String] = json match {
-    case GbField(gb) =>
-      val rounded = BigDecimal(gb).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-      Some(rounded.bigDecimal.stripTrailingZeros.toPlainString
-        .replace('.', 'p') + "g")
-    case SfField(dir) =>
-      Some(dir.stripSuffix("/").split('/').last.replace('.', 'p'))
-        .filter(_.nonEmpty)
-    case _ => None
+  private[graft] def scaleKey(summary: JObject): Option[String] = {
+    implicit val formats: DefaultFormats.type = DefaultFormats
+    ((summary \ "gb").extractOpt[BigDecimal], summary \ "sf") match {
+      case (Some(gb), _) =>
+        Some(gb.setScale(2, BigDecimal.RoundingMode.HALF_UP).bigDecimal
+          .stripTrailingZeros.toPlainString.replace('.', 'p') + "g")
+      case (None, JString(dir)) =>
+        Some(dir.stripSuffix("/").split('/').last.replace('.', 'p'))
+          .filter(_.nonEmpty)
+      case _ => None
+    }
   }
 
-  def writeSummary(rawName: String, json: String): Unit = synchronized {
+  /** Print `summary` as one stdout line, then persist it to
+    * `<name>.json` (and its scale-keyed copy) under `target/` and
+    * `bench-artifacts/`. */
+  def writeSummary(rawName: String, summary: JObject): Unit = synchronized {
+    val line = render(summary)
+    println(line)
+    System.out.flush()
     val name = tagged(rawName)
     try {
-      val bytes = (json + "\n").getBytes(StandardCharsets.UTF_8)
+      val bytes = (line + "\n").getBytes(StandardCharsets.UTF_8)
       def put(d: java.nio.file.Path, f: String): Unit =
         Files.write(d.resolve(f), bytes,
           StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
@@ -97,7 +119,7 @@ object BenchOut {
       // is a scale benchmark, so it ALSO persists under its scale
       // (`throughput-last-13p18g.json`, `bench-last-sf0p1.json`):
       // headlines at different scales never overwrite each other.
-      scaleKey(json).foreach { key =>
+      scaleKey(summary).foreach { key =>
         put(dir, s"$name-$key.json"); put(durableDir, s"$name-$key.json")
       }
     } catch { case e: Exception =>

@@ -61,6 +61,19 @@ object HostCanary {
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
 
+  /** `body` between JIT-warmed serial and parallel canaries, for the
+    * pipeline benches: its result plus the artifact fields `canary_pre`,
+    * `canary_post`, `par_canary_pre`, `par_canary_post` and `loadavg`. */
+  def bracket[A](body: => A): (A, Seq[(String, Any)]) = {
+    sec(); parSec()
+    val (cPre, pcPre) = (sec(), parSec())
+    val result = body
+    val (cPost, pcPost) = (sec(), parSec())
+    (result, Seq("canary_pre" -> cPre, "canary_post" -> cPost,
+      "par_canary_pre" -> pcPre, "par_canary_post" -> pcPost,
+      "loadavg" -> loadAvg()))
+  }
+
   /** The box a clean canary band belongs to, as a file-name-safe key:
     * logical cores, max heap rounded to whole GiB, and the CPU model
     * slugged (`4c-3g-intel-xeon-platinum-8375c-cpu-2-90ghz`). The canary's

@@ -89,14 +89,12 @@ object Sessions {
     spark
   }
 
-  /** The session decisions an artifact records, as JSON object fields:
-    * the effective shuffle partitions and scan split size, and
-    * `SPARK_GRAFT_CONF` (quotes and backslashes dropped). */
-  def decisionsJson(spark: SparkSession): String = {
-    val maxPart = JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    val extra = confExtra.replace("\\", "").replace("\"", "")
-    s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
-      s""""max_part_bytes":$maxPart,"conf_extra":"$extra""""
-  }
+  /** The session decisions an artifact records, as [[BenchOut]] fields:
+    * the effective shuffle partitions and scan split size, and `extra`
+    * (`SPARK_GRAFT_CONF` unless given) verbatim. */
+  def decisions(spark: SparkSession, extra: String = confExtra): Seq[(String, Any)] =
+    Seq("shuffle_partitions" -> spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      "max_part_bytes" -> JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes")),
+      "conf_extra" -> extra)
 }

@@ -28,7 +28,9 @@ object Stats {
   /** DF/TF/tdsum grouped by `grouping` over long-format token counts
     * `(document_index, wc, token, tf)`. DF counts docs containing the
     * token (long format has one row per (doc, token), so count(*) ==
-    * reference's count over map keys). */
+    * reference's count over map keys). The one spelling of the three
+    * measures: the hashed job, the catalog's term-stats queries and the
+    * streaming term-stats table all aggregate through it. */
   def computeStats(tokenCounts: DataFrame, grouping: Seq[String]): DataFrame =
     tokenCounts
       .groupBy(grouping.map(col): _*)
@@ -81,11 +83,7 @@ object Stats {
 
   private def aggregateHashed(countsHashed: DataFrame, extraGrouping: Seq[String],
       index: DataFrame): DataFrame =
-    countsHashed
-      .groupBy((Seq("h", "tok") ++ extraGrouping).map(col): _*)
-      .agg(count(lit(1)).as("document_frequency"),
-        sum(col("tf")).as("term_frequency"),
-        sum(col("wc")).as("tdsum"))
+    computeStats(countsHashed, Seq("h", "tok") ++ extraGrouping)
       .join(broadcast(index.withColumnRenamed("token", "__vtok")), Seq("h"), "left")
       .select(coalesce(col("tok"), col("__vtok")).as("token") +:
         (extraGrouping.map(col) ++

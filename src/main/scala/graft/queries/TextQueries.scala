@@ -54,11 +54,7 @@ object TextQueries {
     // an optional map-side pre-filter (e.g. a Bloom probe, q78): applied
     // BEFORE the stats shuffle, so non-candidate tokens never leave the
     // scan stage
-    tokenPredicate.fold(perDoc)(perDoc.filter)
-      .groupBy(grp.map(col): _*)
-      .agg(count(lit(1)).as("document_frequency"),
-        sum(col("tf")).as("term_frequency"),
-        sum(col("wc")).as("tdsum"))
+    Stats.computeStats(tokenPredicate.fold(perDoc)(perDoc.filter), grp)
   }
 
   /** Exact phrase lookup by positional-postings intersection — the stored

@@ -493,14 +493,14 @@ object EventStreams {
     * text) docs) — factored out of [[termStatsUpsertBatch]] so the
     * reconciliation helpers recompute with DEFINITIONALLY the same
     * aggregation the incremental merge applies. */
-  def termStatsOf(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"), split(col("text"), " ").as("toks"))
-    .select(col("doc_id"), size(col("toks")).as("wc"),
-      explode(graft.functions.ngram_counts(col("toks"), 1)).as("e"))
-    .select(col("wc"), col("e.token").as("token"), col("e.tf").as("tf"))
-    .groupBy(col("token"))
-    .agg(count(lit(1)).as("document_frequency"),
-      sum(col("tf")).as("term_frequency"), sum(col("wc")).as("tdsum"))
+  def termStatsOf(docs: DataFrame): DataFrame = {
+    val perDoc = docs
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), size(col("toks")).as("wc"),
+        explode(graft.functions.ngram_counts(col("toks"), 1)).as("e"))
+      .select(col("wc"), col("e.token").as("token"), col("e.tf").as("tf"))
+    graft.operators.Stats.computeStats(perDoc, Seq("token"))
+  }
 
   /** Reconciliation DIFF for the additive term-stats table — the
     * actionable half of [[ingestPipelineBatch]]'s warnings: both the

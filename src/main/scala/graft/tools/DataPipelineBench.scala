@@ -34,7 +34,6 @@ object DataPipelineBench {
   private val GroupSize = 5
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // dot-decimal JSON under any host locale
     val targetGB = if (args.length > 0) args(0).toDouble else 2.0
     val workDir  = if (args.length > 1) args(1) else "target/dpbench"
     val cpus     = graft.Sessions.cpus
@@ -50,7 +49,7 @@ object DataPipelineBench {
         "spark.sql.files.maxPartitionBytes" -> graft.Sessions.maxPartitionBytes(targetGB).toString,
         "spark.rdd.compress" -> "true"))
 
-    val tag = f"${targetGB}%.2f".replace('.', 'p')
+    val tag = "%.2f".formatLocal(java.util.Locale.ROOT, targetGB).replace('.', 'p')
     val in  = Paths.get(s"$workDir/in_$tag")
     // The _DONE marker names the duplicate mix the corpus was built with
     // (empty in legacy corpora, which are dense). A corpus of another mix
@@ -77,10 +76,6 @@ object DataPipelineBench {
     val gb = corpus.agg(sum(length(col("text")))).head().getLong(0) / 1e9
 
     val outDir = s"$workDir/out_$tag"
-    graft.HostCanary.sec(); graft.HostCanary.parSec() // JIT-warm
-    val cPre  = graft.HostCanary.sec()
-    val pcPre = graft.HostCanary.parSec()
-    val t0 = System.nanoTime()
     // per-stage laps persist in the artifact (round-13 lesson: the 3x/6x
     // stage table — the round's key scale evidence — lived only in SURVEY
     // prose and stdout)
@@ -94,20 +89,15 @@ object DataPipelineBench {
     // pipeline-last-half*.json). The same lever applies per executor on a
     // cluster.
     val ckptLevel = "MEMORY_AND_DISK_SER" // run's level and the artifact's ckpt_level
-    val counts = run(spark, corpus, benchmark, outDir, Some(planted),
-      lapSink = (s, t) => stageSecs(s) = t,
-      ckptLevel = Some(StorageLevel.fromString(ckptLevel)))
-    val secs   = (System.nanoTime() - t0) / 1e9
-    val cPost  = graft.HostCanary.sec()
-    val pcPost = graft.HostCanary.parSec()
+    val ((counts, secs), canary) = graft.HostCanary.bracket {
+      val t0 = System.nanoTime()
+      val counts = run(spark, corpus, benchmark, outDir, Some(planted),
+        lapSink = (s, t) => stageSecs(s) = t,
+        ckptLevel = Some(StorageLevel.fromString(ckptLevel)))
+      (counts, (System.nanoTime() - t0) / 1e9)
+    }
     val gbPerHr = gb / (secs / 3600.0)
 
-    // canary/par_canary pre/post: host-health context bracketing the run
-    // (dual protocol — serial catches whole-JVM freezes, parallel catches
-    // co-tenant capacity steal) — see graft.HostCanary
-    val countsJson = counts.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-    val stagesJson = stageSecs
-      .map { case (k, v) => f""""$k":$v%.1f""" }.mkString("{", ",", "}")
     // candidate-gate inputs computed BEFORE the summary so the gate values
     // persist in the artifact (a 12x reproducer reads its band from here)
     val cm = counts.toMap
@@ -122,9 +112,12 @@ object DataPipelineBench {
     // threads x few-hundred-MB SER checkpoint blocks the default 8g OOMs
     // at GB scale, so scale runs set it explicitly; record what this run had
     val heapGb = Runtime.getRuntime.maxMemory() / 1e9
-    val summary = f"""{"metric":"pipeline","gb":$gb%.3f,"secs":$secs%.1f,"gb_per_hour":$gbPerHr%.2f,"cores":$cpus,"heap_gb":$heapGb%.1f,${graft.Sessions.decisionsJson(spark)},"ckpt_level":"$ckptLevel","planted":$nPlanted,"canary_pre":$cPre%.3f,"canary_post":$cPost%.3f,"par_canary_pre":$pcPre%.3f,"par_canary_post":$pcPost%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"cand_per_group":$candPerGroup%.2f,"cand_gate_max":$candGateMax%.2f,"stage_secs":$stagesJson,$countsJson}"""
-    println(summary)
-    System.out.flush()
+    val summary = graft.BenchOut.obj(Seq("metric" -> "pipeline", "gb" -> gb,
+      "secs" -> secs, "gb_per_hour" -> gbPerHr, "cores" -> cpus,
+      "heap_gb" -> heapGb) ++ graft.Sessions.decisions(spark) ++ Seq(
+      "ckpt_level" -> ckptLevel, "planted" -> nPlanted) ++ canary ++ Seq(
+      "cand_per_group" -> candPerGroup, "cand_gate_max" -> candGateMax,
+      "stage_secs" -> stageSecs) ++ counts: _*)
     graft.BenchOut.writeSummary("pipeline-last", summary)
 
     // SELF-VALIDATION GATE (round-12 lesson: the buggy generator planted

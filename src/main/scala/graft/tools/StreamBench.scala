@@ -63,7 +63,6 @@ object StreamBench {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val replicas = if (args.length > 0) args(0).toInt else 50
     val files    = if (args.length > 1) args(1).toInt else 32
     val reps     = if (args.length > 2) args(2).toInt else 2
@@ -176,40 +175,40 @@ object StreamBench {
       }
     }
 
-    graft.HostCanary.sec(); graft.HostCanary.parSec() // JIT-warm
-    val cPre = graft.HostCanary.sec()
-    val MftAll = 0 // no option: one batch over all files
+    val (_, canary) = graft.HostCanary.bracket {
+      val MftAll = 0 // no option: one batch over all files
 
-    // stateless floor (provider irrelevant — stated as rocksdb for the row)
-    bench("ingest", Rocks, MftAll,
-      df => df.select(col("event_id"), col("user_id"), col("event_type"),
-        col("value")),
-      OutputMode.Append(), expectRows = nRows)
+      // stateless floor (provider irrelevant — stated as rocksdb for the row)
+      bench("ingest", Rocks, MftAll,
+        df => df.select(col("event_id"), col("user_id"), col("event_type"),
+          col("value")),
+        OutputMode.Append(), expectRows = nRows)
 
-    // watermark tumbling agg: provider A/B at the default decomposition
-    Seq(Hdfs, Rocks).foreach { p =>
-      bench("window_agg", p, MftAll,
-        df => EventStreams.windowedCounts(df, "5 minutes", wm),
-        OutputMode.Update())
+      // watermark tumbling agg: provider A/B at the default decomposition
+      Seq(Hdfs, Rocks).foreach { p =>
+        bench("window_agg", p, MftAll,
+          df => EventStreams.windowedCounts(df, "5 minutes", wm),
+          OutputMode.Update())
+      }
+
+      // watermark dedup: provider A/B, then mft sensitivity on rocksdb
+      def dedup(df: DataFrame): DataFrame =
+        EventStreams.dedupStream(df, "ts", wm, Seq("event_id"))
+      Seq(Hdfs, Rocks).foreach { p =>
+        bench("dedup", p, 8, dedup, OutputMode.Append(), expectRows = nRows)
+      }
+      Seq(1, MftAll).foreach { m =>
+        bench("dedup", Rocks, m, dedup, OutputMode.Append(), expectRows = nRows)
+      }
+
+      // transformWithState stages (RocksDB-only by API contract)
+      bench("tws_distinct", Rocks, MftAll,
+        df => EventStreams.runningDistinctTypes(asEvents(df)).toDF(),
+        OutputMode.Update(), expectRows = nRows)
+      bench("tws_sessions", Rocks, MftAll,
+        df => EventStreams.eventTimeSessions(asEvents(df)).toDF(),
+        OutputMode.Append())
     }
-
-    // watermark dedup: provider A/B, then mft sensitivity on rocksdb
-    def dedup(df: DataFrame): DataFrame =
-      EventStreams.dedupStream(df, "ts", wm, Seq("event_id"))
-    Seq(Hdfs, Rocks).foreach { p =>
-      bench("dedup", p, 8, dedup, OutputMode.Append(), expectRows = nRows)
-    }
-    Seq(1, MftAll).foreach { m =>
-      bench("dedup", Rocks, m, dedup, OutputMode.Append(), expectRows = nRows)
-    }
-
-    // transformWithState stages (RocksDB-only by API contract)
-    bench("tws_distinct", Rocks, MftAll,
-      df => EventStreams.runningDistinctTypes(asEvents(df)).toDF(),
-      OutputMode.Update(), expectRows = nRows)
-    bench("tws_sessions", Rocks, MftAll,
-      df => EventStreams.eventTimeSessions(asEvents(df)).toDF(),
-      OutputMode.Append())
 
     // provider equality witness at fixed decomposition (same batches ⇒
     // same semantics): every (stage, mft) must agree on output across
@@ -220,11 +219,15 @@ object StreamBench {
         s"stage $st mft=$m output differs across providers: $outs")
     }
 
-    val lapsJson = laps.map { case (st, p, m, s, o, sr, sb, c) =>
-      f"""{"stage":"$st","provider":"$p","mft":$m,"secs":$s%.2f,"rows_per_sec":${nRows / s}%.0f,"out_rows":$o,"state_rows":$sr,"state_bytes":$sb,"canary":$c%.3f}"""
-    }.mkString("[", ",", "]")
-    val summary = f"""{"metric":"streambench","rows":$nRows,"files":$files,"replicas":$replicas,"reps":$reps,"cores":${graft.Sessions.cpus},"watermark":"$wm","canary_pre":$cPre%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"laps":$lapsJson}"""
-    println(summary)
+    val lapFields = laps.map { case (st, p, m, s, o, sr, sb, c) =>
+      graft.BenchOut.obj("stage" -> st, "provider" -> p, "mft" -> m,
+        "secs" -> s, "rows_per_sec" -> nRows / s, "out_rows" -> o,
+        "state_rows" -> sr, "state_bytes" -> sb, "canary" -> c)
+    }
+    val summary = graft.BenchOut.obj(Seq("metric" -> "streambench",
+      "rows" -> nRows, "files" -> files, "replicas" -> replicas, "reps" -> reps,
+      "cores" -> graft.Sessions.cpus, "watermark" -> wm) ++ canary ++
+      Seq("laps" -> lapFields): _*)
     graft.BenchOut.writeSummary("streambench", summary)
     spark.stop()
   }

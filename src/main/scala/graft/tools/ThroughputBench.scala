@@ -24,7 +24,6 @@ import graft.sources.CorpusSources
 object ThroughputBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // dot-decimal JSON under any host locale
     val targetGB = if (args.length > 0) args(0).toDouble else 1.0
     val workDir  = if (args.length > 1) args(1) else "target/tpbench"
     val sfDir    = graft.Sessions.sfDir
@@ -34,7 +33,7 @@ object ThroughputBench {
     // parquet scan only
     val spark = graft.Sessions.local("graft-throughput", Some(targetGB))
 
-    val tag = f"${targetGB}%.2f".replace('.', 'p')
+    val tag = "%.2f".formatLocal(java.util.Locale.ROOT, targetGB).replace('.', 'p')
     val in  = Paths.get(s"$workDir/in_$tag")
     if (!Files.exists(in.resolve("_DONE")))
       generate(spark, sfDir, in, targetGB, graft.Sessions.cpus)
@@ -51,31 +50,24 @@ object ThroughputBench {
       collections  = in.resolve("collections").toString,
       phrases      = in.resolve("phrases").toString)
 
-    graft.HostCanary.sec(); graft.HostCanary.parSec() // JIT-warm
-    val cPre  = graft.HostCanary.sec()
-    val pcPre = graft.HostCanary.parSec()
-    val t0 = System.nanoTime()
     // per-stage laps persist in the artifact (round-13 lesson: stage
     // tables that live only in stderr/prose get lost with the window)
     val stageSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    VspacePipeline.run(spark, cfg, onLap = (s, t) => stageSecs(s) = t)
-    val secs   = (System.nanoTime() - t0) / 1e9
-    val cPost  = graft.HostCanary.sec()
-    val pcPost = graft.HostCanary.parSec()
+    val (secs, canary) = graft.HostCanary.bracket {
+      val t0 = System.nanoTime()
+      VspacePipeline.run(spark, cfg, onLap = (s, t) => stageSecs(s) = t)
+      (System.nanoTime() - t0) / 1e9
+    }
 
     val gb      = corpusBytes / 1e9
     val gbPerHr = gb / (secs / 3600.0)
     // Reference context at the same core count (4 exec x 8 cores): 1 GB
     // ≤6g = 0.15 h => 6.7 GB/h; sustained 100-265 GB => 18-20 GB/h.
-    // canary/par_canary pre/post: host-health context bracketing the run
-    // (serial ~0.3 s / parallel ~0.15 s on a quiet box) — serial catches
-    // whole-JVM freezes, parallel catches co-tenant capacity steal; see
-    // graft.HostCanary and Bench's dual-canary protocol.
-    val stagesJson = stageSecs
-      .map { case (k, v) => f""""$k":$v%.1f""" }.mkString("{", ",", "}")
-    val summary = f"""{"metric":"throughput","gb":$gb%.3f,"secs":$secs%.1f,"gb_per_hour":$gbPerHr%.2f,"cores":${graft.Sessions.cpus},"ngrams":6,${graft.Sessions.decisionsJson(spark)},"canary_pre":$cPre%.3f,"canary_post":$cPost%.3f,"par_canary_pre":$pcPre%.3f,"par_canary_post":$pcPost%.3f,"loadavg":${graft.HostCanary.loadAvg()}%.1f,"stage_secs":$stagesJson,"ref_1gb_gb_per_hour":6.7,"ref_sustained_gb_per_hour":19.5}"""
-    println(summary)
-    System.out.flush()
+    val summary = graft.BenchOut.obj(Seq("metric" -> "throughput", "gb" -> gb,
+      "secs" -> secs, "gb_per_hour" -> gbPerHr, "cores" -> graft.Sessions.cpus,
+      "ngrams" -> 6) ++ graft.Sessions.decisions(spark) ++ canary ++ Seq(
+      "stage_secs" -> stageSecs, "ref_1gb_gb_per_hour" -> 6.7,
+      "ref_sustained_gb_per_hour" -> 19.5): _*)
     graft.BenchOut.writeSummary("throughput-last", summary)
     spark.stop()
   }

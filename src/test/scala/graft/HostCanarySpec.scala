@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The box key a canary band is persisted under. Pure: no canary runs. */
+/** The box key a canary band is persisted under (pure), and the canary
+  * bracket the pipeline benches record around their run. */
 class HostCanarySpec extends AnyFunSuite {
 
   private val GiB = 1L << 30
@@ -30,5 +31,16 @@ class HostCanarySpec extends AnyFunSuite {
       HostCanary.boxKey(4, "Model/with spaces\\and:colons" + "z" * 80, 4 * GiB))
     assert(keys.distinct.size == keys.size)
     keys.foreach(k => assert(k.matches("[a-z0-9][a-z0-9-]*[a-z0-9]"), k))
+  }
+
+  test("the bracket runs its body once and returns the five canary fields in artifact order") {
+    var runs = 0
+    val (result, fields) = HostCanary.bracket { runs += 1; "done" }
+    assert(result == "done" && runs == 1)
+    assert(fields.map(_._1) == Seq("canary_pre", "canary_post",
+      "par_canary_pre", "par_canary_post", "loadavg"))
+    fields.take(4).foreach { case (k, v) =>
+      assert(v.asInstanceOf[Double] > 0, k)
+    }
   }
 }

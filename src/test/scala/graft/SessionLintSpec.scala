@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (plus `VspacePipeline.scala`, the spark-submit entry, which keeps the
   * cluster's master) and only it reads the session env. Every other
   * environment read is pinned, each to its one file. Explicit
-  * GCs stay in the harness mains that quiet the heap between timed reps. */
+  * GCs stay in the harness mains that quiet the heap between timed reps.
+  * JSON text is rendered by `BenchOut` alone, so no main spells an object
+  * literal or pins the JVM locale to get a dot-decimal number. */
 class SessionLintSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(String, String)] = {
@@ -61,5 +63,12 @@ class SessionLintSpec extends AnyFunSuite {
   test("System.gc() appears only in the harness mains, between timed reps") {
     assert(offenders(Set("graft/Bench.scala", "graft/tools/StreamBench.scala"),
       """System\s*\.\s*gc\s*\(""") == Nil)
+  }
+
+  test("run artifacts are rendered only by BenchOut, with no global locale override") {
+    assert(offenders(Set.empty, """Locale\s*\.\s*setDefault""") == Nil)
+    assert(offenders(Set("graft/BenchOut.scala"),
+      """[fs]?"{3}\{"|mkString\s*\(\s*"\{"""") == Nil,
+      "hand-built JSON object literal")
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods
+
 /** The local-session policy as pure functions: the `SPARK_GRAFT_CONF`
   * parser, the corpus-size derivations, and the catalog conf set. */
 class SessionsSpec extends SparkSpec {
@@ -41,8 +44,19 @@ class SessionsSpec extends SparkSpec {
       "spark.rpc.askTimeout" -> "600s"))
   }
 
-  test("decisionsJson records the session's effective partitions and split size") {
-    assert(Sessions.decisionsJson(spark)
-      .startsWith(""""shuffle_partitions":4,"max_part_bytes":134217728,"conf_extra":""""))
+  test("decisions records the session's effective partitions and split size") {
+    assert(Sessions.decisions(spark).map(_._1) ==
+      Seq("shuffle_partitions", "max_part_bytes", "conf_extra"))
+    assert(Sessions.decisions(spark).take(2) ==
+      Seq("shuffle_partitions" -> 4, "max_part_bytes" -> 134217728L))
+  }
+
+  test("a conf_extra holding quotes and backslashes survives rendering verbatim") {
+    val extra = """spark.driver.extraJavaOptions=-Dx="a b";spark.local.dir=C:\tmp\spark"""
+    val line = BenchOut.render(BenchOut.obj(Sessions.decisions(spark, extra): _*))
+    assert(line == """{"shuffle_partitions":4,"max_part_bytes":134217728,""" +
+      """"conf_extra":"spark.driver.extraJavaOptions=-Dx=\"a b\";spark.local.dir=C:\\tmp\\spark"}""")
+    val JObject(fields) = JsonMethods.parse(line)
+    assert(fields.last == ("conf_extra" -> JString(extra)))
   }
 }
